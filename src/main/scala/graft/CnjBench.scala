@@ -1,16 +1,18 @@
 package graft
 
-
 import graft.cnj.{MetasJob, Reader}
 
 /** Like-for-like CNJ pipeline benchmark: the exact workload the
   * reference's published runs time (BASELINE.md, 25.28-81.76 s across
   * four machines at ~0.93 GB) — read the 90-file CSV corpus, compute the
   * Resumo aggregate, write ResumoMetas.csv + Consolidado.csv +
-  * grafico_meta1.png — via the same code path as [[MetasJob.runAll]]:
-  * only the few-dozen-row per-court aggregate is cached (the raw-corpus
-  * InMemoryRelation cost ~10x the one re-scan it saved), the corpus is
-  * read exactly twice, and Consolidado is sharded — the documented S5/S6
+  * grafico_meta1.png — as a step-for-step copy of [[MetasJob.runAll]]
+  * with a timer around each phase: the few-dozen-row per-court aggregate
+  * runs as one job and is collected to a driver-local frame
+  * ([[MetasJob.localSummary]]) that the Resumo sink, the fallback
+  * warning and the chart reuse; the raw corpus is never cached (its
+  * InMemoryRelation cost ~10x the one re-scan it saved), it is read
+  * exactly twice, and Consolidado is sharded — the documented S5/S6
   * divergence: a coalesce(1) of the full corpus would funnel every byte
   * through one task.
   *
@@ -48,59 +50,31 @@ object CnjBench {
       val t0 = System.nanoTime()
       val r = f
       val sec = (System.nanoTime() - t0) / 1e9
-      phases.synchronized { phases(name) = sec } // two sink threads report
+      phases(name) = sec
       println(f"[cnj-bench] $name: $sec%.1f s")
       r
     }
     new java.io.File(outDir).mkdirs()
-    // default mirrors MetasJob.runAll's SEQUENTIAL sinks (the r14 A/B
-    // flipped the default: overlap contends on a saturated box — see
-    // runAll's doc and CNJBENCH_r14.json); the concurrent arm stays
-    // available for A/B measurement of the overlap itself
-    val sequential = !sys.env.get("SPARK_GRAFT_CNJ_CONCURRENT").contains("1")
     val t0 = System.nanoTime()
-    // mirrors MetasJob.runAll step-for-step, with per-phase timing: the
-    // raw corpus is NOT cached (the ~1 GB InMemoryRelation costs ~10x
-    // the one CSV re-scan it saves — measured 63.5 s -> ~12 s for the
-    // resumo phase at the 930 MB corpus); only the few-dozen-row
-    // per-court aggregate is, so the chart phase reads cache, not corpus
     val data = t("plan_read_headers")(Reader.readDir(spark, inDir))
-    val typed = MetasJob.resumoTyped(spark, data).cache()
-    try {
-      def consolidadoSink(): Unit = t("consolidado_sharded_write") {
-        MetasJob.writeCsv(data, s"$outDir/Consolidado.csv", singleFile = false)
-      }
-      def resumoChain(): Unit = {
-        val res = MetasJob.stringlyOutput(typed)
-        t("resumo_agg_join_write") {
-          MetasJob.writeCsv(res, s"$outDir/ResumoMetas.csv")
-        }
-        t("chart_png") {
-          val chart = MetasJob.chartData(res).collect()
-            .map(r => (r.getString(0), r.getDouble(1)))
-          MetasJob.writeChartPng(chart, s"$outDir/grafico_meta1.png")
-        }
-      }
-      if (sequential) {
-        resumoChain()
-        consolidadoSink()
-      } else {
-        // the concurrent phases are wall-clock SPANS that overlap: their
-        // sum exceeds the total by construction — read the total
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val consolidado = Future(consolidadoSink())
-        try resumoChain()
-        finally Await.ready(consolidado, Duration.Inf)
-        Await.result(consolidado, Duration.Inf)
-      }
-    } finally typed.unpersist()
+    val summary = t("resumo_agg_join_collect") {
+      MetasJob.localSummary(MetasJob.resumoTyped(spark, data))
+    }
+    val res = MetasJob.stringlyOutput(summary)
+    t("resumo_write")(MetasJob.writeCsv(res, s"$outDir/ResumoMetas.csv"))
+    t("chart_png") {
+      MetasJob.warnUnmapped(summary)
+      val chart = MetasJob.chartData(res).collect()
+        .map(r => (r.getString(0), r.getDouble(1)))
+      MetasJob.writeChartPng(chart, s"$outDir/grafico_meta1.png")
+    }
+    t("consolidado_sharded_write") {
+      MetasJob.writeCsv(data, s"$outDir/Consolidado.csv", singleFile = false)
+    }
     val total = (System.nanoTime() - t0) / 1e9
     val phaseJson = phases.map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
-    val mode = if (sequential) "sequential" else "concurrent"
     println(
-      f"""{"metric":"cnj_bench_total_sec","value":$total%.2f,"unit":"sec","sinks":"$mode","phases":{$phaseJson},"corpus_bytes":$corpusBytes,"n_files":$nFiles,"loadavg_1m":$load%.2f,"loadavg_5m":$load5%.2f}""")
+      f"""{"metric":"cnj_bench_total_sec","value":$total%.2f,"unit":"sec","phases":{$phaseJson},"corpus_bytes":$corpusBytes,"n_files":$nFiles,"loadavg_1m":$load%.2f,"loadavg_5m":$load5%.2f}""")
     spark.stop()
   }
 }

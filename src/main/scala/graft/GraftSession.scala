@@ -22,7 +22,12 @@ object GraftSession {
     *    df-aggregation at 5M docs dropped ~40% wall moving 32 -> 256+).
     *    Small shuffles still coalesce to ~core-count tasks at runtime
     *    (parallelismFirst is Spark's default), so fixture-scale plans are
-    *    unaffected;
+    *    unaffected. That does NOT hold for a `.cache()`d plan while
+    *    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is
+    *    false (the Spark 4.1 default): AQE may not coalesce a plan built
+    *    for caching, so a cached aggregate keeps all 512 partitions and
+    *    every action over it schedules 512 tasks. Collect a small result
+    *    to the driver instead (see `graft.cnj.MetasJob.localSummary`);
     *  - graft SQL functions registered via the session extension;
     *  - UTC timestamps for engine-portable semantics.
     */

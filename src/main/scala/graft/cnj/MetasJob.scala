@@ -129,8 +129,9 @@ object MetasJob {
     * Accepts any frame carrying (ramo_justica, sigla_tribunal) — raw
     * corpus rows or the per-court aggregate give identical output (the
     * groupBy/collect_set only sees distinct pairs, and those pairs ARE
-    * the aggregate's keys), so [[runAll]] feeds it the cached per-court
-    * summary instead of re-scanning the corpus. */
+    * the aggregate's keys), so [[runAll]] feeds it the driver-local
+    * per-court summary ([[localSummary]]) instead of re-scanning the
+    * corpus. */
   def unmappedBranches(data: DataFrame): DataFrame = {
     val mapped = Factors.byBranch.keys.toSeq
     data
@@ -232,68 +233,56 @@ object MetasJob {
     ImageIO.write(img, "png", new java.io.File(path))
   }
 
+  /** Materializes the per-court summary on the driver: one AQE-coalesced
+    * job runs the aggregate, and its rows come back as a driver-local
+    * frame (a LocalRelation) for the sinks to reuse. Safe to collect:
+    * the row count is bounded by the distinct (sigla_tribunal,
+    * ramo_justica) keys, whatever the corpus size. Preferred over
+    * `.cache()`: while `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+    * is false (the Spark 4.1 default) AQE may not coalesce a plan built
+    * for caching, so a cached aggregate keeps the full
+    * `coalescePartitions.initialPartitionNum` width (512 under
+    * [[graft.GraftSession]]) and every later action and sort pass runs
+    * that many empty tasks. */
+  def localSummary(typed: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    typed.sparkSession.createDataFrame(typed.collect().toSeq.asJava, typed.schema)
+  }
+
+  /** Mirrors the reference's once-per-branch fallback warning
+    * (Versao_Np.py:29,168-169) off a per-court summary. */
+  def warnUnmapped(summary: DataFrame): Unit = {
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    unmappedBranches(summary).collect().foreach { r =>
+      val siglas = r.getSeq[String](1).mkString(", ")
+      log.warn(s"branch '${r.getString(0)}' (courts: $siglas) has no specific " +
+        "factors; falling back to Justiça Estadual")
+    }
+  }
+
   /** Full run: ResumoMetas.csv + Consolidado.csv + grafico_meta1.png.
     *
-    * The two sinks are INDEPENDENT plans over the same corpus scan;
-    * `concurrentSinks = true` submits them from two threads and Spark's
-    * scheduler interleaves their stages — ordinary multi-job scheduling
-    * on any cluster, useful when each job leaves cores idle in serial
-    * sections (driver planning, broadcast build, coalesce(1) summary
-    * write, driver-side collects) the other's tasks can fill. Outputs
-    * are byte-identical either way (golden-locked). SEQUENTIAL is the
-    * default: the r14 A/B re-measure (CNJBENCH_r14.json, 7 gated
-    * fresh-JVM runs) had sequential both faster at the best (37.0 vs
-    * 40.1 s) and far tighter (37.0-37.9 vs 40.1-53.0 s) — on a
-    * saturated local[32] box the overlap CONTENDS (the resumo phase
-    * ran 1.8-2.3x longer under overlap), and the r13 continuation's
-    * -4.4% concurrent win did not reproduce. Opt in on clusters with
-    * genuinely idle resources. */
-  def runAll(spark: SparkSession, inDir: String, outDir: String,
-      concurrentSinks: Boolean = false): Unit = {
+    * The corpus is read exactly twice: once by the aggregate, whose
+    * few-dozen-row result [[localSummary]] brings to the driver, and
+    * once by the Consolidado write. ResumoMetas, the fallback warning
+    * and the chart all run off that driver-local summary. The raw corpus
+    * is NOT cached: building the InMemoryRelation for ~1 GB of expanded
+    * rows costs ~10x the one extra CSV scan it would save (measured at
+    * the 930 MB corpus). The sinks run one after the other: overlapping
+    * them from two threads contended for the same cores
+    * (CNJBENCH_r14.json), and the summary sinks are sub-second. */
+  def runAll(spark: SparkSession, inDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
-    // The raw corpus is NOT cached: building the InMemoryRelation for
-    // ~1 GB of expanded rows costs ~10x the one extra CSV scan it would
-    // save (measured at the 930 MB corpus). What IS cached is the
-    // per-court aggregate — a few dozen rows — so the warning channel
-    // and the chart reuse it instead of re-running scan+agg. Net: the
-    // corpus is read exactly twice (aggregate, Consolidado write).
     val data = Reader.readDir(spark, inDir)
-    val typed = resumoTyped(spark, data).cache()
-    try {
-      // sharded: a coalesce(1) write of the full corpus funnels every byte
-      // through one task (measured 187 s vs 19 s for ~1 GB); the
-      // single-file contract is kept only for the tiny summary
-      def consolidadoSink(): Unit =
-        writeCsv(data, s"$outDir/Consolidado.csv", singleFile = false)
-      def resumoChain(): Unit = {
-        val res = stringlyOutput(typed)
-        writeCsv(res, s"$outDir/ResumoMetas.csv")
-        // mirror the reference's once-per-branch fallback warning
-        // (Versao_Np.py:29,168-169) — off the cached per-court summary
-        val log = org.slf4j.LoggerFactory.getLogger(getClass)
-        unmappedBranches(typed).collect().foreach { r =>
-          val siglas = r.getSeq[String](1).mkString(", ")
-          log.warn(s"branch '${r.getString(0)}' (courts: $siglas) has no specific " +
-            "factors; falling back to Justiça Estadual")
-        }
-        val chart = chartData(res).collect().map(r => (r.getString(0), r.getDouble(1)))
-        writeChartPng(chart, s"$outDir/grafico_meta1.png")
-      }
-      if (concurrentSinks) {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val consolidado = Future(consolidadoSink())
-        // a resumo failure must still WAIT for the in-flight consolidado
-        // job (never unwind under a running detached write); a consolidado
-        // failure then rethrows on the caller thread
-        try resumoChain()
-        finally Await.ready(consolidado, Duration.Inf)
-        Await.result(consolidado, Duration.Inf)
-      } else {
-        resumoChain()
-        consolidadoSink()
-      }
-    } finally typed.unpersist()
+    val summary = localSummary(resumoTyped(spark, data))
+    val res = stringlyOutput(summary)
+    writeCsv(res, s"$outDir/ResumoMetas.csv")
+    warnUnmapped(summary)
+    val chart = chartData(res).collect().map(r => (r.getString(0), r.getDouble(1)))
+    writeChartPng(chart, s"$outDir/grafico_meta1.png")
+    // sharded: a coalesce(1) write of the full corpus funnels every byte
+    // through one task (measured 187 s vs 19 s for ~1 GB); the
+    // single-file contract is kept only for the tiny summary
+    writeCsv(data, s"$outDir/Consolidado.csv", singleFile = false)
   }
 }

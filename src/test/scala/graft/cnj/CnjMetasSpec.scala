@@ -94,34 +94,70 @@ class CnjMetasSpec extends SparkTestBase {
     assert(!chart.map(_.getString(0)).contains("TJBB"))
   }
 
-  test("runAll with concurrent sinks writes the same three outputs as sequential") {
-    val tmp = System.getProperty("java.io.tmpdir")
-    def run(tag: String, concurrent: Boolean): String = {
-      val out = s"$tmp/graft-cnj-runall-$tag"
-      val p = new org.apache.hadoop.fs.Path(out)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      MetasJob.runAll(spark, resourcePath("cnj/dados"), out,
-        concurrentSinks = concurrent)
-      out
-    }
-    val conc = run("conc", concurrent = true)
-    val seqn = run("seq", concurrent = false)
-    def resumoLines(dir: String): Seq[String] = {
-      val part = new java.io.File(s"$dir/ResumoMetas.csv").listFiles()
-        .find(_.getName.endsWith(".csv")).get
-      val src = scala.io.Source.fromFile(part, "UTF-8")
+  private def freshOut(tag: String): String = {
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft-cnj-runall-$tag"
+    val p = new org.apache.hadoop.fs.Path(out)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+    out
+  }
+
+  test("runAll writes the golden ResumoMetas, a non-empty Consolidado and the chart") {
+    val out = freshOut("golden")
+    MetasJob.runAll(spark, resourcePath("cnj/dados"), out)
+    val part = new java.io.File(s"$out/ResumoMetas.csv").listFiles()
+      .filter(_.getName.endsWith(".csv"))
+    assert(part.length == 1, "single-file ResumoMetas contract")
+    def lines(f: java.io.File): Seq[String] = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().toIndexedSeq finally src.close()
     }
-    assert(resumoLines(conc) === resumoLines(seqn))
-    def consolidadoRows(dir: String): Set[String] =
-      spark.read.option("sep", ";").option("header", "true")
-        .csv(s"$dir/Consolidado.csv")
-        .collect().map(_.mkString("|")).toSet
-    assert(consolidadoRows(conc) === consolidadoRows(seqn))
-    assert(consolidadoRows(conc).nonEmpty)
-    Seq(conc, seqn).foreach { d =>
-      assert(new java.io.File(s"$d/grafico_meta1.png").length() > 0)
+    assert(lines(part(0)) === lines(new java.io.File(resourcePath("cnj/golden_resumo.csv"))))
+    val consolidado = spark.read.option("sep", ";").option("header", "true")
+      .csv(s"$out/Consolidado.csv")
+    assert(consolidado.count() > 0)
+    assert(new java.io.File(s"$out/grafico_meta1.png").length() > 0)
+  }
+
+  test("runAll under the shipped AQE width schedules fewer than 512 tasks") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler._
+    // GraftSession's initial AQE width: a plan AQE may not coalesce (a
+    // cached one) pays it as tasks in every stage that reads it
+    val confs = Seq("spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "512")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val marker = "graft.test.taskcount.marker"
+    val tasks = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(marker) != null)) markerJob = j.jobId
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (markerJob < 0) tasks.incrementAndGet()
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (j.jobId == markerJob) drained.countDown()
     }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      MetasJob.runAll(spark, resourcePath("cnj/dados"), freshOut("tasks"))
+      // the listener bus is asynchronous but ordered: once the marker
+      // job's end arrives, every task of runAll has been counted
+      spark.sparkContext.setLocalProperty(marker, "1")
+      try spark.sparkContext.parallelize(Seq(0), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    assert(tasks.get() > 0)
+    assert(tasks.get() < 512, s"runAll scheduled ${tasks.get()} tasks")
   }
 }
