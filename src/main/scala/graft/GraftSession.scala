@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Opinionated session factory: the configuration this library is
   * designed against. On a cluster, master/partitions come from
-  * spark-submit; locally the defaults match the local[32] harness.
+  * spark-submit; locally the defaults size to the host's cores.
   */
 object GraftSession {
 
@@ -67,8 +67,8 @@ object GraftSession {
     * and picked up new GraftSession knobs only by luck) — plus the env
     * overrides the tools use to isolate a config knob from jitter in an
     * A/B run:
-    *  - SPARK_GRAFT_CPUS: local[] core count (default 32, the harness
-    *    box);
+    *  - SPARK_GRAFT_CPUS: local[] core count (default: the host's
+    *    available processors, as in [[builder]]);
     *  - SPARK_GRAFT_SHUFFLE_PARTITIONS: non-adaptive shuffle width
     *    (default = cpus);
     *  - SPARK_GRAFT_INITIAL_PARTITIONS / SPARK_GRAFT_BROADCAST_THRESHOLD:
@@ -76,7 +76,8 @@ object GraftSession {
     * The UI is off: a measurement tool should not pay (or time) the UI
     * listener path. */
   def harnessBuilder(): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     builder(master = s"local[$cpus]", shufflePartitions = parts.toInt)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,6 +62,25 @@ import graft.sources.ScanPruning
   * expressed in plain parquet); a plan overlapping TWO compacts loses
   * its files and must re-run. See [[compact]]'s crash-state and
   * retention notes.
+  *
+  * ONE SNAPSHOT PER VERB: every verb reads the on-disk state once — a
+  * [[Snapshot]] lists the store root a single time and classifies each
+  * child (generations, deltas, manifest, lease, horizon) — and runs
+  * every step against it. Writers load it AFTER taking the lease and
+  * derive their post-purge and post-mark views in memory; [[maintain]]
+  * decides on one snapshot and the fold it triggers loads its own under
+  * the lease. The loader probes markers in the REVERSE of the writers'
+  * commit order (the probe-order invariant): delta `_folded` markers
+  * newest-first, then the `_SUCCESS` of minor folds and generations.
+  * A fold committing while the probes run is therefore seen either
+  * before its commit (old base, every delta live) or after it with a
+  * NEWEST suffix of its deltas live — both resolve to the same rows
+  * ([[compact]]'s crash states 3 and 4) — never as the old base with
+  * its deltas already retired. One window stays open, next to the
+  * two-compact limit above: a fold that creates, commits AND marks its
+  * target entirely between the listing and the probes retires deltas
+  * whose target the listing never saw, so that one read misses the
+  * folded deltas and must re-run.
   */
 object CorpusStore {
 
@@ -190,13 +209,10 @@ object CorpusStore {
     * a LIVE writer's lease reintroduces exactly the double-writer
     * corruption the lease exists to prevent. Returns whether a lease
     * file was removed. */
-  def breakLock(spark: SparkSession, dir: String): Boolean = {
-    val d = fs(spark, dir)
-    val p = new Path(dir, LockFile)
-    d.exists(p) && d.delete(p, false)
-  }
+  def breakLock(spark: SparkSession, dir: String): Boolean =
+    fs(spark, dir).delete(new Path(dir, LockFile), false)
 
-  // ---- fold horizon -------------------------------------------------
+  // ---- on-disk layout -----------------------------------------------
 
   /** Store-root file recording the newest FOLDED seq (major or minor
     * compaction) — the replay fence: an append or DML at a seq at or
@@ -206,63 +222,19 @@ object CorpusStore {
     * rejects it loudly. Monotonic; absent on a never-compacted store. */
   private val HorizonFile = "_horizon"
 
-  /** The `_horizon` file's recorded seq, -1 when absent or torn. */
-  private def recordedHorizon(spark: SparkSession, dir: String): Long = {
-    val d = fs(spark, dir)
-    val p = new Path(dir, HorizonFile)
-    if (!d.exists(p)) -1L
-    else try {
-      val in = d.open(p)
-      try {
-        val buf = new Array[Byte](32) // a decimal Long is <= 20 bytes
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong
-      } finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => -1L } // torn write
-  }
-
-  /** The newest folded seq: the `_horizon` file when present and
-    * parseable, else the max seq among still-on-disk retired delta dirs
-    * (pre-horizon stores / a crash between marking and the horizon
-    * write), else -1 (nothing folded — every seq >= 0 is appendable). */
-  private def foldHorizon(spark: SparkSession, dir: String): Long = {
-    val d = fs(spark, dir)
-    def foldedMax: Long =
-      if (!d.exists(new Path(dir))) -1L
-      else d.listStatus(new Path(dir)).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta_")
-          && isFolded(d, st.getPath))
-        .map(st => deltaSeqOf(st.getPath.toString)).maxOption.getOrElse(-1L)
-    math.max(recordedHorizon(spark, dir), foldedMax)
-  }
-
-  /** Advance the horizon to `seq` (never backwards — a re-run compact
-    * must not lower the fence). Monotonic against the RECORDED value
-    * only: comparing against [[foldHorizon]] would see the just-marked
-    * dirs' fallback already AT `seq` and skip the write — leaving the
-    * fence to live in the retired dirs alone, which the next
-    * [[vacuum]]/compact purges, silently dropping the fence to -1 and
-    * reopening every folded seq to replay (the bug a fence-after-vacuum
-    * spec caught). Torn writes parse as absent and fall back to the
-    * folded-dir listing until the next fold rewrites the file. */
-  private def writeHorizon(spark: SparkSession, dir: String, seq: Long): Unit = {
-    val d = fs(spark, dir)
-    if (seq > recordedHorizon(spark, dir)) {
-      val out = d.create(new Path(dir, HorizonFile), true)
-      try out.write(seq.toString.getBytes("UTF-8")) finally out.close()
-    }
-  }
-
   /** Marker file a [[compact]] drops inside each delta it folded: the
     * delta's content now lives in the new base generation, so every NEW
     * plan skips the dir, while its FILES stay on disk until the next
     * compact for the benefit of plans that listed them earlier (the
     * snapshot grace window). Underscore-prefixed, so parquet readers and
-    * the [[changesStream]] file source ignore the marker itself. */
+    * the [[changesStream]] file source ignore the marker itself. Its
+    * content is the RETIRING generation, so retention-aware [[vacuum]]
+    * can age folded deltas by cycle. */
   private val FoldedMarker = "_folded"
 
-  private def isFolded(d: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
-    d.exists(new Path(p, FoldedMarker))
+  /** A Spark write's commit marker: the commit point of a base
+    * generation and of a minor fold. */
+  private val Committed = "_SUCCESS"
 
   /** Suffix of a MINOR-compaction delta dir (`delta_<seq>.m`): the
     * level-0 → level-1 fold of [[compactDeltas]] — many small live
@@ -272,59 +244,175 @@ object CorpusStore {
     * and string-sorting to the same seq position. */
   private val MinorSuffix = ".m"
 
-  private def isMinorName(name: String): Boolean = name.endsWith(MinorSuffix)
-
-  /** A minor-fold dir is reader-visible only once its write COMMITTED
-    * (`_SUCCESS`): unlike a plain append — whose torn write is covered
-    * by the caller's same-seq replay contract — a crashed fold has no
-    * replaying writer, so the commit marker is the liveness gate and
-    * uncommitted fold debris is invisible until purged. */
-  private def minorCommitted(d: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
-    !isMinorName(p.getName) || d.exists(new Path(p, "_SUCCESS"))
-
-  /** Live (unfolded) delta dirs — what every read resolves against. */
-  private def deltaPaths(spark: SparkSession, dir: String): Seq[String] = {
-    val d = fs(spark, dir)
-    if (!d.exists(new Path(dir))) Seq.empty
-    else d.listStatus(new Path(dir)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta_")
-        && !isFolded(d, st.getPath) && minorCommitted(d, st.getPath))
-      .map(_.getPath.toString).sorted
-  }
-
-  private def manifestPath(dir: String): String = s"$dir/manifest"
-
-  private def hasManifest(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new Path(manifestPath(dir)))
-
   /** Compacted base generations live in `base_gen_<n>` dirs; [[init]]'s
     * original snapshot is generation 0 at `base`. */
   private val GenPrefix = "base_gen_"
 
-  /** COMPLETE base generations (their Spark write committed — `_SUCCESS`
-    * present), newest last. An in-flight or crashed fold attempt has no
-    * `_SUCCESS` and is invisible here. */
-  private def genDirs(spark: SparkSession, dir: String): Seq[(Long, String)] = {
-    val d = fs(spark, dir)
-    if (!d.exists(new Path(dir))) Seq.empty
-    else d.listStatus(new Path(dir)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(GenPrefix)
-        && d.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(st => (st.getPath.getName.stripPrefix(GenPrefix).toLong,
-        st.getPath.toString))
-      .sortBy(_._1)
+  private val ManifestDir = "manifest"
+
+  private def deltaDirOf(dir: String, seq: Long): String =
+    f"$dir/delta_$seq%019d"
+
+  /** A small decimal state file's value (`_horizon`, `_folded`); None
+    * when absent, empty (pre-retention markers) or torn. */
+  private def readDecimal(d: FileSystem, p: Path): Option[Long] =
+    try {
+      val in = d.open(p)
+      try {
+        val buf = new Array[Byte](32) // a decimal Long is <= 20 bytes
+        val n = in.read(buf)
+        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
+      } finally in.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def writeDecimal(d: FileSystem, p: Path, v: Long): Unit = {
+    val out = d.create(p, true)
+    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The store's current base: the newest COMPLETE generation, else the
-    * gen-0 `base` [[init]] wrote. The `_SUCCESS` marker is the commit
-    * point — a fold that died mid-write never becomes current, and the
-    * previous generation keeps serving reads. */
-  private def currentBase(spark: SparkSession, dir: String): (Long, String) =
-    genDirs(spark, dir).lastOption.getOrElse {
-      require(fs(spark, dir).exists(new Path(s"$dir/base")),
-        s"no base snapshot in $dir: init the store first")
-      (0L, s"$dir/base")
+  /** One base generation dir (gen-0 `base` or `base_gen_<n>`).
+    * `committedAt` is its `_SUCCESS` mtime, None while the write has not
+    * committed; gen-0 `base` counts as committed at its dir mtime. */
+  private[operators] final case class GenDir(num: Long, path: String,
+      committedAt: Option[Long]) {
+    def name: String = new Path(path).getName
+  }
+
+  /** One `delta_<seq>[.m]` dir. `foldedAt` is its `_folded` marker's
+    * mtime (None while unfolded); `successAt` the `_SUCCESS` mtime of a
+    * MINOR fold (plain deltas are not probed at load: a torn append is
+    * covered by the caller's same-seq replay contract, while a crashed
+    * fold has no replaying writer, so its commit marker gates
+    * liveness). `mtime` is the listed dir mtime. */
+  private[operators] final case class DeltaDir(seq: Long, path: String,
+      minor: Boolean, foldedAt: Option[Long], successAt: Option[Long],
+      mtime: Long) {
+    def name: String = new Path(path).getName
+    def committed: Boolean = !minor || successAt.nonEmpty
+    def live: Boolean = foldedAt.isEmpty && committed
+  }
+
+  /** The store's on-disk state as ONE verb sees it: the root listed once,
+    * every child classified once (generations and deltas ascending by
+    * name; manifest, lease and horizon presence). Every rule about the
+    * layout lives here; the verbs only read these entries. Writers derive
+    * their post-purge ([[without]]) and post-mark ([[retire]]) views in
+    * memory instead of listing again. */
+  private[operators] final case class Snapshot(dir: String, fs: FileSystem,
+      gens: Seq[GenDir], deltas: Seq[DeltaDir], hasManifest: Boolean,
+      hasLease: Boolean, hasHorizon: Boolean) {
+
+    /** The current base: the newest COMMITTED generation, else the gen-0
+      * `base` [[init]] wrote. The `_SUCCESS` marker is the commit point —
+      * a fold that died mid-write never becomes current, and the
+      * previous generation keeps serving reads. */
+    lazy val base: GenDir = {
+      val committed = gens.filter(_.committedAt.nonEmpty)
+      require(committed.nonEmpty, s"no base snapshot in $dir: init the store first")
+      committed.last
     }
+
+    /** Live (unfolded, committed) deltas, ascending — what every read
+      * resolves against. */
+    def live: Seq[DeltaDir] = deltas.filter(_.live)
+
+    def liveAt(asOfSeq: Long): Seq[String] =
+      live.filter(_.seq <= asOfSeq).map(_.path)
+
+    def manifest: String = s"$dir/$ManifestDir"
+
+    /** The `_horizon` file's recorded seq, -1 when absent or torn. */
+    lazy val recordedHorizon: Long =
+      if (hasHorizon) readDecimal(fs, new Path(dir, HorizonFile)).getOrElse(-1L)
+      else -1L
+
+    /** The newest folded seq: the recorded horizon, or the max seq among
+      * still-on-disk retired delta dirs when larger (pre-horizon stores /
+      * a crash between marking and the horizon write), else -1 (nothing
+      * folded — every seq >= 0 is appendable). */
+    def horizon: Long = math.max(recordedHorizon,
+      deltas.filter(_.foldedAt.nonEmpty).map(_.seq).maxOption.getOrElse(-1L))
+
+    /** The generation whose creation retired a folded delta; markers from
+      * before the retention feature are empty and age as generation 0
+      * (always purgeable — the pre-feature behavior). */
+    def foldedGen(x: DeltaDir): Long =
+      readDecimal(fs, new Path(x.path, FoldedMarker)).getOrElse(0L)
+
+    /** A delta's commit instant: the mtime of the `_SUCCESS` its write
+      * dropped last (the dir's own mtime as fallback — markers touch the
+      * dir, never the commit file). */
+    def commitMs(x: DeltaDir): Long =
+      x.successAt.orElse(Snapshot.stamp(fs, new Path(x.path), Committed))
+        .getOrElse(x.mtime)
+
+    def without(purged: Set[String]): Snapshot =
+      copy(gens = gens.filterNot(g => purged(g.path)),
+        deltas = deltas.filterNot(x => purged(x.path)))
+
+    /** Mark `xs` folded by generation `gen` (in the given — ascending —
+      * order, see [[compact]]'s crash state 4) and return the post-mark
+      * view. */
+    def retire(xs: Seq[DeltaDir], gen: Long): Snapshot = {
+      xs.foreach(x => writeDecimal(fs, new Path(x.path, FoldedMarker), gen))
+      val (marked, now) = (xs.map(_.path).toSet, Some(System.currentTimeMillis()))
+      copy(deltas = deltas.map(x => if (marked(x.path)) x.copy(foldedAt = now) else x))
+    }
+  }
+
+  private[operators] object Snapshot {
+    /** A marker's mtime, None when absent. */
+    def stamp(d: FileSystem, p: Path, marker: String): Option[Long] =
+      try Some(d.getFileStatus(new Path(p, marker)).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+
+    /** List `dir` once and probe its markers in the REVERSE of the
+      * writers' commit order: delta `_folded` markers newest-first, then
+      * the `_SUCCESS` of minor folds and generations (see the object
+      * doc's probe-order invariant). */
+    def load(d: FileSystem, dir: String): Snapshot = {
+      val listed =
+        try d.listStatus(new Path(dir)).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      def dirs(p: String => Boolean) = listed
+        .filter(st => st.isDirectory && p(st.getPath.getName))
+        .sortBy(_.getPath.getName)
+      val deltaSts = dirs(_.startsWith("delta_"))
+      val folded = deltaSts.reverse.map(st => stamp(d, st.getPath, FoldedMarker)).reverse
+      val deltas = deltaSts.zip(folded).map { case (st, f) =>
+        val n = st.getPath.getName.stripPrefix("delta_")
+        val minor = n.endsWith(MinorSuffix)
+        DeltaDir(n.stripSuffix(MinorSuffix).toLong, st.getPath.toString, minor, f,
+          if (minor) stamp(d, st.getPath, Committed) else None,
+          st.getModificationTime)
+      }
+      val gens = dirs(n => n == "base" || n.startsWith(GenPrefix)).map { st =>
+        val n = st.getPath.getName
+        if (n == "base") GenDir(0L, s"$dir/base", Some(st.getModificationTime))
+        else GenDir(n.stripPrefix(GenPrefix).toLong, st.getPath.toString,
+          stamp(d, st.getPath, Committed))
+      }
+      def has(n: String) = listed.exists(_.getPath.getName == n)
+      Snapshot(dir, d, gens, deltas, has(ManifestDir), has(LockFile),
+        has(HorizonFile))
+    }
+  }
+
+  private def snapshot(spark: SparkSession, dir: String): Snapshot =
+    Snapshot.load(fs(spark, dir), dir)
+
+  /** Advance the horizon to `seq` (never backwards — a re-run compact
+    * must not lower the fence). Monotonic against the RECORDED value
+    * only: comparing against [[Snapshot.horizon]] would see the
+    * just-marked dirs' fallback already AT `seq` and skip the write —
+    * leaving the fence to live in the retired dirs alone, which the next
+    * [[vacuum]]/compact purges, silently dropping the fence to -1 and
+    * reopening every folded seq to replay (the bug a fence-after-vacuum
+    * spec caught). Torn writes parse as absent and fall back to the
+    * folded-dir listing until the next fold rewrites the file. */
+  private def writeHorizon(s: Snapshot, seq: Long): Unit =
+    if (seq > s.recordedHorizon)
+      writeDecimal(s.fs, new Path(s.dir, HorizonFile), seq)
 
   /** Create/replace the base snapshot (generation 0) and drop any
     * existing deltas, folded markers, and older generations.
@@ -338,19 +426,16 @@ object CorpusStore {
       bloomCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     withWriterLock(spark, dir) {
-      val d = fs(spark, dir)
+      val s = snapshot(spark, dir)
       df.write.mode(SaveMode.Overwrite).parquet(s"$dir/base")
-      if (d.exists(new Path(dir)))
-        d.listStatus(new Path(dir)).toSeq.foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("delta_") || n.startsWith(GenPrefix))
-            require(d.delete(st.getPath, true), s"init: could not clear ${st.getPath}")
-        }
-      d.delete(new Path(dir, HorizonFile), false) // a fresh store has no fold fence
+      (s.deltas.map(_.path) ++ s.gens.filter(_.name != "base").map(_.path))
+        .foreach(p => require(s.fs.delete(new Path(p), true), s"init: could not clear $p"))
+      // a fresh store has no fold fence
+      if (s.hasHorizon) s.fs.delete(new Path(dir, HorizonFile), false)
       if (statsCols.nonEmpty || bloomCols.nonEmpty)
-        ScanPruning.writeManifest(spark, s"$dir/base", manifestPath(dir),
+        ScanPruning.writeManifest(spark, s"$dir/base", s.manifest,
           statsCols, bloomCols)
-      else d.delete(new Path(manifestPath(dir)), true)
+      else if (s.hasManifest) s.fs.delete(new Path(s.manifest), true)
     }
   }
 
@@ -365,7 +450,7 @@ object CorpusStore {
   def append(spark: SparkSession, dir: String, seq: Long, key: String,
       upserts: DataFrame, deleteKeys: Option[DataFrame] = None): Unit =
     withWriterLock(spark, dir) {
-      doAppend(spark, dir, seq, key, upserts, deleteKeys)
+      doAppend(spark, snapshot(spark, dir), seq, key, upserts, deleteKeys)
     }
 
   /** [[append]] without the lease (callers already hold it). The fold
@@ -376,7 +461,7 @@ object CorpusStore {
     * hits this; advance the consumer's checkpoint or re-init the store —
     * compaction past an in-flight writer's uncommitted batch is the
     * operational error, and this guard is where it surfaces). */
-  private def doAppend(spark: SparkSession, dir: String, seq: Long, key: String,
+  private def doAppend(spark: SparkSession, s: Snapshot, seq: Long, key: String,
       upserts: DataFrame, deleteKeys: Option[DataFrame] = None): Unit = {
     require(seq >= 0, s"seq must be >= 0, got $seq")
     // fail at the WRITE, not two verbs later: a keyless batch would land
@@ -393,7 +478,7 @@ object CorpusStore {
       s"append batch has no '$key' column (found: " +
         s"${upserts.columns.mkString(", ")}) — every upsert row must carry " +
         "the store's key")
-    val horizon = foldHorizon(spark, dir)
+    val horizon = s.horizon
     require(seq > horizon,
       s"append at seq $seq is at or below the fold horizon $horizon: that " +
         "delta was retired by a compaction and its files may be held by " +
@@ -405,33 +490,43 @@ object CorpusStore {
         allowMissingColumns = true)
       case None => up
     }
-    val deltaDir = deltaDirOf(dir, seq)
+    val deltaDir = deltaDirOf(s.dir, seq)
     all.withColumn(SeqCol, lit(seq))
       .write.mode(SaveMode.Overwrite).parquet(deltaDir)
-    if (hasManifest(spark, dir))
-      ScanPruning.appendManifest(spark, manifestPath(dir), deltaDir)
+    if (s.hasManifest) ScanPruning.appendManifest(spark, s.manifest, deltaDir)
   }
 
-  /** Last-writer-wins resolution of a delta union over a base frame —
-    * shared by [[read]]/[[readAt]]/[[prunedRead]]/[[lookup]]. The base
+  /** The newest row per key across delta rows. Secondary tie-break on
+    * __op: within one seq, 'd' sorts before 'u', so a key upserted AND
+    * tombstoned in the same append deterministically resolves to the
+    * tombstone (not whichever row the shuffle saw first). */
+  private def latestPerKey(du: DataFrame, key: String): DataFrame =
+    du.withColumn("__rn", row_number().over(
+        Window.partitionBy(col(key)).orderBy(col(SeqCol).desc, col(OpCol).asc)))
+      .filter(col("__rn") === 1).drop("__rn")
+
+  /** Last-writer-wins resolution of the delta dirs `deltas` over a base
+    * frame (the bare base when there are none) — shared by
+    * [[read]]/[[readAt]]/[[prunedRead]]/[[lookup]]/[[compact]]. The base
     * never shuffles while the delta mass is within `maxBroadcastKeys`
-    * (footer-counted preflight — `deltaRows`, the caller's driver-side
+    * (footer-counted preflight — a driver-side
     * [[graft.sources.ParquetMeta]] read over the delta dirs, the same
     * number a count-star job would return without the job; total delta
     * rows bounds the distinct key count from above); past the bound the
     * resolution degrades to a plain shuffled anti-join with identical
     * output instead of an unbounded broadcast. */
-  private def resolve(base: DataFrame, du: DataFrame, key: String,
-      deltaRows: Long, maxBroadcastKeys: Long,
-      evolveSchema: Boolean = false): DataFrame = {
-    // secondary tie-break on __op: within one seq, 'd' sorts before 'u',
-    // so a key upserted AND tombstoned in the same append deterministically
-    // resolves to the tombstone (not whichever row the shuffle saw first)
-    val latest = du.withColumn("__rn", row_number().over(
-        Window.partitionBy(col(key)).orderBy(col(SeqCol).desc, col(OpCol).asc)))
-      .filter(col("__rn") === 1)
-    val survivors = latest.filter(col(OpCol) === "u")
-      .drop(OpCol, SeqCol, "__rn")
+  private def resolve(spark: SparkSession, base: DataFrame,
+      deltas: Seq[String], key: String, maxBroadcastKeys: Long,
+      evolveSchema: Boolean): DataFrame = {
+    if (deltas.isEmpty) return base
+    // with evolveSchema, merge the deltas' parquet schemas (an O(deltas)
+    // footer read) so a widened delta's new columns survive a multi-dir
+    // scan instead of being dropped to the first file's schema
+    val du = if (evolveSchema) readDeltasMerged(spark, deltas)
+      else graft.sources.ParquetMeta.read(spark, deltas)
+    val deltaRows = graft.sources.ParquetMeta.rows(spark, deltas)
+    val survivors = latestPerKey(du, key).filter(col(OpCol) === "u")
+      .drop(OpCol, SeqCol)
     // broadcast path: NO distinct — LEFT ANTI ignores build-side
     // duplicates, the broadcast stays bounded by deltaRows (total rows
     // >= distinct keys, the same number the guard counts), and the
@@ -457,15 +552,6 @@ object CorpusStore {
         else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*))
     }
   }
-
-  /** Read the delta dirs; with `evolveSchema`, merge their parquet
-    * schemas (an O(deltas) footer read) so a widened delta's new columns
-    * survive a multi-dir scan instead of being dropped to the first
-    * file's schema. */
-  private def readDeltas(spark: SparkSession, deltas: Seq[String],
-      evolveSchema: Boolean): DataFrame =
-    if (evolveSchema) readDeltasMerged(spark, deltas)
-    else graft.sources.ParquetMeta.read(spark, deltas)
 
   /** A schema-merging read over delta dirs WITHOUT the inference job:
     * when every file carries the same Spark-written schema (footer
@@ -496,24 +582,20 @@ object CorpusStore {
     * correct while every delta carries it. */
   def read(spark: SparkSession, dir: String, key: String,
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys,
-      evolveSchema: Boolean = false): DataFrame = {
-    val base = graft.sources.ParquetMeta.read(spark, Seq(currentBase(spark, dir)._2))
-    val deltas = deltaPaths(spark, dir)
-    if (deltas.isEmpty) return base
-    resolve(base, readDeltas(spark, deltas, evolveSchema), key,
-      graft.sources.ParquetMeta.rows(spark, deltas), maxBroadcastKeys,
-      evolveSchema)
-  }
+      evolveSchema: Boolean = false): DataFrame =
+    readSnapshot(spark, snapshot(spark, dir), key, Long.MaxValue,
+      maxBroadcastKeys, evolveSchema)
 
-  /** The seq encoded in a delta dir name (`delta_<%019d>`, minor folds
-    * `delta_<%019d>.m`). */
-  private def deltaSeqOf(p: String): Long = {
-    val n = new Path(p).getName.stripPrefix("delta_")
-    (if (isMinorName(n)) n.dropRight(MinorSuffix.length) else n).toLong
-  }
+  private def baseFrame(spark: SparkSession, s: Snapshot): DataFrame =
+    graft.sources.ParquetMeta.read(spark, Seq(s.base.path))
 
-  private def deltaDirOf(dir: String, seq: Long): String =
-    f"$dir/delta_$seq%019d"
+  /** [[readAt]] over an already-loaded snapshot. */
+  private[operators] def readSnapshot(spark: SparkSession, s: Snapshot,
+      key: String, asOfSeq: Long = Long.MaxValue,
+      maxBroadcastKeys: Long = DefaultMaxBroadcastKeys,
+      evolveSchema: Boolean = false): DataFrame =
+    resolve(spark, baseFrame(spark, s), s.liveAt(asOfSeq), key,
+      maxBroadcastKeys, evolveSchema)
 
   /** Time travel: the corpus as of `asOfSeq` — base plus only the deltas
     * with seq <= asOfSeq (selected by DIR NAME, so newer deltas are
@@ -524,25 +606,9 @@ object CorpusStore {
     * compaction cadence, by design, not accident). */
   def readAt(spark: SparkSession, dir: String, key: String, asOfSeq: Long,
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys,
-      evolveSchema: Boolean = false): DataFrame = {
-    val base = graft.sources.ParquetMeta.read(spark, Seq(currentBase(spark, dir)._2))
-    val deltas = deltaPaths(spark, dir).filter(p => deltaSeqOf(p) <= asOfSeq)
-    if (deltas.isEmpty) return base
-    resolve(base, readDeltas(spark, deltas, evolveSchema), key,
-      graft.sources.ParquetMeta.rows(spark, deltas), maxBroadcastKeys,
-      evolveSchema)
-  }
-
-  /** A delta's commit instant: the mtime of the `_SUCCESS` its write
-    * dropped last (the dir's own mtime as fallback — markers touch the
-    * dir, never the commit file). */
-  private def commitTimeOf(d: org.apache.hadoop.fs.FileSystem,
-      p: Path): Long = {
-    val s = new Path(p, "_SUCCESS")
-    try (if (d.exists(s)) d.getFileStatus(s) else d.getFileStatus(p))
-      .getModificationTime
-    catch { case scala.util.control.NonFatal(_) => Long.MaxValue } // vanished mid-listing: never "already committed"
-  }
+      evolveSchema: Boolean = false): DataFrame =
+    readSnapshot(spark, snapshot(spark, dir), key, asOfSeq,
+      maxBroadcastKeys, evolveSchema)
 
   /** Resolve a wall-clock instant to a SEQ — the TIMESTAMP-AS-OF half
     * of time travel, done the way the table formats do it: the
@@ -558,12 +624,12 @@ object CorpusStore {
     * and a minor fold's commit instant REPLACES its constituents'
     * (the fold is their only surviving carrier). O(live deltas)
     * metadata, nothing scanned. */
-  def seqAtTime(spark: SparkSession, dir: String, asOfMs: Long): Long = {
-    val d = fs(spark, dir)
-    deltaPaths(spark, dir)
-      .filter(p => commitTimeOf(d, new Path(p)) <= asOfMs)
-      .map(deltaSeqOf).maxOption.getOrElse(-1L)
-  }
+  def seqAtTime(spark: SparkSession, dir: String, asOfMs: Long): Long =
+    seqAt(snapshot(spark, dir), asOfMs)
+
+  private def seqAt(s: Snapshot, asOfMs: Long): Long =
+    s.live.filter(x => s.commitMs(x) <= asOfMs).map(_.seq).maxOption
+      .getOrElse(-1L)
 
   /** [[readAt]] addressed by wall-clock instead of seq (the
     * TIMESTAMP AS OF form): [[seqAtTime]] resolves the instant to the
@@ -575,9 +641,11 @@ object CorpusStore {
     * time-addressed CDC sync point. */
   def readAtTime(spark: SparkSession, dir: String, key: String, asOfMs: Long,
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys,
-      evolveSchema: Boolean = false): DataFrame =
-    readAt(spark, dir, key, seqAtTime(spark, dir, asOfMs),
-      maxBroadcastKeys, evolveSchema)
+      evolveSchema: Boolean = false): DataFrame = {
+    val s = snapshot(spark, dir)
+    readSnapshot(spark, s, key, seqAt(s, asOfMs), maxBroadcastKeys,
+      evolveSchema)
+  }
 
   /** Change-data feed: the NET change per key since `sinceSeq` — the
     * latest op ('u' with the row's new values, or 'd') across the deltas
@@ -592,19 +660,16 @@ object CorpusStore {
     * longer individually replayable. */
   def changesSince(spark: SparkSession, dir: String, key: String,
       sinceSeq: Long): DataFrame = {
-    val deltas = deltaPaths(spark, dir).filter(p => deltaSeqOf(p) > sinceSeq)
+    val s = snapshot(spark, dir)
+    val deltas = s.live.filter(_.seq > sinceSeq).map(_.path)
     if (deltas.isEmpty)
-      return graft.sources.ParquetMeta.read(spark, Seq(currentBase(spark, dir)._2))
-        .filter(lit(false))
+      return baseFrame(spark, s).filter(lit(false))
         .withColumn("op", lit("")).withColumn("seq", lit(0L))
     // schema-merging semantics unconditionally: the feed must carry a
     // widened delta's added columns even when older deltas in the range
     // lack them (readDeltasMerged: driver-side footer schema when uniform,
     // Spark's mergeSchema inference when genuinely mixed)
-    readDeltasMerged(spark, deltas)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(key)).orderBy(col(SeqCol).desc, col(OpCol).asc)))
-      .filter(col("__rn") === 1).drop("__rn")
+    latestPerKey(readDeltasMerged(spark, deltas), key)
       .withColumnRenamed(OpCol, "op").withColumnRenamed(SeqCol, "seq")
   }
 
@@ -630,10 +695,16 @@ object CorpusStore {
   def prunedRead(spark: SparkSession, dir: String, key: String, keep: Column,
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys,
       evolveSchema: Boolean = false,
-      asOfSeq: Option[Long] = None): DataFrame = {
-    val baseDir = currentBase(spark, dir)._2
-    require(hasManifest(spark, dir),
-      s"prunedRead needs a manifest: init the store with statsCols, got none in $dir")
+      asOfSeq: Option[Long] = None): DataFrame =
+    prunedReadSnapshot(spark, snapshot(spark, dir), key, keep,
+      maxBroadcastKeys, evolveSchema, asOfSeq.getOrElse(Long.MaxValue))
+
+  private def prunedReadSnapshot(spark: SparkSession, s: Snapshot,
+      key: String, keep: Column, maxBroadcastKeys: Long,
+      evolveSchema: Boolean, asOfSeq: Long): DataFrame = {
+    val baseDir = s.base.path
+    require(s.hasManifest,
+      s"prunedRead needs a manifest: init the store with statsCols, got none in ${s.dir}")
     val basePrefix = new Path(baseDir).toUri.getPath
     // stale-manifest detection (compact crash state 5) by PART NAME, a
     // driver metadata check instead of a limit(1) Spark job: the part
@@ -641,19 +712,13 @@ object CorpusStore {
     // (ScanPruning.writePart), so "no part named after the current base
     // generation" IS "no entry covers the current generation" — silent
     // empty pruning would LOSE base rows, so rebuild first
-    val basePart = new Path(manifestPath(dir),
-      s"${new Path(baseDir).getName}.parquet")
-    if (!fs(spark, dir).exists(basePart))
-      ScanPruning.rebuildManifest(spark, baseDir, manifestPath(dir))
-    val m = ScanPruning.readManifest(spark, manifestPath(dir))
-    val baseSlice = m.filter(col("file").startsWith(basePrefix))
-    val prunedBase = ScanPruning.prunedScan(spark, baseDir, baseSlice, keep)
-    val deltas = asOfSeq.fold(deltaPaths(spark, dir))(a =>
-      deltaPaths(spark, dir).filter(p => deltaSeqOf(p) <= a))
-    if (deltas.isEmpty) return prunedBase
-    resolve(prunedBase, readDeltas(spark, deltas, evolveSchema), key,
-      graft.sources.ParquetMeta.rows(spark, deltas), maxBroadcastKeys,
-      evolveSchema)
+    val basePart = new Path(s.manifest, s"${new Path(baseDir).getName}.parquet")
+    if (!s.fs.exists(basePart))
+      ScanPruning.rebuildManifest(spark, baseDir, s.manifest)
+    val baseSlice = ScanPruning.readManifest(spark, s.manifest)
+      .filter(col("file").startsWith(basePrefix))
+    resolve(spark, ScanPruning.prunedScan(spark, baseDir, baseSlice, keep),
+      s.liveAt(asOfSeq), key, maxBroadcastKeys, evolveSchema)
   }
 
   /** Point/small-IN lookup by key: open only the base files whose bloom
@@ -667,11 +732,12 @@ object CorpusStore {
   def lookup(spark: SparkSession, dir: String, key: String, keys: Seq[Any],
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys,
       evolveSchema: Boolean = false): DataFrame = {
-    require(hasManifest(spark, dir),
+    val s = snapshot(spark, dir)
+    require(s.hasManifest,
       s"lookup needs a manifest: init the store with bloomCols = Seq(\"$key\")")
-    val pred = ScanPruning.keyLookupPredicate(spark, manifestPath(dir), key, keys)
-    prunedRead(spark, dir, key, pred, maxBroadcastKeys, evolveSchema)
-      .filter(col(key).isin(keys: _*))
+    val pred = ScanPruning.keyLookupPredicate(spark, s.manifest, key, keys)
+    prunedReadSnapshot(spark, s, key, pred, maxBroadcastKeys, evolveSchema,
+      Long.MaxValue).filter(col(key).isin(keys: _*))
   }
 
   /** Bound on the distinct probe-side keys [[lookupJoin]] will collect to
@@ -710,41 +776,35 @@ object CorpusStore {
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys,
       evolveSchema: Boolean = false,
       asOfSeq: Option[Long] = None): DataFrame = {
-    def full = asOfSeq.fold(
-      read(spark, dir, key, maxBroadcastKeys, evolveSchema))(a =>
-      readAt(spark, dir, key, a, maxBroadcastKeys, evolveSchema))
-    val bloomed = hasManifest(spark, dir) &&
-      ScanPruning.manifestBloomCols(spark, manifestPath(dir)).contains(key)
+    val s = snapshot(spark, dir)
+    val asOf = asOfSeq.getOrElse(Long.MaxValue)
+    def full = readSnapshot(spark, s, key, asOf, maxBroadcastKeys, evolveSchema)
+    val bloomed = s.hasManifest &&
+      ScanPruning.manifestBloomCols(spark, s.manifest).contains(key)
     // pinned (eager, lineage-free) so guard/probe/join share one key set
     val ks0 = keysDf.select(col(key)).distinct()
     val ks = if (bloomed) ks0.localCheckpoint(true) else ks0
+    def pruned(keyVals: Seq[Any]) = prunedReadSnapshot(spark, s, key,
+        ScanPruning.keyLookupPredicate(spark, s.manifest, key, keyVals),
+        maxBroadcastKeys, evolveSchema, asOf)
+      .join(broadcast(ks), Seq(key), "left_semi")
     if (bloomed && maxPruneKeys < Int.MaxValue.toLong) {
       // guard count and probe collect FUSED into one limited collect off
       // the pin: at most maxPruneKeys + 1 rows reach the driver (the same
       // bound the separate count enforced), and the over-bound fallback
       // is detected by the extra row instead of a second Spark job
       val keyRows = ks.limit(maxPruneKeys.toInt + 1).collect()
-      if (keyRows.isEmpty) return full.filter(lit(false))
-      if (keyRows.length <= maxPruneKeys) {
-        val keyVals = keyRows.toIndexedSeq.map(_.get(0))
-        val pred = ScanPruning.keyLookupPredicate(spark, manifestPath(dir),
-          key, keyVals)
-        return prunedRead(spark, dir, key, pred, maxBroadcastKeys,
-            evolveSchema, asOfSeq)
-          .join(broadcast(ks), Seq(key), "left_semi")
-      }
-      return full.join(ks, Seq(key), "left_semi")
+      if (keyRows.isEmpty) full.filter(lit(false))
+      else if (keyRows.length <= maxPruneKeys)
+        pruned(keyRows.toIndexedSeq.map(_.get(0)))
+      else full.join(ks, Seq(key), "left_semi")
+    } else {
+      val n = if (bloomed) ks.count() else Long.MaxValue
+      if (bloomed && n == 0L) full.filter(lit(false))
+      else if (bloomed && n <= maxPruneKeys)
+        pruned(ks.collect().toIndexedSeq.map(_.get(0)))
+      else full.join(ks, Seq(key), "left_semi")
     }
-    val n = if (bloomed) ks.count() else Long.MaxValue
-    if (bloomed && n == 0L) return full.filter(lit(false))
-    if (bloomed && n <= maxPruneKeys) {
-      val keyVals = ks.collect().toIndexedSeq.map(_.get(0))
-      val pred = ScanPruning.keyLookupPredicate(spark, manifestPath(dir),
-        key, keyVals)
-      prunedRead(spark, dir, key, pred, maxBroadcastKeys, evolveSchema,
-          asOfSeq)
-        .join(broadcast(ks), Seq(key), "left_semi")
-    } else full.join(ks, Seq(key), "left_semi")
   }
 
   /** The snapshot a DML verb at `seq` mutates: the store as of `seq - 1`,
@@ -759,29 +819,38 @@ object CorpusStore {
     * stale/reused seq would pass the live check alone — but its readAt
     * snapshot would silently resolve to the post-fold state rather than
     * a pre-seq one, and its append would clobber a retired delta dir. */
-  private def dmlSnapshot(spark: SparkSession, dir: String, key: String,
+  private def dmlSnapshot(spark: SparkSession, s: Snapshot, key: String,
       seq: Long, prune: Option[Column], maxBroadcastKeys: Long): DataFrame = {
-    val horizon = foldHorizon(spark, dir)
+    val horizon = s.horizon
     require(seq > horizon,
       s"DML at seq $seq is at or below the fold horizon $horizon: its " +
         "pre-seq snapshot was folded away by a compaction, so current-state " +
         "semantics cannot be honored — use a seq newer than every fold")
-    val newestLive = deltaPaths(spark, dir).map(deltaSeqOf).maxOption
-    newestLive.foreach(m => require(seq >= m,
+    s.live.map(_.seq).maxOption.foreach(m => require(seq >= m,
       s"DML at seq $seq is older than live delta seq $m: row-level " +
         "DELETE/UPDATE has current-state semantics, so its seq must be " +
         "the newest (same-seq replay of the verb itself is allowed)"))
     prune match {
-      case Some(keep) => prunedRead(spark, dir, key, keep, maxBroadcastKeys,
-        asOfSeq = Some(seq - 1))
-      case None => readAt(spark, dir, key, seq - 1, maxBroadcastKeys)
+      case Some(keep) => prunedReadSnapshot(spark, s, key, keep,
+        maxBroadcastKeys, evolveSchema = false, seq - 1)
+      case None => readSnapshot(spark, s, key, seq - 1, maxBroadcastKeys)
     }
   }
 
-  /** Rows written to `delta_<seq>` — a parquet footer count, no scan
-    * (driver-side footer read, no Spark job). */
-  private def deltaRowCount(spark: SparkSession, dir: String, seq: Long): Long =
-    graft.sources.ParquetMeta.rows(spark, Seq(deltaDirOf(dir, seq)))
+  /** The DML write path shared by [[deleteWhere]]/[[updateWhere]]: under
+    * the lease, append `delta_<seq>` built from the pre-`seq` snapshot
+    * ([[dmlSnapshot]]) and return its rows — a parquet footer count, no
+    * scan (driver-side footer read, no Spark job). */
+  private def dml(spark: SparkSession, dir: String, key: String, seq: Long,
+      prune: Option[Column], maxBroadcastKeys: Long)(
+      batch: DataFrame => (DataFrame, Option[DataFrame])): Long =
+    withWriterLock(spark, dir) {
+      val s = snapshot(spark, dir)
+      val (upserts, deleteKeys) =
+        batch(dmlSnapshot(spark, s, key, seq, prune, maxBroadcastKeys))
+      doAppend(spark, s, seq, key, upserts, deleteKeys)
+      graft.sources.ParquetMeta.rows(spark, Seq(deltaDirOf(dir, seq)))
+    }
 
   /** Row-level DELETE by predicate — `DELETE FROM store WHERE cond`, the
     * DML verb of the table formats, expressed in the merge-on-read log:
@@ -811,13 +880,8 @@ object CorpusStore {
   def deleteWhere(spark: SparkSession, dir: String, key: String, seq: Long,
       cond: Column, prune: Option[Column] = None,
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys): Long =
-    withWriterLock(spark, dir) {
-      val snap = dmlSnapshot(spark, dir, key, seq, prune, maxBroadcastKeys)
-      doAppend(spark, dir, seq, key,
-        upserts = snap.limit(0),
-        deleteKeys = Some(snap.filter(cond).select(col(key))))
-      deltaRowCount(spark, dir, seq)
-    }
+    dml(spark, dir, key, seq, prune, maxBroadcastKeys)(snap =>
+      (snap.limit(0), Some(snap.filter(cond).select(col(key)))))
 
   /** Row-level UPDATE by predicate — `UPDATE store SET c = expr WHERE
     * cond`: resolve the corpus as of `seq - 1`, filter to `cond`, apply
@@ -843,11 +907,8 @@ object CorpusStore {
     require(!set.contains(key),
       s"updateWhere cannot set the key column '$key': rekeying is a " +
         "delete + insert, not an update")
-    withWriterLock(spark, dir) {
-      val snap = dmlSnapshot(spark, dir, key, seq, prune, maxBroadcastKeys)
-      doAppend(spark, dir, seq, key, snap.filter(cond).withColumns(set))
-      deltaRowCount(spark, dir, seq)
-    }
+    dml(spark, dir, key, seq, prune, maxBroadcastKeys)(snap =>
+      (snap.filter(cond).withColumns(set), None))
   }
 
   /** Continuous ingestion: apply a streaming frame of upserts to the
@@ -962,9 +1023,9 @@ object CorpusStore {
     * catch-up doesn't become a single giant microbatch). */
   def changesStream(spark: SparkSession, dir: String,
       options: Map[String, String] = Map.empty): DataFrame = {
-    val baseSchema = graft.sources.ParquetMeta.read(
-      spark, Seq(currentBase(spark, dir)._2)).schema
-    val deltas = deltaPaths(spark, dir)
+    val s = snapshot(spark, dir)
+    val baseSchema = baseFrame(spark, s).schema
+    val deltas = s.live.map(_.path)
     val dataSchema =
       if (deltas.isEmpty) baseSchema
       else {
@@ -981,13 +1042,8 @@ object CorpusStore {
     // would also match already-retired (`_folded`) dirs, re-ingesting the
     // whole folded history on a fresh attach and racing the next
     // compact's purge of exactly those files
-    val d = fs(spark, dir)
-    val maxSeen =
-      if (!d.exists(new Path(dir))) -1L
-      else d.listStatus(new Path(dir)).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta_"))
-        .map(st => deltaSeqOf(st.getPath.toString)).maxOption.getOrElse(-1L)
-    val pats = deltas.map(p => new Path(p).getName) ++ seqGtPatterns(maxSeen)
+    val maxSeen = s.deltas.map(_.seq).maxOption.getOrElse(-1L)
+    val pats = s.live.map(_.name) ++ seqGtPatterns(maxSeen)
     val glob = if (pats.size == 1) s"$dir/${pats.head}"
     else s"$dir/{${pats.mkString(",")}}"
     spark.readStream.schema(schema).options(options).parquet(glob)
@@ -1069,12 +1125,15 @@ object CorpusStore {
     * the batch) — bounded by the batch's file count. */
   private[graft] def applyChangeSlice(spark: SparkSession, replicaDir: String,
       key: String, batch: DataFrame): Unit = withWriterLock(spark, replicaDir) {
+    // one snapshot serves every seq: each iteration writes only its own
+    // delta dir, which no other iteration consults
+    val snap = snapshot(spark, replicaDir)
     val seqs = batch.select(col("seq")).distinct().collect()
       .map(_.getLong(0)).sorted
     seqs.foreach { s =>
       val incoming = batch.filter(col("seq") === s).drop("seq")
       val deltaDir = deltaDirOf(replicaDir, s)
-      val exists = fs(spark, replicaDir).exists(new Path(deltaDir))
+      val exists = snap.deltas.exists(x => !x.minor && x.seq == s)
       val merged = if (!exists) incoming
         else graft.sources.ParquetMeta.read(spark, Seq(deltaDir))
           .withColumnRenamed(OpCol, "op").drop(SeqCol)
@@ -1087,7 +1146,7 @@ object CorpusStore {
       // own input; a lost block just fails the batch, which the stream
       // replays (the merge makes the replay idempotent)
       val pinned = if (exists) net.localCheckpoint(true) else net
-      doAppend(spark, replicaDir, s, key,
+      doAppend(spark, snap, s, key,
         pinned.filter(col("op") === "u").drop("op"),
         deleteKeys = Some(pinned.filter(col("op") === "d").select(col(key))))
     }
@@ -1115,7 +1174,7 @@ object CorpusStore {
     * Every crash point leaves a readable store:
     *   1. purge of expired artifacts is idempotent (re-runs next time).
     *   2. die mid-fold-write: the new generation has no `_SUCCESS`, so
-    *      [[currentBase]] never selects it; reads are exactly
+    *      [[Snapshot.base]] never selects it; reads are exactly
     *      pre-compact, and the next compact deletes the debris.
     *   3. die after `_SUCCESS`, before marking: the new generation
     *      already FOLDS every delta, so re-resolving the still-live
@@ -1135,38 +1194,35 @@ object CorpusStore {
       clusterFiles: Int = 0, retainGenerations: Int = 1,
       minRetainMs: Long = 0L, foldBelowSeq: Long = Long.MaxValue): Unit =
     withWriterLock(spark, dir) {
-      doCompact(spark, dir, key, evolveSchema, clusterBy, clusterFiles,
-        retainGenerations, minRetainMs, foldBelowSeq)
+      // purge the grace window left by PREVIOUS compacts ([[vacuum]]):
+      // generations older than the retention horizon (including incomplete
+      // fold debris), the gen-0 base once out of retention, and retired
+      // deltas past their cycle. Hadoop FileSystem delete reports failure
+      // by RETURNING false, not throwing — vacuum aborts via require while
+      // the store is still readable.
+      val s = doVacuum(spark, snapshot(spark, dir), retainGenerations,
+        minRetainMs)._1
+      // foldBelowSeq (default unbounded) is the same replay fence as
+      // [[compactDeltas]]': deltas at or above it stay LIVE over the new
+      // base — they are strictly newer than everything folded, so
+      // resolution over (new base + remaining deltas) is unchanged
+      val deltas = s.live.filter(_.seq < foldBelowSeq)
+      if (deltas.nonEmpty) fold(spark, s, deltas, key, evolveSchema,
+        clusterBy, clusterFiles)
     }
 
-  private def doCompact(spark: SparkSession, dir: String, key: String,
-      evolveSchema: Boolean, clusterBy: Seq[String],
-      clusterFiles: Int, retainGenerations: Int,
-      minRetainMs: Long = 0L, foldBelowSeq: Long = Long.MaxValue): Unit = {
-    val d = fs(spark, dir)
-    // purge the grace window left by PREVIOUS compacts ([[vacuum]]):
-    // generations older than the retention horizon (including incomplete
-    // fold debris), the gen-0 base once out of retention, and retired
-    // deltas past their cycle. Hadoop FileSystem delete reports failure
-    // by RETURNING false, not throwing — vacuum aborts via require while
-    // the store is still readable.
-    doVacuum(spark, dir, retainGenerations, minRetainMs)
-    val (gen, baseDir) = currentBase(spark, dir)
-    // foldBelowSeq (default unbounded) is the same replay fence as
-    // [[compactDeltas]]': deltas at or above it stay LIVE over the new
-    // base — they are strictly newer than everything folded, so
-    // resolution over (new base + remaining deltas) is unchanged
-    val deltas = deltaPaths(spark, dir).filter(p => deltaSeqOf(p) < foldBelowSeq)
-    if (deltas.isEmpty) return
+  /** [[compact]]'s fold of `deltas` into generation `base + 1`. */
+  private def fold(spark: SparkSession, s: Snapshot, deltas: Seq[DeltaDir],
+      key: String, evolveSchema: Boolean, clusterBy: Seq[String],
+      clusterFiles: Int): Unit = {
     // evolveSchema folds widened deltas into a WIDENED base — the one
     // O(corpus) write schema evolution ever pays, amortized over the
     // same cadence as any compact; plain reads carry the new columns
     // from then on
-    val folded = resolve(graft.sources.ParquetMeta.read(spark, Seq(baseDir)),
-      readDeltas(spark, deltas, evolveSchema), key,
-      graft.sources.ParquetMeta.rows(spark, deltas),
+    val folded = resolve(spark, baseFrame(spark, s), deltas.map(_.path), key,
       DefaultMaxBroadcastKeys, evolveSchema)
-    val newDir = f"$dir/$GenPrefix${gen + 1}%019d"
+    val gen = s.base.num + 1
+    val newDir = f"${s.dir}/$GenPrefix$gen%019d"
     // clusterBy: compaction is already the O(corpus) rewrite, so it is
     // the natural (free-shuffle) moment to LAY OUT the new base — range
     // for one column, z-order for several — making every file's min/max
@@ -1191,17 +1247,11 @@ object CorpusStore {
           files = clusterFiles)
     }
     // the write's _SUCCESS committed the new generation; retire the
-    // folded deltas from NEW plans (ascending — see crash state 4). The
-    // marker records the RETIRING generation, so retention-aware vacuum
-    // can age folded deltas by cycle instead of purging them all.
-    deltas.foreach { p =>
-      val out = d.create(new Path(p, FoldedMarker), true)
-      try out.write((gen + 1).toString.getBytes("UTF-8")) finally out.close()
-    }
+    // folded deltas from NEW plans (ascending — see crash state 4)
+    s.retire(deltas, gen)
     // advance the replay fence: seqs at or below the fold are dead
-    writeHorizon(spark, dir, deltas.map(deltaSeqOf).max)
-    if (hasManifest(spark, dir))
-      ScanPruning.rebuildManifest(spark, newDir, manifestPath(dir))
+    writeHorizon(s, deltas.map(_.seq).max)
+    if (s.hasManifest) ScanPruning.rebuildManifest(spark, newDir, s.manifest)
   }
 
   /** MINOR (delta-level) compaction — the LSM level-0 → level-1 fold:
@@ -1235,7 +1285,7 @@ object CorpusStore {
     *
     * Crash discipline mirrors [[compact]]'s:
     *   1. an uncommitted fold (no `_SUCCESS`) is invisible to every
-    *      reader ([[deltaPaths]]' commit gate) and purged by the next
+    *      reader ([[Snapshot.live]]'s commit gate) and purged by the next
     *      compactDeltas/vacuum.
     *   2. die after `_SUCCESS`, before marking: the fold RESTATES the
     *      originals' latest-per-key content at the max seq, so the
@@ -1258,73 +1308,41 @@ object CorpusStore {
   def compactDeltas(spark: SparkSession, dir: String, key: String,
       foldBelowSeq: Long = Long.MaxValue): Boolean =
     withWriterLock(spark, dir) {
-      doCompactDeltas(spark, dir, key, foldBelowSeq)
-    }
-
-  private def doCompactDeltas(spark: SparkSession, dir: String,
-      key: String, foldBelowSeq: Long = Long.MaxValue): Boolean = {
-    val d = fs(spark, dir)
-    if (!d.exists(new Path(dir))) return false
-    // crash state 1: purge uncommitted fold debris (reader-invisible)
-    d.listStatus(new Path(dir)).toSeq.foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("delta_") && isMinorName(n) && !isFolded(d, st.getPath)
-          && !d.exists(new Path(st.getPath, "_SUCCESS")))
-        require(d.delete(st.getPath, true),
-          s"compactDeltas: could not clear fold debris ${st.getPath}")
-    }
-    val gen = currentBase(spark, dir)._1
-    def mark(p: String): Unit = {
-      val out = d.create(new Path(p, FoldedMarker), true)
-      try out.write((gen + 1).toString.getBytes("UTF-8")) finally out.close()
-    }
-    // crash state 3: a committed fold whose originals are still live —
-    // finish retiring them (each is a restatement the fold already holds)
-    val pre = deltaPaths(spark, dir)
-    pre.filter(p => isMinorName(new Path(p).getName))
-      .maxByOption(deltaSeqOf).foreach { f =>
-        val fSeq = deltaSeqOf(f)
-        val stale = pre.filter(p => p != f && deltaSeqOf(p) <= fSeq).sorted
-        stale.foreach(mark)
-        if (stale.nonEmpty && hasManifest(spark, dir))
-          ScanPruning.dropParts(spark, manifestPath(dir),
-            stale.map(new Path(_).getName))
+      val s0 = snapshot(spark, dir)
+      // crash state 1: purge uncommitted fold debris (reader-invisible)
+      val debris = s0.deltas.filter(x => !x.committed && x.foldedAt.isEmpty)
+      debris.foreach(x => require(s0.fs.delete(new Path(x.path), true),
+        s"compactDeltas: could not clear fold debris ${x.path}"))
+      val s1 = s0.without(debris.map(_.path).toSet)
+      val gen = s1.base.num + 1
+      // crash state 3: a committed fold whose originals are still live —
+      // finish retiring them (each is a restatement the fold already holds)
+      val pre = s1.live
+      val s = pre.filter(_.minor).maxByOption(_.seq).fold(s1) { f =>
+        val stale = pre.filter(x => x != f && x.seq <= f.seq)
+        val marked = s1.retire(stale, gen)
+        if (stale.nonEmpty && s1.hasManifest)
+          ScanPruning.dropParts(spark, s1.manifest, stale.map(_.name))
+        marked
       }
-    val live = deltaPaths(spark, dir).filter(p => deltaSeqOf(p) < foldBelowSeq)
-    if (live.size < 2) return false
-    val maxSeq = live.map(deltaSeqOf).max
-    // net per key across the live deltas — resolution's own window —
-    // re-stamped at the fold seq (one delta dir = one seq, like an append)
-    val net = readDeltasMerged(spark, live)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(key)).orderBy(col(SeqCol).desc, col(OpCol).asc)))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn(SeqCol, lit(maxSeq))
-    val foldDir = deltaDirOf(dir, maxSeq) + MinorSuffix
-    net.write.mode(SaveMode.Overwrite).parquet(foldDir) // _SUCCESS commits
-    live.foreach(mark) // ascending (deltaPaths sorts)
-    writeHorizon(spark, dir, maxSeq)
-    if (hasManifest(spark, dir)) {
-      ScanPruning.appendManifest(spark, manifestPath(dir), foldDir)
-      ScanPruning.dropParts(spark, manifestPath(dir),
-        live.map(new Path(_).getName))
+      val live = s.live.filter(_.seq < foldBelowSeq)
+      live.size >= 2 && {
+        val maxSeq = live.map(_.seq).max
+        // net per key across the live deltas — resolution's own window —
+        // re-stamped at the fold seq (one delta dir = one seq, like an append)
+        val foldDir = deltaDirOf(dir, maxSeq) + MinorSuffix
+        latestPerKey(readDeltasMerged(spark, live.map(_.path)), key)
+          .withColumn(SeqCol, lit(maxSeq))
+          .write.mode(SaveMode.Overwrite).parquet(foldDir) // _SUCCESS commits
+        s.retire(live, gen) // ascending (the snapshot sorts)
+        writeHorizon(s, maxSeq)
+        if (s.hasManifest) {
+          ScanPruning.appendManifest(spark, s.manifest, foldDir)
+          ScanPruning.dropParts(spark, s.manifest, live.map(_.name))
+        }
+        true
+      }
     }
-    true
-  }
-
-  /** The generation whose creation retired a folded delta (the marker's
-    * recorded content); markers from before the retention feature are
-    * empty and age as generation 0 (always purgeable — the pre-feature
-    * behavior). */
-  private def foldedGenOf(d: org.apache.hadoop.fs.FileSystem, p: Path): Long =
-    try {
-      val in = d.open(new Path(p, FoldedMarker))
-      try {
-        val buf = new Array[Byte](32)
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong
-      } finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => 0L }
 
   /** Purge the snapshot grace window NOW instead of at the next
     * [[compact]]: base generations out of retention (and fold debris
@@ -1365,129 +1383,102 @@ object CorpusStore {
   def vacuum(spark: SparkSession, dir: String, retainGenerations: Int = 1,
       minRetainMs: Long = 0L): Int =
     withWriterLock(spark, dir) {
-      doVacuum(spark, dir, retainGenerations, minRetainMs)
+      doVacuum(spark, snapshot(spark, dir), retainGenerations, minRetainMs)._2
     }
 
-  private def doVacuum(spark: SparkSession, dir: String,
-      retainGenerations: Int, minRetainMs: Long = 0L): Int = {
+  /** Purge `s`'s expired dirs; returns the post-purge view and the
+    * number of dirs purged. */
+  private def doVacuum(spark: SparkSession, s: Snapshot,
+      retainGenerations: Int, minRetainMs: Long): (Snapshot, Int) = {
     require(retainGenerations >= 1,
       s"retainGenerations must be >= 1, got $retainGenerations")
     require(minRetainMs >= 0L, s"minRetainMs must be >= 0, got $minRetainMs")
-    val d = fs(spark, dir)
-    if (!d.exists(new Path(dir))) return 0
-    val (gen, baseDir) = currentBase(spark, dir)
+    val expired = expiredDirs(s, retainGenerations, minRetainMs,
+      System.currentTimeMillis())
+    expired.foreach(p => require(s.fs.delete(new Path(p), true),
+      s"vacuum: could not purge expired $p"))
+    // purged delta dirs take their manifest parts with them (delta parts
+    // are never consulted for base pruning, but a part pointing at
+    // deleted files is clutter the multi-part layout can simply drop)
+    val purgedDeltas = s.deltas.filter(x => expired.contains(x.path)).map(_.name)
+    if (purgedDeltas.nonEmpty && s.hasManifest)
+      ScanPruning.dropParts(spark, s.manifest, purgedDeltas)
+    (s.without(expired.toSet), expired.size)
+  }
+
+  /** [[vacuum]]'s expiry rule over a snapshot's entries, at `now`. */
+  private def expiredDirs(s: Snapshot, retainGenerations: Int,
+      minRetainMs: Long, now: Long): Seq[String] = {
+    val gen = s.base.num
     // the stamp a time-floored artifact ages from is its RETIREMENT
     // moment, not its creation: a retired delta ages from its `_folded`
     // marker, and a superseded generation from its SUCCESSOR's `_SUCCESS`
     // commit — a generation that served as current for hours would
     // otherwise be "old" the instant it was superseded, giving the
     // long-running readers the floor exists for zero protection.
-    // An unreadable stamp counts as infinitely old — the cycle knob is
+    // An unknown stamp counts as infinitely old — the cycle knob is
     // then the only fence, exactly the pre-feature behavior.
-    def stampOf(p: Path, markFile: String): Long =
-      try {
-        val mp = new Path(p, markFile)
-        (if (d.exists(mp)) d.getFileStatus(mp) else d.getFileStatus(p))
-          .getModificationTime
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    lazy val gens = genDirs(spark, dir)
-    def retireStampOf(g: Long): Long =
-      gens.find(_._1 > g)
-        .map(t => stampOf(new Path(t._2), "_SUCCESS")).getOrElse(0L)
     def aged(stamp: Long): Boolean =
-      minRetainMs <= 0L || System.currentTimeMillis() - stamp >= minRetainMs
-    val expired = d.listStatus(new Path(dir)).toSeq.filter { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(GenPrefix) && st.getPath.toString != baseDir) {
-        // uncommitted fold debris purges unconditionally (no reader can
-        // hold it); complete generations age out by the retention window
-        !d.exists(new Path(st.getPath, "_SUCCESS")) ||
-          (gen >= n.stripPrefix(GenPrefix).toLong + retainGenerations &&
-            aged(retireStampOf(n.stripPrefix(GenPrefix).toLong)))
-      } else if (n == "base" && gen > 0L) {
-        // gen-0 ages like any other generation
-        gen >= retainGenerations && aged(retireStampOf(0L))
-      } else if (n.startsWith("delta_")) {
-        if (isFolded(d, st.getPath))
-          gen >= foldedGenOf(d, st.getPath) + retainGenerations - 1 &&
-            aged(stampOf(st.getPath, FoldedMarker))
-        else isMinorName(n) && !d.exists(new Path(st.getPath, "_SUCCESS"))
-      } else false
-    }
-    expired.foreach(st => require(d.delete(st.getPath, true),
-      s"vacuum: could not purge expired ${st.getPath}"))
-    // purged delta dirs take their manifest parts with them (delta parts
-    // are never consulted for base pruning, but a part pointing at
-    // deleted files is clutter the multi-part layout can simply drop)
-    val purgedDeltas = expired.map(_.getPath.getName).filter(_.startsWith("delta_"))
-    if (purgedDeltas.nonEmpty && hasManifest(spark, dir))
-      ScanPruning.dropParts(spark, manifestPath(dir), purgedDeltas)
-    expired.size
+      minRetainMs <= 0L || now - stamp >= minRetainMs
+    def retiredAt(g: Long): Long = s.gens
+      .collectFirst { case GenDir(n, _, Some(t)) if n > g => t }.getOrElse(0L)
+    // uncommitted fold debris purges unconditionally (no reader can hold
+    // it); complete generations, gen-0 `base` included, age out by the
+    // retention window
+    val gens = s.gens.filter(g => g.num != gen && (g.committedAt.isEmpty ||
+      (gen >= g.num + retainGenerations && aged(retiredAt(g.num)))))
+    val deltas = s.deltas.filter(x => x.foldedAt match {
+      case Some(t) => gen >= s.foldedGen(x) + retainGenerations - 1 && aged(t)
+      case None => !x.committed
+    })
+    gens.map(_.path) ++ deltas.map(_.path)
   }
 
   /** Operational snapshot of a store's on-disk state, one row per
-    * artifact dir: `kind` (base | delta | folded_delta | expired_gen |
-    * incomplete_gen | manifest), `name`, `seq` (delta seq or generation
-    * number, null for gen-0 base and the manifest), `n_rows` (parquet
-    * footer count — a metadata read; null for incomplete debris, and
-    * for a dir a concurrent [[vacuum]]/[[compact]] deleted mid-census),
-    * `live` (participates in the current snapshot's reads). O(dirs)
-    * driver work + one footer read per COMPLETE dir, live or not (the
-    * grace-window mass is exactly what a vacuum decision needs);
+    * artifact dir: `kind` (base | delta | folded_delta | incomplete_delta
+    * | expired_gen | incomplete_gen | manifest), `name`, `seq` (delta seq
+    * or generation number, null for gen-0 base and the manifest),
+    * `n_rows` (parquet footer count — a metadata read; null for
+    * incomplete debris, and for a dir a concurrent [[vacuum]]/[[compact]]
+    * deleted mid-census), `live` (participates in the current snapshot's
+    * reads); then one row each for the store-root state files when
+    * present: `horizon` (seq = the newest folded seq) and `writer_lock`
+    * (an in-flight writer's lease). Rows come from ONE [[Snapshot]] — a
+    * single root listing — so they describe one consistent state.
+    * O(dirs) driver work + one footer read per COMPLETE dir, live or not
+    * (the grace-window mass is exactly what a vacuum decision needs);
     * nothing is scanned. The monitoring surface for cadence decisions
     * ([[compactIfNeeded]]'s inputs, the grace-window mass [[vacuum]]
     * would free, manifest presence). */
   def describe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val d = fs(spark, dir)
-    val gen = currentBase(spark, dir)._1
+    val s = snapshot(spark, dir)
+    val gen = s.base.num
     def rowsOf(p: String): Option[Long] =
       try Some(graft.sources.ParquetMeta.rows(spark, Seq(p))) catch {
         case scala.util.control.NonFatal(_) => None
       }
-    val rows = d.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory).sortBy(_.getPath.getName).flatMap { st =>
-        val p = st.getPath
-        val n = p.getName
-        if (n.startsWith("delta_")) {
-          val folded = isFolded(d, p)
-          val committed = minorCommitted(d, p)
-          val kind =
-            if (!committed) "incomplete_delta" // crashed minor-fold debris
-            else if (folded) "folded_delta"
-            else "delta"
-          Some((kind, n, Some(deltaSeqOf(p.toString)),
-            if (committed) rowsOf(p.toString) else None, !folded && committed))
-        } else if (n == "base" || n.startsWith(GenPrefix)) {
-          val complete = n == "base" || d.exists(new Path(p, "_SUCCESS"))
-          val thisGen = if (n == "base") 0L else n.stripPrefix(GenPrefix).toLong
-          val seq = if (n == "base") None else Some(thisGen)
-          // compare by generation NUMBER, not path string: listed paths
-          // carry the filesystem scheme, currentBase's gen-0 form doesn't
-          val current = complete && thisGen == gen
-          val kind =
-            if (current) "base"
-            else if (!complete) "incomplete_gen"
-            else "expired_gen"
-          Some((kind, n, seq, if (complete) rowsOf(p.toString) else None, current))
-        } else if (n == "manifest") {
-          Some(("manifest", n, None, rowsOf(p.toString), true))
-        } else None
-      }
-    // the two store-root state FILES the r14 hardening added: the replay
-    // fence (seq = newest folded seq) and an in-flight writer's lease —
-    // the remaining state an operator would otherwise read off disk
-    val horizon = foldHorizon(spark, dir)
-    val horizonRow =
-      if (horizon >= 0L) Seq(("horizon", HorizonFile, Some(horizon),
-        None: Option[Long], true))
-      else Nil
-    val lockRow =
-      if (d.exists(new Path(dir, LockFile)))
-        Seq(("writer_lock", LockFile, None: Option[Long],
-          None: Option[Long], true))
-      else Nil
-    (rows ++ horizonRow ++ lockRow).toDF("kind", "name", "seq", "n_rows", "live")
+    val gens = s.gens.map { g =>
+      val current = g.committedAt.nonEmpty && g.num == gen
+      val kind = if (current) "base"
+        else if (g.committedAt.isEmpty) "incomplete_gen" else "expired_gen"
+      (kind, g.name, if (g.name == "base") None else Some(g.num),
+        g.committedAt.flatMap(_ => rowsOf(g.path)), current)
+    }
+    val deltas = s.deltas.map { x =>
+      val kind = if (!x.committed) "incomplete_delta" // crashed minor-fold debris
+        else if (x.foldedAt.nonEmpty) "folded_delta" else "delta"
+      (kind, x.name, Some(x.seq),
+        if (x.committed) rowsOf(x.path) else None, x.live)
+    }
+    val none = Option.empty[Long]
+    val state =
+      (if (s.hasManifest) Seq(("manifest", ManifestDir, none, rowsOf(s.manifest), true))
+        else Nil) ++
+      (if (s.horizon >= 0L) Seq(("horizon", HorizonFile, Some(s.horizon), none, true))
+        else Nil) ++
+      (if (s.hasLease) Seq(("writer_lock", LockFile, none, none, true)) else Nil)
+    (gens ++ deltas ++ state).toDF("kind", "name", "seq", "n_rows", "live")
   }
 
   /** Checked compaction cadence: fold when the delta row mass exceeds
@@ -1545,14 +1536,16 @@ object CorpusStore {
       s"ratio must be > 0, got $maxDeltaToBaseRatio")
     // decide over the FOLDABLE set only (seq < foldBelowSeq): a delta
     // the fence excludes must neither trip a threshold nor be folded
-    val deltas = deltaPaths(spark, dir).filter(p => deltaSeqOf(p) < foldBelowSeq)
+    // one snapshot for the decision; the fold it triggers loads its own
+    // under the writer lease
+    val s = snapshot(spark, dir)
+    val deltas = s.live.filter(_.seq < foldBelowSeq).map(_.path)
     if (deltas.isEmpty) return "none"
     // driver-side footer reads (ParquetMeta): the cadence decision is
     // metadata-only by contract — paying a Spark job per count would
     // make "call it after every append" cost two stages when idle
     val deltaRows = graft.sources.ParquetMeta.rows(spark, deltas)
-    val baseRows = graft.sources.ParquetMeta.rows(spark,
-      Seq(currentBase(spark, dir)._2))
+    val baseRows = graft.sources.ParquetMeta.rows(spark, Seq(s.base.path))
     if (deltaRows > maxDeltaToBaseRatio * math.max(baseRows, 1L)) {
       compact(spark, dir, key, evolveSchema, clusterBy, clusterFiles,
         retainGenerations, minRetainMs, foldBelowSeq)

@@ -166,6 +166,67 @@ class CorpusStoreSpec extends SparkTestBase {
     assert(after.toSeq === got.toSeq)
   }
 
+  test("a compact committing while a reader loads its snapshot never pairs the old base with retired deltas") {
+    import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, Path}
+    val dir = freshDir("torn")
+    CorpusStore.init(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "fp"), dir)
+    CorpusStore.append(spark, dir, 1L, "id", Seq((2L, "B"), (9L, "z")).toDF("id", "fp"))
+    CorpusStore.append(spark, dir, 2L, "id", Seq((2L, "BB")).toDF("id", "fp"),
+      deleteKeys = Some(Seq(Tuple1(1L)).toDF("id")))
+    CorpusStore.append(spark, dir, 3L, "id", Seq((3L, "C")).toDF("id", "fp"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    val expect = rows(CorpusStore.read(spark, dir, "id"))
+    // compact's crash state 2: the fold is written but not committed
+    val local = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val gen1 = new Path(f"$dir/base_gen_${1L}%019d")
+    CorpusStore.read(spark, dir, "id").write.parquet(gen1.toString)
+    val success = new Path(gen1, "_SUCCESS")
+    assert(local.delete(success, false))
+    val marks = local.listStatus(new Path(dir)).map(_.getPath)
+      .filter(_.getName.startsWith("delta_")).sortBy(_.getName).toSeq
+      .map(new Path(_, "_folded"))
+    // the rest of that compact, in its own order: commit, then ascending marks
+    val steps: Seq[() => Unit] = (() => local.create(success, true).close()) +:
+      marks.map(m => () => {
+        val out = local.create(m, true)
+        try out.write("1".getBytes("UTF-8")) finally out.close()
+      })
+    // `local`, running the remaining steps once k FS calls of the load are
+    // done: all at once, or (stride) one per later call
+    class Interleaved(k: Int, stride: Boolean) extends FilterFileSystem(local) {
+      var calls = 0
+      private var pending = steps
+      def finish(): Unit = { pending.foreach(_()); pending = Nil }
+      private def tick(): Unit = {
+        if (calls >= k && pending.nonEmpty) {
+          val n = if (stride) 1 else pending.size
+          pending.take(n).foreach(_())
+          pending = pending.drop(n)
+        }
+        calls += 1
+      }
+      override def listStatus(p: Path): Array[FileStatus] = { tick(); super.listStatus(p) }
+      override def getFileStatus(p: Path): FileStatus = { tick(); super.getFileStatus(p) }
+      override def open(p: Path, n: Int) = { tick(); super.open(p, n) }
+    }
+    val calls = { val f = new Interleaved(Int.MaxValue, false)
+      CorpusStore.Snapshot.load(f, dir); f.calls }
+    assert(calls == 1 + marks.size + 1, "one listing, one probe per marker")
+    for (k <- 0 to calls; stride <- Seq(false, true)) {
+      (success +: marks).foreach(local.delete(_, false))
+      val f = new Interleaved(k, stride)
+      val s = CorpusStore.Snapshot.load(f, dir)
+      f.finish() // the compact completes before the reader's plan runs
+      // the two ends of the loop see the two whole states
+      if (k == 0 && !stride) assert(s.base.num == 1L && s.live.isEmpty)
+      if (k == calls) assert(s.base.num == 0L && s.live.size == marks.size)
+      assert(rows(CorpusStore.readSnapshot(spark, s, "id")) === expect,
+        s"snapshot loaded with the compact landing after FS call $k " +
+          s"(stride=$stride): base ${s.base.name}, live ${s.live.map(_.name)}")
+    }
+  }
+
   test("a fold committed before marking its deltas re-resolves them idempotently; next compact purges") {
     val dir = freshDir("crashpost")
     CorpusStore.init(Seq((1L, "a"), (2L, "b")).toDF("id", "fp"), dir)
