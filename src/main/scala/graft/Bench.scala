@@ -19,6 +19,14 @@ object Loadavg {
 
 object Bench {
 
+  /** A crashed query's name on the JSON line: `class: message`, first
+    * line of the message only, cut to 160 characters. */
+  private[graft] def crashName(e: Throwable): String = {
+    val msg = Option(e.getMessage).map(_.linesIterator.nextOption().getOrElse("")).getOrElse("")
+    val full = if (msg.isEmpty) e.getClass.getName else s"${e.getClass.getName}: $msg"
+    if (full.length <= 160) full else full.take(157) + "..."
+  }
+
   /** Entry-load gate: a bench that STARTS under ambient load measures
     * the neighbors, not the code — two rounds running, the headline
     * artifact was captured at load and had to be self-flagged noisy.
@@ -139,10 +147,10 @@ object Bench {
         val t0 = System.nanoTime()
         // noop sink: fully materializes every output column (count() would
         // let Catalyst prune the projections away and flatter the numbers)
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-        (name, (System.nanoTime() - t0) / 1e9, ok)
+        val error =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+          catch { case e: Throwable => Some(crashName(e)) }
+        (name, (System.nanoTime() - t0) / 1e9, error)
       }
       // between passes (outside every per-query timer): drop dead
       // checkpoint blocks and let the ContextCleaner reap dead shuffle
@@ -154,18 +162,22 @@ object Bench {
     }
     // per-query min over the passes where the query succeeded; "failed"
     // only when it crashed in EVERY pass (same policy as benchgate's
-    // multi-artifact merge). An intermittent crash converts to a valid
-    // timing but must not do so silently — say so on stderr.
+    // multi-artifact merge), named in "errors" by its last crash. An
+    // intermittent crash converts to a valid timing but must not do so
+    // silently — say so, and why, on stderr.
     val results = names.map { case (name, _) =>
       val runs = passes.map(_._2.find(_._1 == name).get)
-      val okRuns = runs.filter(_._3)
+      val okRuns = runs.filter(_._3.isEmpty)
+      val lastError = runs.flatMap(_._3).lastOption
       if (okRuns.nonEmpty && okRuns.size < runs.size)
         System.err.println(s"note: $name crashed in " +
-          s"${runs.size - okRuns.size}/${runs.size} passes; " +
+          s"${runs.size - okRuns.size}/${runs.size} passes (${lastError.get}); " +
           "reporting the min of its successful passes")
       if (okRuns.isEmpty) (name, 0.0, false)
       else (name, okRuns.map(_._2).min, true)
     }
+    val crashed = results.collect { case (k, _, false) => k }.toSet
+    val errors = passes.last._2.collect { case (k, _, Some(e)) if crashed(k) => k -> e }.toMap
     // a crashed query must not masquerade as a valid timing: report null
     // (unambiguous to any consumer summing the map) and list it in "failed"
     def fmt(v: Double, dec: Int): String =
@@ -207,7 +219,10 @@ object Bench {
       val qs = entries.map { case (k, v, ok) =>
         "\"" + k + "\":" + (if (ok) fmt(v, 3) else "null") }.mkString("{", ",", "}")
       val om = if (omitted > 0) s""","omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs$om,"failed":$failed,"sf":"$sfDir"$extras,"loadavg_1m":${fmt(load1, 2)},"loadavg_5m":${fmt(load5, 2)},"loadavg_end_1m":${fmt(endL1, 2)},"loadavg_end_5m":${fmt(endL5, 2)}}"""
+      val errs = entries.collect { case (k, _, false) =>
+        SparkEntry.jsonString(k) + ":" + SparkEntry.jsonString(errors(k)) }
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs$om,"failed":$failed,"errors":$errs,"sf":"$sfDir"$extras,"loadavg_1m":${fmt(load1, 2)},"loadavg_5m":${fmt(load5, 2)},"loadavg_end_1m":${fmt(endL1, 2)},"loadavg_end_5m":${fmt(endL5, 2)}}"""
     }
     // The consumer captures only the LAST ~2000 bytes of stdout (the r5
     // artifact has parsed:null because the 67-query full-precision line

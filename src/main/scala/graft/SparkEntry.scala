@@ -49,17 +49,20 @@ object SparkEntry {
     * correctness. */
   def oracleJson(names: Option[Set[String]] = None,
       dir: Option[String] = None): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val all = oracleSqlFor(dir)
     val m = names.fold(all)(ns => all.filter(kv => ns(kv._1)))
-    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    m.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
   }
+
+  /** A JSON string literal: escapes backslash, quote and every control
+    * character. Used by the oracle JSON and Bench's crash names. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

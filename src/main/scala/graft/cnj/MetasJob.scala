@@ -243,10 +243,17 @@ object MetasJob {
     * for caching, so a cached aggregate keeps the full
     * `coalescePartitions.initialPartitionNum` width (512 under
     * [[graft.GraftSession]]) and every later action and sort pass runs
-    * that many empty tasks. */
+    * that many empty tasks.
+    *
+    * The frame is ONE partition (`coalesce(1)` over the local rows).
+    * Sorting a single partition needs no range exchange, so the
+    * `orderBy` in [[stringlyOutput]] and [[chartData]] plans none: the
+    * ResumoMetas write and the chart each run as one job instead of
+    * three (range-bound sampling, shuffle map, sort and write). A few
+    * dozen rows gain nothing from more partitions. */
   def localSummary(typed: DataFrame): DataFrame = {
     import scala.jdk.CollectionConverters._
-    typed.sparkSession.createDataFrame(typed.collect().toSeq.asJava, typed.schema)
+    typed.sparkSession.createDataFrame(typed.collect().toSeq.asJava, typed.schema).coalesce(1)
   }
 
   /** Mirrors the reference's once-per-branch fallback warning

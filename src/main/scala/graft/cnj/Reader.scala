@@ -1,11 +1,13 @@
 package graft.cnj
 
-import java.io.File
+import java.io.{File, FileNotFoundException}
 import java.nio.charset.StandardCharsets
 
 import scala.util.Using
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ListedTextScan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
@@ -18,8 +20,8 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * every surviving row lands on the canonical CNJ column set with nulls
   * for the gaps.
   *
-  * Execution shape ([[readDir]]): ONE `spark.read.textFile` scan over the
-  * whole directory plus one narrow parse stage keyed by
+  * Execution shape ([[readDir]]): one driver listing, then ONE text scan
+  * over every court file plus one narrow parse stage keyed by
   * `input_file_name()` against a broadcast header map. The obvious
   * alternative — a 90-way union of per-file CSV scans, each with its own
   * projection — was measured and rejected: 90 distinct scan+project
@@ -33,8 +35,24 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * (per-file column permutation), and the plan collapses to scan →
   * parse → downstream, one codegen unit, one relation, at any file count.
   *
+  * The listing: the driver lists the directory ONCE with the
+  * Hadoop `FileSystem` and reads each `.csv` file's header; Spark then
+  * gets those file statuses as they are (`ListedTextScan`), so its file
+  * index has nothing left to fetch and no listing job runs at any file
+  * count. Handing `spark.read.textFile` the path list instead makes
+  * Spark stat every path again, and above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+  * it does that in a Spark job with one task per file: for the 90-file
+  * corpus, 90 of the 121 tasks of a `runAll` and ~1 s of a ~3 s warm run
+  * on 4 cores, spent learning what the driver already knew. Two other
+  * ways out were rejected. Raising that threshold in
+  * [[graft.GraftSession]] would change every other multi-path read
+  * (store deltas, pruned scans) too. Reading the directory as one root
+  * path would change what is read: Spark's own listing recurses into
+  * subdirectories and infers `k=v` partition columns from their names.
+  *
   * Files the reference skips contribute nothing: a file missing the
-  * identity columns is dropped from the path list; a header-only file
+  * identity columns is dropped from the file list; a header-only file
   * contributes only its header line, which the parser drops.
   *
   * Scale note: the 100 TB path is the same plan over files landed once
@@ -142,7 +160,8 @@ object Reader {
     * Versao_Np.py:157-159). Same parser as [[readDir]], scoped to one
     * file. */
   def readFile(spark: SparkSession, path: String): Option[DataFrame] =
-    fileSpec(path).map(spec => parsed(spark, Map(normalizePath(path) -> spec), Seq(path)))
+    fileSpec(path).map(spec =>
+      parsedFrom(spark, spark.read.textFile(path).toDF("value"), Map(normalizePath(path) -> spec)))
 
   /** `input_file_name()` yields a URL-ENCODED URI ("file:/a/b%20c.csv" —
     * Spark's FileScanRDD publishes `PartitionedFile.urlEncodedPath`);
@@ -165,12 +184,6 @@ object Reader {
         noScheme.substring(i)
     }
 
-  /** The single-scan parse plan: text source over `paths`, one
-    * flatMap-style partition pass resolving each row's file spec from
-    * the broadcast map. */
-  private def parsed(spark: SparkSession, specs: Map[String, FileSpec], paths: Seq[String]): DataFrame =
-    parsedFrom(spark, spark.read.textFile(paths: _*).toDF("value"), specs)
-
   /** Parse stage over any text frame (batch or stream) carrying a
     * `value` line column from a file source — `input_file_name()`
     * resolves per row in both cases. */
@@ -189,16 +202,33 @@ object Reader {
     text.select(explode(arr).as("__r")).select(col("__r.*"))
   }
 
+  /** The directory's court files and their parse specs, from ONE
+    * non-recursive driver listing: files named `*.csv` (hidden-named
+    * ones included), sorted by path, and only those whose header yields
+    * a [[FileSpec]]. Specs are keyed by the file's absolute path, which
+    * is what the parse stage decodes from `input_file_name()`. */
+  private def courtFiles(spark: SparkSession, dir: String): (Seq[FileStatus], Map[String, FileSpec]) = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing directory lists as empty; listing a plain file returns
+    // the file itself, which is not a directory entry either
+    val listed = try fs.listStatus(root).toSeq catch { case _: FileNotFoundException => Seq.empty }
+    val qualifiedRoot = fs.makeQualified(root)
+    val files = listed
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".csv") && f.getPath != qualifiedRoot)
+      .map(f => f -> f.getPath.toUri.getPath).sortBy(_._2)
+      .flatMap { case (f, p) => fileSpec(p).map(spec => (f, p -> spec)) }
+    require(files.nonEmpty, s"no readable CNJ csv files under $dir")
+    (files.map(_._1), files.map(_._2).toMap)
+  }
+
   /** All court files in a directory as one canonical-schema DataFrame:
-    * one text scan, one parse stage, regardless of file count. */
+    * one text scan, one parse stage, regardless of file count. The scan
+    * is built from the statuses [[courtFiles]] listed, so Spark lists
+    * nothing again. */
   def readDir(spark: SparkSession, dir: String): DataFrame = {
-    // listFiles() returns null (not empty) for a missing/unreadable dir
-    val files = Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
-      .filter(f => f.isFile && f.getName.endsWith(".csv"))
-      .map(_.getPath).sorted
-    val specs = files.flatMap(p => fileSpec(p).map(normalizePath(p) -> _)).toMap
-    require(specs.nonEmpty, s"no readable CNJ csv files under $dir")
-    parsed(spark, specs, files.filter(p => specs.contains(normalizePath(p))).toIndexedSeq)
+    val (files, specs) = courtFiles(spark, dir)
+    parsedFrom(spark, ListedTextScan.frame(spark, files), specs)
   }
 
   /** The SURVEY §2.9 north star: the same tolerant ingest as a
@@ -211,11 +241,7 @@ object Reader {
     * new schemas — header discovery is driver-side I/O, not state). */
   def readDirStream(spark: SparkSession, dir: String,
       options: Map[String, String] = Map.empty): DataFrame = {
-    val files = Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
-      .filter(f => f.isFile && f.getName.endsWith(".csv"))
-      .map(_.getPath).sorted
-    val specs = files.flatMap(p => fileSpec(p).map(normalizePath(p) -> _)).toMap
-    require(specs.nonEmpty, s"no readable CNJ csv files under $dir")
+    val (_, specs) = courtFiles(spark, dir)
     // options pass through to the file source (e.g. maxFilesPerTrigger
     // to bound per-microbatch work — the incremental-ingest knob)
     parsedFrom(spark, spark.readStream.options(options).text(s"$dir/*.csv"), specs)

@@ -16,6 +16,16 @@ class HarnessContractSpec extends SparkTestBase {
     assert(qs.forall(_.matches("[a-z0-9_]+")))
   }
 
+  test("Bench names a crashed query as class: message, escaped for its JSON line") {
+    val e = new IllegalStateException("bad \"quote\"\nsecond line")
+    assert(Bench.crashName(e) == "java.lang.IllegalStateException: bad \"quote\"")
+    assert(SparkEntry.jsonString(Bench.crashName(e)) ==
+      "\"java.lang.IllegalStateException: bad \\\"quote\\\"\"")
+    assert(Bench.crashName(new RuntimeException("x" * 500)).length == 160)
+    assert(Bench.crashName(new NullPointerException) == "java.lang.NullPointerException")
+    assert(SparkEntry.jsonString("a\\b\u0001") == "\"a\\\\b\\u0001\"")
+  }
+
   test("every registered query executes at sf0.001") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try { fn(spark, "/root/testdata/sf0.001").count(); None }

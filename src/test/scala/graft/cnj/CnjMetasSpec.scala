@@ -120,44 +120,34 @@ class CnjMetasSpec extends SparkTestBase {
   }
 
   test("runAll under the shipped AQE width schedules fewer than 512 tasks") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler._
     // GraftSession's initial AQE width: a plan AQE may not coalesce (a
     // cached one) pays it as tasks in every stage that reads it
     val confs = Seq("spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "512")
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    val marker = "graft.test.taskcount.marker"
-    val tasks = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      @volatile private var markerJob = -1
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(marker) != null)) markerJob = j.jobId
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (markerJob < 0) tasks.incrementAndGet()
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (j.jobId == markerJob) drained.countDown()
-    }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      MetasJob.runAll(spark, resourcePath("cnj/dados"), freshOut("tasks"))
-      // the listener bus is asynchronous but ordered: once the marker
-      // job's end arrives, every task of runAll has been counted
-      spark.sparkContext.setLocalProperty(marker, "1")
-      try spark.sparkContext.parallelize(Seq(0), 1).count()
-      finally spark.sparkContext.setLocalProperty(marker, null)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      saved.foreach {
+    val tasks =
+      try countJobsAndTasks(MetasJob.runAll(spark, resourcePath("cnj/dados"), freshOut("tasks")))._3
+      finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
+    assert(tasks > 0)
+    assert(tasks < 512, s"runAll scheduled $tasks tasks")
+  }
+
+  test("the per-court summary is one partition and its sinks sort without a shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val summary = MetasJob.localSummary(
+      MetasJob.resumoTyped(spark, Reader.readDir(spark, resourcePath("cnj/dados"))))
+    assert(summary.rdd.getNumPartitions == 1)
+    val res = MetasJob.stringlyOutput(summary)
+    Seq(res, MetasJob.chartData(res)).foreach { df =>
+      df.collect() // runs the plan, so an adaptive one shows its final shape
+      val plan = df.queryExecution.executedPlan
+      val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.isEmpty, plan.toString)
     }
-    assert(tasks.get() > 0)
-    assert(tasks.get() < 512, s"runAll scheduled ${tasks.get()} tasks")
   }
 }

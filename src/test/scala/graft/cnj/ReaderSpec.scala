@@ -110,4 +110,52 @@ class ReaderSpec extends SparkTestBase {
     assert(r.getAs[Double]("julgm2_a") == 5.0)
     assert(r.isNullAt(df.columns.indexOf("julgados_2025")))
   }
+
+  test("readDir over more than 32 files lists once on the driver: no Spark job, same rows as readFile") {
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // paths a path-list read would stat the files in a listing job
+    val dir = Files.createTempDirectory("readerspec-listing")
+    val header = "sigla_tribunal,ramo_justica,julgados_2025,casos_novos_2025"
+    (1 to 40).foreach { i =>
+      writeCsv(dir, f"teste_T$i%02d.csv", Seq(header,
+        s"T$i,Justiça Estadual,$i,${i + 1}", s"T$i,Justiça Estadual,1.5,"))
+    }
+    // hidden-named files carry valid headers: the driver listing keeps
+    // them, and Spark's file index then skips their rows, as it does
+    // for a readFile of one of them
+    writeCsv(dir, "_under.csv", Seq(header, "UU,Justiça do Trabalho,3,4"))
+    writeCsv(dir, ".dot.csv", Seq(header, "DT,Justiça Federal,5,6"))
+    writeCsv(dir, "teste_nokeys.csv", Seq("julgados_2025,casos_novos_2025", "1,2"))
+    writeCsv(dir, "teste_headeronly.csv", Seq("sigla_tribunal,ramo_justica,julgm2_a"))
+    // non-ASCII only where this JVM's file-name encoding can spell it;
+    // a literal '%' exercises the same URL-decoding of input_file_name()
+    val special =
+      if (java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+          .newEncoder().canEncode("ã")) "teste TRE São.csv"
+      else "teste TRE S%C3%A3o.csv"
+    writeCsv(dir, special, Seq("ramo_justica,sigla_tribunal,julgados_2025",
+      "Justiça Eleitoral,SP,9"))
+    // neither is a court file of this directory
+    writeCsv(dir, "notes.txt", Seq(header, "XX,Justiça Estadual,1,1"))
+    Files.createDirectory(dir.resolve("sub"))
+    writeCsv(dir.resolve("sub"), "teste_SUB.csv", Seq(header, "SB,Justiça Estadual,1,1"))
+
+    val (df, jobs, _) = countJobsAndTasks(Reader.readDir(spark, dir.toString))
+    assert(jobs == 0, s"readDir scheduled $jobs Spark job(s)")
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val csvs = new java.io.File(dir.toString).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".csv")).map(_.getPath).sorted
+    val perFile = csvs.flatMap(Reader.readFile(spark, _)).toSeq
+    assert(perFile.size == 44) // every .csv file but the one without identity columns
+    val got = rows(df)
+    assert(got == rows(perFile.reduce(_ union _)))
+    val courts = df.select("sigla_tribunal").distinct().collect().map(_.getString(0)).toSet
+    assert((1 to 40).map(i => s"T$i").toSet.subsetOf(courts))
+    assert(courts.contains("SP"))
+    assert(!courts.contains("XX") && !courts.contains("SB"))
+    // neither a court file nor a missing directory lists as a directory
+    intercept[IllegalArgumentException](Reader.readDir(spark, dir.resolve("teste_T01.csv").toString))
+    intercept[IllegalArgumentException](Reader.readDir(spark, dir.resolve("missing").toString))
+  }
 }
