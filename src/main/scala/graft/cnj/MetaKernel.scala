@@ -22,19 +22,27 @@ import org.apache.spark.sql.types.DoubleType
 object MetaKernel {
 
   private def sumc(c: String): Column = sum(col(c)).as(s"sum_$c")
-  private def cntc(c: String): Column = count(col(c)).as(s"cnt_$c")
 
-  /** Aggregate columns (sums + non-null counts) needed by every meta —
-    * feed these into one groupBy(...).agg(...) call. */
-  def aggColumns: Seq[Column] = {
-    val cols = CnjSchema.numericCols
-    cols.map(sumc) ++ cols.map(cntc)
-  }
+  /** Aggregate columns (one sum per numeric column) needed by every
+    * meta — feed these into one groupBy(...).agg(...) call. */
+  def aggColumns: Seq[Column] = CnjSchema.numericCols.map(sumc)
 
-  private def present(c: String): Column = col(s"cnt_$c") > 0
+  /** The column has >= 1 non-null value in the group. A double `sum`
+    * stays null until its first non-null input and is non-null from
+    * then on, so its null-ness says what a non-null `count` would; one
+    * aggregate per column instead of two halves the aggregate the
+    * planner, codegen and every partial-aggregate row pay for. */
+  private def present(c: String): Column = col(s"sum_$c").isNotNull
   private def s(c: String): Column = col(s"sum_$c")
 
-  /** calcular_meta(j, d, s, factor) over the pre-aggregated sums/counts. */
+  /** The guarded value with NaN rendered as NA (null): pandas keeps a
+    * NaN ratio through round(), and it stringifies to 'NA'. `nanvl`
+    * keeps null as null, so this is `value` when non-null and not NaN,
+    * referencing `value` once (a `when(value.isNotNull && !isnan(value),
+    * value)` triples the expression tree the planner walks). */
+  private def nanAsNull(value: Column): Column = nanvl(value, lit(null).cast(DoubleType))
+
+  /** calcular_meta(j, d, s, factor) over the pre-aggregated sums. */
   def metaValue(spec: CnjSchema.MetaSpec, factor: Column): Column = {
     val num = s(spec.j)
     val den = s(spec.d) - s(spec.s)
@@ -43,8 +51,7 @@ object MetaKernel {
       present(spec.j) && present(spec.d) && present(spec.s) &&
         !isnan(num) && den =!= 0 && factor.isNotNull && !isnan(factor),
       raw)
-    // pandas: a NaN ratio survives round() and is stringified to 'NA'.
-    when(value.isNotNull && !isnan(value), value)
+    nanAsNull(value)
   }
 
   /** Meta 1 (Versao_Np.py:171-208): denominator adds optional
@@ -58,7 +65,7 @@ object MetaKernel {
       present("julgados_2025") && present("casos_novos_2025") && present("suspensos_2025") &&
         !isnan(num) && den =!= 0,
       raw)
-    when(value.isNotNull && !isnan(value), value)
+    nanAsNull(value)
   }
 
   /** STJ-only metas + suppression: when meta{8,10}_stj computed non-NA,

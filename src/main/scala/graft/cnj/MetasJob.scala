@@ -2,7 +2,7 @@ package graft.cnj
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 /** The end-to-end Metas Nacionais pipeline — the reference's whole program
   * (/root/reference/Versao_Np.py, Versao_P.py) as one declarative Spark
@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.StringType
 object MetasJob {
 
   /** The shared front half of [[resumoTyped]] and [[debugTrace]]: one
-    * HashAggregate keyed on the court (sums + non-null counts of every
-    * numeric column) plus the broadcast factor-dimension join. */
+    * HashAggregate keyed on the court (the sum of every numeric column)
+    * plus the broadcast factor-dimension join. */
   private def aggregatedWithFactors(spark: SparkSession, data: DataFrame): DataFrame = {
     val aggregated = data
       .groupBy(col("sigla_tribunal"), col("ramo_justica"))
@@ -58,9 +58,15 @@ object MetasJob {
 
   /** ResumoMetas with the reference's stringly output contract
     * (Versao_Np.py:231-242): every cell a string, nulls rendered 'NA',
-    * columns ordered principal -> sorted metas -> sorted _stj -> rest. */
+    * columns ordered principal -> sorted metas -> sorted _stj -> rest.
+    *
+    * Rendered exactly as [[runAll]] renders it: off the driver-local
+    * per-court summary ([[localSummary]]), so the aggregate runs when
+    * this is called and the returned frame sorts one local partition.
+    * One plan for both entry points means a caller that warms up on
+    * `resumo` has compiled the rendering `runAll` executes. */
   def resumo(spark: SparkSession, inDir: String): DataFrame =
-    stringlyOutput(resumoTyped(spark, Reader.readDir(spark, inDir)))
+    stringlyOutput(localSummary(resumoTyped(spark, Reader.readDir(spark, inDir))))
 
   /** Python str() renders doubles in plain decimal up to 1e16 where
     * Spark's string cast flips to scientific notation at 1e7. Metas are
@@ -154,7 +160,6 @@ object MetasJob {
     * One filtered row off the same aggregate as resumoTyped — the trace
     * shows exactly the numbers the pipeline used. */
   def debugTrace(spark: SparkSession, data: DataFrame, sigla: String): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
     def s(c: String) = col(s"sum_$c")
     def entry(name: String, num: Column, den: Column, fac: Column, value: Column) =
       struct(lit(name).as("meta"), num.cast(DoubleType).as("numerator"),
@@ -181,10 +186,14 @@ object MetasJob {
       .select(col("sigla_tribunal"), col("ramo_justica"), col("t.*"))
   }
 
-  /** Chart feed (S7/O1/F3/F4): courts with numeric meta1, sorted desc. */
+  /** Chart feed (S7/O1/F3/F4): courts with numeric meta1, sorted desc.
+    * The cast is built with the Column API, not `expr("try_cast(...)")`:
+    * the same TRY-mode cast, without a trip through the SQL parser, whose
+    * first use in a JVM costs a few hundred ms of driver time (the rest of the
+    * job never parses SQL). */
   def chartData(resumo: DataFrame): DataFrame =
     resumo
-      .withColumn("meta1_val", expr("try_cast(meta1 AS DOUBLE)"))
+      .withColumn("meta1_val", col("meta1").try_cast(DoubleType))
       .na.drop(Seq("meta1_val"))
       .select(col("sigla_tribunal"), col("meta1_val"))
       .orderBy(col("meta1_val").desc, col("sigla_tribunal"))
