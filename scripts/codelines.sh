@@ -1,0 +1,10 @@
+#!/bin/sh
+# Code lines (not blank, not comment) per Scala file, then the total.
+# A line counts unless it is blank, starts with //, or lies in a /* */
+# or scaladoc block that opens at the start of a line.
+#   sh scripts/codelines.sh src/main/scala/graft/operators/Dedup.scala
+#   sh scripts/codelines.sh $(find src/main -name '*.scala')
+for f in "$@"; do
+  awk '/^[ \t]*$/ {next} /^[ \t]*\/\*/ {c=1} c {if (/\*\//) c=0; next}
+       /^[ \t]*\/\// {next} {n++} END {printf "%6d %s\n", n, FILENAME}' "$f"
+done | awk '{print; t += $1} END {printf "%6d total\n", t}'

@@ -29,10 +29,13 @@ object VectorFunctions {
   }
 
   /** Cosine similarity; null on zero norms instead of NaN. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = vecDot(a, b)
-    val n = vecNorm(a) * vecNorm(b)
-    when(n =!= 0.0, d / n)
+  def cosine(a: Column, b: Column): Column = cosine(a, b, vecNorm(a), vecNorm(b))
+
+  /** [[cosine]] over precomputed norms: a pair loop whose norms were
+    * computed once per vector pays a single dot product per pair. */
+  def cosine(a: Column, b: Column, normA: Column, normB: Column): Column = {
+    val n = normA * normB
+    when(n =!= 0.0, vecDot(a, b) / n)
   }
 
   /** Random-hyperplane LSH signature (nPlanes sign bits packed in a long).

@@ -63,10 +63,7 @@ object Compute {
           "stages under AQE (they would run again in the real query). " +
           "Repartition explicitly at the call site instead.")
     }
-    val budget = df.sparkSession.sparkContext.defaultParallelism
-    // .rdd plans the physical query to read its partitioning; for the
-    // exchange-free frames guaranteed above, no job runs
-    if (df.rdd.getNumPartitions < budget) df.repartition(budget) else df
+    budgetFloor(df)
   }
 
   /** [[toComputeBudget]] for OPERATOR-INTERNAL use on caller-supplied
@@ -77,8 +74,14 @@ object Compute {
     * sites. Same floor semantics: never narrows a wide frame. */
   def toComputeBudgetIfScan(df: DataFrame): DataFrame =
     if (firstExchangeOp(df.queryExecution.analyzed).isDefined) df
-    else {
-      val budget = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < budget) df.repartition(budget) else df
-    }
+    else budgetFloor(df)
+
+  /** Round-robin an exchange-free frame up to the session parallelism;
+    * a frame already at or above it passes through. */
+  private def budgetFloor(df: DataFrame): DataFrame = {
+    val budget = df.sparkSession.sparkContext.defaultParallelism
+    // .rdd plans the physical query to read its partitioning; for the
+    // exchange-free frames both callers guarantee, no job runs
+    if (df.rdd.getNumPartitions < budget) df.repartition(budget) else df
+  }
 }

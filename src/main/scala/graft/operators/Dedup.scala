@@ -12,6 +12,10 @@ import graft.functions.{HashFunctions, TextFunctions}
   * inverted index) so the quadratic step only ever runs inside buckets —
   * the property that keeps near-dedup feasible at 100 TB. No driver-side
   * loops; everything is one lazy plan.
+  *
+  * The shared blocked-pair shape (in-block self-join, band candidates,
+  * shared-key counts, score tail) lives in [[BlockedPairs]]; each family
+  * here is a key generator + a pin choice + a verifier.
   */
 object Dedup {
 
@@ -112,7 +116,7 @@ object Dedup {
   def minhashPairs(docs: DataFrame, threshold: Double,
       numHashes: Int = 64, bands: Int = 16,
       maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
-    val rowsPerBand = numHashes / bands
+    val rowsPerBand = BlockedPairs.rowsPerBand(numHashes, bands)
     val sh = shingled(docs)
     val withSig = sh.withColumn("sig",
       HashFunctions.minhashSignature(col("sh"), numHashes))
@@ -122,16 +126,8 @@ object Dedup {
     // for both the wide-shingle and the slim band-row variants: the
     // materialization barrier costs more than the second minhash fold),
     // and the verify step already pins its candidate-pruned slice.
-    val bandRows = withSig
-      .select(col("doc_id"), explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val a = bandRows.as("a")
-    val b = bandRows.as("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val candidates = BlockedPairs.bandCandidates(withSig, "doc_id",
+      bandKeys(col("sig"), bands, rowsPerBand), "doc_a", "doc_b")
     // verifyJaccard materializes the candidate set, so the band self-join
     // is executed once, not recomputed per broadcast
     verifyJaccard(candidates, sh, threshold, maxCandidates = maxCandidates)
@@ -190,8 +186,7 @@ object Dedup {
         "the set is genuinely post-blocking.")
     val small = n <= maxBroadcastCandidates
     val shSlim =
-      if (!small) sh
-      else if (shPinned) sh
+      if (!small || shPinned) sh
       // shPinned: the caller's sh is ALREADY a materialized checkpoint
       // (winnowingPairs' base), so the member prune below would buy
       // nothing it exists for — its checkpoint bounds RE-COMPUTATION of
@@ -216,12 +211,13 @@ object Dedup {
     val withA = sa.join(hinted(cand), "doc_a")
     sb.join(withA, "doc_b")
       .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType))
-      .withColumn("jac_raw",
-        col("common") / (size(col("sh_a")) + size(col("sh_b")) - col("common")))
-      .filter(col("jac_raw") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jac_raw"), 4).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+      .withColumn("jac_raw", jaccard(col("common"), size(col("sh_a")), size(col("sh_b"))))
+      .transform(BlockedPairs.scoreTail(_, "doc_a", "doc_b", "jac_raw", threshold, 4, "jaccard"))
   }
+
+  /** Jaccard from counts: |A ∩ B| / (|A| + |B| - |A ∩ B|). */
+  private def jaccard(common: Column, sizeA: Column, sizeB: Column): Column =
+    common.cast(DoubleType) / (sizeA + sizeB - common)
 
   /** Smallest agree-subset size m (see [[simhashPairs]]) whose block-key
     * space keeps expected candidates ~linear in the corpus. A key of
@@ -294,42 +290,11 @@ object Dedup {
       .map { case (s, i) => xxhash64((lit(i) +: s.map(cval)): _*) }
     val keyed = base.select(col("doc_id"), col("sim"),
       explode(array(keys: _*)).as("bkey"))
-    val a = keyed.as("a")
-    val b = keyed.as("b")
-    a.join(b, col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.sim ^ b.sim)").cast(LongType).as("hamming"))
+    BlockedPairs.inBlock(keyed, Seq("bkey"), "doc_id", "doc_a", "doc_b",
+        bit_count(col("a.sim").bitwiseXOR(col("b.sim"))).cast(LongType).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** Document-frequency cut for an inverted index: drop index keys
-    * present in more than maxDf documents before any self-join. One
-    * key shared by d documents emits d^2/2 join rows, so a single
-    * boilerplate shingle (license header, navigation chrome) turns an
-    * index self-join quadratic — the classic 100 TB skew bomb. The cut
-    * bounds every posting list at maxDf (worst-case join fan-out
-    * maxDf^2/2 per key) at the cost of the recall contract stated on the
-    * callers. Both the frequency aggregation and the rejoin hash on the
-    * same key, so this costs one extra well-partitioned pass. */
-  private def dfCut(inv: DataFrame, key: String, maxDf: Int,
-      minDf: Int = 1): DataFrame = {
-    require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
-    if (maxDf == Int.MaxValue && minDf <= 1) inv // nothing can be cut
-    else {
-      // at maxDf == Int.MaxValue only the minDf prune applies: __df is a
-      // Long, and comparing it against the Int sentinel would silently
-      // drop a key with df > 2^31-1 — exactly the theoretical-scale key
-      // the "exact regardless of corpus df shape" default contract keeps
-      val keep =
-        if (maxDf == Int.MaxValue) col("__df") >= minDf
-        else col("__df") <= maxDf && col("__df") >= minDf
-      val dfs = inv.groupBy(col(key)).agg(count(lit(1)).as("__df"))
-        .filter(keep)
-        .drop("__df")
-      inv.join(dfs, key)
-    }
   }
 
   /** Winnowing-based near-dup candidates: inverted index over the
@@ -374,21 +339,10 @@ object Dedup {
         HashFunctions.winnowing(col("toks"), n, w, portableHash).as("fp"))
       .filter(size(col("sh")) > 0)
       .transform(Compute.checkpointSer) // wide shingle+fp arrays: serialized storage (OOM'd an 8g heap deserialized at sf~1)
-    // minDf = 2 is output-invariant for candidate generation: a SHARED
-    // fingerprint has df >= 2 by definition, so df = 1 postings cannot
-    // contribute to any pair — and on a Heaps-law corpus they are the
-    // overwhelming majority of the index (measured at 5M docs: 96% of
-    // 103M postings were unique; cutting them shrank the self-join input
-    // ~25x and the candidate stage 190 s -> seconds)
-    val inv = dfCut(
-      base.filter(size(col("fp")) > 0).select(col("doc_id"), explode(col("fp")).as("f")),
-      "f", maxDf, minDf = 2)
-    val a = inv.as("a")
-    val b = inv.as("b")
-    val candidates = a.join(b,
-        col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
+    val inv = base.filter(size(col("fp")) > 0)
+      .select(col("doc_id"), explode(col("fp")).as("f"))
+    val candidates = BlockedPairs.sharedKeyCounts(inv, "f", "doc_id", maxDf,
+        "doc_a", "doc_b", "shared")
       .filter(col("shared") >= minShared)
       .select(col("doc_a"), col("doc_b"))
     verifyJaccard(candidates, base.select(col("doc_id"), col("sh")), threshold,
@@ -442,26 +396,13 @@ object Dedup {
     // emits one row per array entry, duplicates included) — derived from
     // the pinned longs instead of re-shingling the corpus per join side
     val sizes = grams0.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // minDf = 2: gram hashes appearing in ONE document cannot contribute
-    // to `common` (a shared gram has df >= 2), and per-doc set sizes are
-    // computed from the PRE-cut `sizes` aggregate above, so the cut is
-    // output-invariant — it only drops the (majority, on a Heaps-law
-    // corpus) unique-gram postings before the quadratic self-join
-    val grams = dfCut(grams0, "gram", maxDf, minDf = 2)
-    val a = grams.as("a")
-    val b = grams.as("b")
-    val common = a.join(b,
-        col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("common"))
-    common
+    // per-doc set sizes come from the PRE-cut `sizes` aggregate above, so
+    // the df cut's unique-gram prune is output-invariant here too
+    BlockedPairs.sharedKeyCounts(grams0, "gram", "doc_id", maxDf, "doc_a", "doc_b", "common")
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .withColumn("jac_raw",
-        col("common").cast(DoubleType) / (col("n_a") + col("n_b") - col("common")))
-      .filter(col("jac_raw") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jac_raw"), 4).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+      .withColumn("jac_raw", jaccard(col("common"), col("n_a"), col("n_b")))
+      .transform(BlockedPairs.scoreTail(_, "doc_a", "doc_b", "jac_raw", threshold, 4, "jaccard"))
   }
 
   /** Near-dup CLUSTERS from a pair list: connected components with
@@ -658,8 +599,8 @@ object Dedup {
       .groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .agg(
         max(col("df")).as("max_df"),
-        expr("percentile_approx(df, 0.99)").as("p99_df"),
-        expr("percentile_approx(df, 0.5)").as("p50_df"),
+        percentile_approx(col("df"), lit(0.99), lit(PercentileAccuracy)).as("p99_df"),
+        percentile_approx(col("df"), lit(0.5), lit(PercentileAccuracy)).as("p50_df"),
         count(lit(1)).as("n_grams"),
         // double product for the same overflow reason as pairMassStats
         (sum(col("df").cast("double") * col("df")) / 2).cast(LongType).as("fanout_uncut"))
@@ -686,9 +627,12 @@ object Dedup {
         // preflight exists to refuse — and a wrapped sum could slip under
         // the budget. Double never wraps; the final cast saturates at
         // Long.MaxValue, which correctly fails any budget.
-        sum(expr("CAST(sz AS DOUBLE) * (sz - 1) / 2")).cast(LongType).as("pair_mass"),
+        sum(col("sz").cast(DoubleType) * (col("sz") - 1) / 2).cast(LongType).as("pair_mass"),
         sum(col("sz")).cast(LongType).as("n_rows"),
         count(lit(1)).as("n_groups"),
         max(col("sz")).cast(LongType).as("max_group"),
-        expr("percentile_approx(sz, 0.99)").cast(LongType).as("p99_group"))
+        percentile_approx(col("sz"), lit(0.99), lit(PercentileAccuracy)).cast(LongType).as("p99_group"))
+
+  // the accuracy SQL's two-argument percentile_approx defaults to
+  private val PercentileAccuracy = 10000
 }

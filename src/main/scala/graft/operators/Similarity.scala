@@ -16,6 +16,13 @@ import graft.functions.VectorFunctions._
   * The LSH variant is the high-QPS scale path: 16 random-hyperplane sign
   * bits bucket the corpus; a query probes its bucket plus all buckets
   * within Hamming distance `probeRadius`, then scores only candidates.
+  *
+  * The pair families (semantic, tiled, banded, kNN graph) share their
+  * blocked-pair shape (in-block self-join, band candidates, pair-mass
+  * preflight, score tail) through [[BlockedPairs]]; each is a key
+  * generator + a pin choice + a verifier. [[nearDupPairs]] stays off that
+  * core on purpose: it is the independent reference the tiled path is
+  * tested against.
   */
 object Similarity {
 
@@ -67,13 +74,18 @@ object Similarity {
   def bruteForceTopK(embeddings: DataFrame, queryVecId: Long, k: Int): DataFrame = {
     val q = embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"))
-    embeddings.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= queryVecId)
+    cosineTopK(embeddings.crossJoin(broadcast(q)), queryVecId, k)
+  }
+
+  /** Query top-k tail: the candidate rows other than the query, scored
+    * by cosine against the broadcast query vector `q_emb`, best `k`
+    * first (ties to the smaller vec_id). */
+  private def cosineTopK(cands: DataFrame, queryVecId: Long, k: Int): DataFrame =
+    cands.filter(col("vec_id") =!= queryVecId)
       .select(col("vec_id"), col("label").cast(LongType).as("label"),
         round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)
-  }
 
   /** LSH-bucketed approximate top-k: candidates from multi-probe bucket
     * lookup, exact cosine only on candidates. */
@@ -88,13 +100,8 @@ object Similarity {
     import spark.implicits._
     val maskDf = masks.toDF("mask")
     val probes = q.crossJoin(broadcast(maskDf))
-      .select(col("q_emb"), expr("q_sig ^ mask").as("probe_sig"))
-    signed.join(broadcast(probes), col("sig") === col("probe_sig"))
-      .filter(col("vec_id") =!= queryVecId)
-      .select(col("vec_id"), col("label").cast(LongType).as("label"),
-        round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+      .select(col("q_emb"), col("q_sig").bitwiseXOR(col("mask")).as("probe_sig"))
+    cosineTopK(signed.join(broadcast(probes), col("sig") === col("probe_sig")), queryVecId, k)
   }
 
   /** XOR masks enumerating all signatures within Hamming distance r. */
@@ -225,15 +232,10 @@ object Similarity {
       .sortBy(-_._2).take(nProbe).map(_._1)
     val q = embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"))
-    embeddings
+    val probed = embeddings
       .withColumn("cluster", assignCluster(col("embedding"), cents))
       .filter(col("cluster").isin(probes.toIndexedSeq.map(Integer.valueOf): _*))
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label").cast(LongType).as("label"),
-        round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(probed.crossJoin(broadcast(q)), queryVecId, k)
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
@@ -291,31 +293,20 @@ object Similarity {
     // parallelism, and the checkpoint's partitioning is what every
     // downstream stage (the in-cell join) inherits.
     val assigned = Compute.toComputeBudgetIfScan(embeddings)
-      .withColumn("cluster", assignCluster(col("embedding"), cents))
-      .select(col("cluster"), col("vec_id"), col("embedding"))
+      .select(assignCluster(col("embedding"), cents).as("cluster"), col("vec_id"), col("embedding"))
       .transform(Compute.checkpointSer) // embedding arrays: serialized storage
-    val pm = Dedup.pairMassStats(assigned, col("cluster")).head()
-    if (!pm.isNullAt(0)) {
-      val (mass, nRows) = (pm.getLong(0), pm.getLong(1))
-      require(mass <= maxPairsPerRow * nRows,
-        s"semanticDupPairs preflight: predicted in-cell pair mass $mass over " +
-          s"$nRows rows exceeds the $maxPairsPerRow pairs/row budget " +
-          s"(cells=${pm.getLong(2)}, max cell=${pm.getLong(3)}, " +
-          s"p99 cell=${pm.getLong(4)}). The model has too few (or too " +
-          "skewed) cells for this corpus: derive it at constant cell size " +
-          "(scaledCellCount) or raise maxPairsPerRow to consciously accept " +
-          "the quadratic cost.")
+    BlockedPairs.requirePairMass(assigned, col("cluster"), maxPairsPerRow * _) { pm =>
+      s"semanticDupPairs preflight: predicted in-cell pair mass ${pm.getLong(0)} over " +
+        s"${pm.getLong(1)} rows exceeds the $maxPairsPerRow pairs/row budget " +
+        s"(cells=${pm.getLong(2)}, max cell=${pm.getLong(3)}, " +
+        s"p99 cell=${pm.getLong(4)}). The model has too few (or too " +
+        "skewed) cells for this corpus: derive it at constant cell size " +
+        "(scaledCellCount) or raise maxPairsPerRow to consciously accept " +
+        "the quadratic cost."
     }
-    val a = assigned.select(col("cluster"), col("vec_id").as("id_a"),
-      col("embedding").as("e_a"))
-    val b = assigned.select(col("cluster"), col("vec_id").as("id_b"),
-      col("embedding").as("e_b"))
-    a.join(b, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", cosine(col("e_a"), col("e_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
-      .orderBy(col("id_a"), col("id_b"))
+    BlockedPairs.inBlock(assigned, Seq("cluster"), "vec_id", "id_a", "id_b",
+        cosine(col("a.embedding"), col("b.embedding")).as("cos"))
+      .transform(BlockedPairs.scoreTail(_, "id_a", "id_b", "cos", threshold, 6, "cos_sim"))
   }
 
   /** Batch ANN: many query vectors against the corpus through the IVF
@@ -341,8 +332,7 @@ object Similarity {
   def ivfBatchTopKWith(corpus: DataFrame, queries: DataFrame,
       cents: Array[Array[Double]], k: Int, nProbe: Int = 6): DataFrame = {
     val assigned = corpus
-      .withColumn("cluster", assignCluster(col("embedding"), cents))
-      .select(col("cluster"), col("vec_id"), col("embedding"))
+      .select(assignCluster(col("embedding"), cents).as("cluster"), col("vec_id"), col("embedding"))
     // probe cells per query: indices of the nProbe largest centroid dots.
     // HOF over a 2-D centroid literal, NOT c unrolled vecDot calls — the
     // unrolled form's generated code grows with c and overflows
@@ -363,10 +353,7 @@ object Similarity {
       .select(col("q_id"), col("q_emb"), col("cluster"))
     probed.join(assigned, "cluster")
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        when(vecNorm(col("embedding")) * vecNorm(col("q_emb")) =!= 0.0,
-          vecDot(col("embedding"), col("q_emb")) /
-            (vecNorm(col("embedding")) * vecNorm(col("q_emb")))).as("cos"))
+      .select(col("q_id"), col("vec_id"), cosine(col("embedding"), col("q_emb")).as("cos"))
       .groupBy(col("q_id"))
       .agg(graft.functions.AggregateFunctions
         .topKBy(col("cos"), col("vec_id"), k).as("topk"))
@@ -411,16 +398,13 @@ object Similarity {
   def tiledNearDupPairs(embeddings: DataFrame, threshold: Double,
       blocks: Int = 16, maxPairMass: Long = 45_000_000_000L): DataFrame = {
     require(blocks >= 1, s"blocks must be >= 1, got $blocks")
-    val pm = Dedup.pairMassStats(embeddings, lit(0)).head()
-    if (!pm.isNullAt(0)) {
-      val (mass, nRows) = (pm.getLong(0), pm.getLong(1))
-      require(mass <= maxPairMass,
-        s"tiledNearDupPairs preflight: exact all-pairs enumeration over " +
-          s"$nRows vectors is $mass pairs, over the $maxPairMass budget. " +
-          "This op is quadratic by problem statement; at this scale use " +
-          "semanticDupPairs (cluster-blocked) or bandedNearDupPairs " +
-          "(high-cosine LSH), or raise maxPairMass to consciously accept " +
-          "the cost.")
+    BlockedPairs.requirePairMass(embeddings, lit(0), _ => maxPairMass) { pm =>
+      s"tiledNearDupPairs preflight: exact all-pairs enumeration over " +
+        s"${pm.getLong(1)} vectors is ${pm.getLong(0)} pairs, over the $maxPairMass budget. " +
+        "This op is quadratic by problem statement; at this scale use " +
+        "semanticDupPairs (cluster-blocked) or bandedNearDupPairs " +
+        "(high-cosine LSH), or raise maxPairMass to consciously accept " +
+        "the cost."
     }
     // compute-budget partitioning (SCALE.md §9): the tile fan-out and
     // norm computation are per-row compute on both map sides; a
@@ -443,16 +427,12 @@ object Similarity {
         explode(sequence(lit(0), col("g"))).as("ti"))
       .withColumn("tile", col("ti") * blocks + col("gb"))
       .drop("ti")
-    val den = col("nrm_a") * col("nrm_b")
     left.join(right, "tile")
       .filter(col("ga") < col("gb") || (col("ga") === col("gb") && col("id_a") < col("id_b")))
-      .withColumn("cos_raw",
-        when(den =!= 0.0, vecDot(col("emb_a"), col("emb_b")) / den))
-      .filter(col("cos_raw") >= threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"),
-        round(col("cos_raw"), 6).as("cos_sim"))
-      .orderBy(col("id_a"), col("id_b"))
+        cosine(col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b")).as("cos_raw"))
+      .transform(BlockedPairs.scoreTail(_, "id_a", "id_b", "cos_raw", threshold, 6, "cos_sim"))
   }
 
   /** Blocked k-NN graph: each vector's exact top-`k` cosine neighbors
@@ -476,10 +456,6 @@ object Similarity {
     val e = Compute.toComputeBudget(embeddings)
       .select(col(blockCol).as("blk"), col("vec_id"), col("embedding"),
         vecNorm(col("embedding")).as("nrm"))
-    val a = e.select(col("blk"), col("vec_id").as("src_id"),
-      col("embedding").as("ea"), col("nrm").as("na"))
-    val b = e.select(col("blk"), col("vec_id").as("dst_id"),
-      col("embedding").as("eb"), col("nrm").as("nb"))
     // grouped top-k via the bounded TopKByScore aggregate instead of a
     // window rank: the window form shuffled and SORTED the full
     // quadratic join fan-out (sum |block|² rows); the aggregate keeps
@@ -490,14 +466,12 @@ object Similarity {
     // they rank after every real score exactly like the window's
     // NULLS LAST, and decode back to null on the way out.
     val negInf = lit(Double.NegativeInfinity)
-    a.join(b, "blk")
-      .filter(col("src_id") =!= col("dst_id"))
-      .withColumn("cos_raw",
-        when(col("na") * col("nb") =!= 0.0,
-          vecDot(col("ea"), col("eb")) / (col("na") * col("nb"))))
-      .groupBy(col("blk"), col("src_id"))
+    e.as("a").join(e.as("b"), "blk")
+      .filter(col("a.vec_id") =!= col("b.vec_id"))
+      .withColumn("cos_raw", cosine(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")))
+      .groupBy(col("blk"), col("a.vec_id").as("src_id"))
       .agg(graft.functions.AggregateFunctions
-        .topKScoredBy(coalesce(col("cos_raw"), negInf), col("dst_id"), k)
+        .topKScoredBy(coalesce(col("cos_raw"), negInf), col("b.vec_id"), k)
         .as("top"))
       .select(col("src_id"), posexplode(col("top")))
       .select(col("src_id"), (col("pos") + 1).cast(LongType).as("knn_rank"),
@@ -522,36 +496,23 @@ object Similarity {
     * 2^-r. */
   def bandedNearDupPairs(embeddings: DataFrame, threshold: Double,
       bands: Int = 16): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64, got $bands")
-    val rowsPerBand = 64 / bands
-    val mask = (1L << rowsPerBand) - 1
+    val rowsPerBand = BlockedPairs.rowsPerBand(64, bands)
+    // unsigned shift: a full 64-bit band (bands = 1) keeps every bit
+    val mask = -1L >>> (64 - rowsPerBand)
     val e = embeddings
       .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"),
         hyperplaneBits(col("embedding"), Dim, 64, Seed).as("sig"))
-    val bandRows = e.select(col("vec_id"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .withColumn("bkey",
-        expr(s"shiftrightunsigned(sig, CAST(band * $rowsPerBand AS INT)) & ${mask}L"))
-      .select(col("vec_id"), col("band"), col("bkey"))
-    val a = bandRows.as("a")
-    val b = bandRows.as("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
+    val bandKeys = array((0 until bands).map { i =>
+      struct(lit(i).as("band"),
+        shiftrightunsigned(col("sig"), i * rowsPerBand).bitwiseAND(lit(mask)).as("bkey"))
+    }: _*)
+    val candidates = BlockedPairs.bandCandidates(e, "vec_id", bandKeys, "id_a", "id_b")
       .localCheckpoint()
-    val ea = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-      col("nrm").as("nrm_a"))
-    val eb = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
-      col("nrm").as("nrm_b"))
-    val den = col("nrm_a") * col("nrm_b")
-    candidates.join(ea, "id_a").join(eb, "id_b")
-      .withColumn("cos_raw",
-        when(den =!= 0.0, vecDot(col("emb_a"), col("emb_b")) / den))
-      .filter(col("cos_raw") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos_raw"), 6).as("cos_sim"))
-      .orderBy(col("id_a"), col("id_b"))
+    candidates
+      .join(e.as("a"), col("id_a") === col("a.vec_id"))
+      .join(e.as("b"), col("id_b") === col("b.vec_id"))
+      .withColumn("cos_raw", cosine(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")))
+      .transform(BlockedPairs.scoreTail(_, "id_a", "id_b", "cos_raw", threshold, 6, "cos_sim"))
   }
 
   /** Exact near-duplicate pairs by cosine threshold over the first

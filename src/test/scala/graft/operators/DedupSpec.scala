@@ -34,6 +34,15 @@ class DedupSpec extends SparkTestBase {
     assert(high.subsetOf(mh), s"missed high-sim pairs: ${high -- mh}")
   }
 
+  test("minhash refuses a band count that does not divide the signature") {
+    // bands > numHashes leaves every band slice empty: every doc would
+    // share one key per band and every pair would become a candidate
+    val e = intercept[IllegalArgumentException] {
+      Dedup.minhashPairs(docs, 0.9, numHashes = 64, bands = 128)
+    }
+    assert(e.getMessage.contains("bands"), e.getMessage)
+  }
+
   test("simhash blocks identical and near-identical docs at hamming 0") {
     import spark.implicits._
     val df = Seq(

@@ -57,6 +57,8 @@ class EmptyInputSpec extends SparkTestBase {
     assert(Similarity.bruteForceTopK(emptyEmb, queryVecId = 1L, k = 5).count() == 0)
     assert(Similarity.semanticDupPairs(emptyEmb, 0.4).count() == 0)
     assert(Similarity.tiledNearDupPairs(emptyEmb, 0.9).count() == 0)
+    assert(Similarity.bandedNearDupPairs(emptyEmb, 0.9).count() == 0)
+    assert(Similarity.knnGraphWithinBlocks(emptyEmb, "label", 3).count() == 0)
   }
 
   test("query-style ops state their contract when the query id is absent") {

@@ -275,6 +275,13 @@ class SimilaritySpec extends SparkTestBase {
     assert(banded.subsetOf(exact))
   }
 
+  test("banded near-dup names the bands argument when it is zero") {
+    val e = intercept[IllegalArgumentException] {
+      Similarity.bandedNearDupPairs(emb, 0.9, bands = 0)
+    }
+    assert(e.getMessage.contains("bands"), e.getMessage)
+  }
+
   test("sign-LSH top-k finds a planted near-duplicate (its design regime)") {
     import spark.implicits._
     // plant a vector nearly identical to vec 0: same hyperplane signs,
