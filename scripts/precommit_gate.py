@@ -41,7 +41,7 @@ PUBLIC_URL_HOSTS = (
 )
 ENV_ALLOWLIST = re.compile(r"SPARK_GRAFT_[A-Z_]+|INCLUDE_QUADRATIC"
                            r"|SELF_CHECK_[A-Z_]+|SPARK_DRIVER_MEM"
-                           r"|PROFILE_[A-Z0-9_]+|SCALE_FAMILIES_[A-Z_]+"
+                           r"|SCALE_FAMILIES_[A-Z_]+"
                            r"|COURSIER_[A-Z_]+|JAVA_[A-Z_]+|PATH|HOME")
 CRED_PATTERNS = [
     re.compile(r"AKIA[0-9A-Z]{16}"),                 # AWS access key id

@@ -169,6 +169,14 @@ def main(sf_dir: str, out_dir: str, json_out=None) -> int:
 
     n_pass = n_fail = n_noora = 0
     results = {}
+    # an oracle key without an output directory is a query that crashed
+    # (Verify deletes each query's directory before running it) or never
+    # ran: it fails, rather than silently shrinking the compared set
+    for name in sorted(oracles):
+        if _selected(name) and not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"[   MISSING] {name}: oracle SQL but no output directory")
+            n_fail += 1
+            results[name] = {"rows": None, "status": "missing"}
     for qdir in sorted(glob.glob(os.path.join(out_dir, "*"))):
         if not os.path.isdir(qdir):
             continue

@@ -18,7 +18,7 @@ import graft.cnj.{MetasJob, Reader}
   *
   * Prints human-readable phase lines plus ONE machine-readable JSON line
   * (`{"metric":"cnj_bench_total_sec",...}`) carrying phase timings,
-  * corpus size, and the 1-minute loadavg at start — bench numbers on
+  * corpus size, and the 1m/5m loadavg at start — bench numbers on
   * this box are only meaningful at low load (2-3x inflation otherwise),
   * so the artifact records the regime it ran under.
   *
@@ -28,18 +28,11 @@ object CnjBench {
   def main(args: Array[String]): Unit = {
     val inDir = args(0)
     val outDir = if (args.length > 1) args(1) else "/tmp/cnj_bench_out"
-    // 1m AND 5m: writeback after a prior sink write can inflate a run
-    // while the 1m average already reads ~0 (r7's 28 s outlier: 1m=0.13,
-    // 5m=2.18) — record the regime honestly
-    val (load, load5) = Loadavg.read()
     val corpusFiles = Option(new java.io.File(inDir).listFiles())
       .map(_.filter(_.isFile)).getOrElse(Array.empty[java.io.File])
     val corpusBytes = corpusFiles.map(_.length()).sum
     val nFiles = corpusFiles.length
-    // measurement tool -> the shared harness session (same config as the
-    // shipped CnjMain session plus the A/B env overrides and UI off)
-    val spark = GraftSession.harnessBuilder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // the corpus is 90 files, the largest ~119 MB: at the default 128 MB
     // maxPartitionBytes that file is a single task and becomes the
     // critical path of the parse; 16 MB splits it ~8 ways (CSV without
@@ -47,9 +40,7 @@ object CnjBench {
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
     val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, r) = Harness.timed(f)
       phases(name) = sec
       println(f"[cnj-bench] $name: $sec%.1f s")
       r
@@ -72,9 +63,9 @@ object CnjBench {
       MetasJob.writeCsv(data, s"$outDir/Consolidado.csv", singleFile = false)
     }
     val total = (System.nanoTime() - t0) / 1e9
-    val phaseJson = phases.map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
-    println(
-      f"""{"metric":"cnj_bench_total_sec","value":$total%.2f,"unit":"sec","phases":{$phaseJson},"corpus_bytes":$corpusBytes,"n_files":$nFiles,"loadavg_1m":$load%.2f,"loadavg_5m":$load5%.2f}""")
+    println(Harness.jsonLine(spark, "cnj_bench_total_sec",
+      "value" -> total, "unit" -> "sec", "phases" -> Harness.Obj(phases.toSeq: _*),
+      "corpus_bytes" -> corpusBytes, "n_files" -> nFiles))
     spark.stop()
   }
 }

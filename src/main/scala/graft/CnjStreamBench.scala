@@ -1,6 +1,9 @@
 package graft
 
-import graft.cnj.{MetasJob, Reader}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.cnj.{MetasJob, Reader, ResultParity}
 
 /** Corpus-scale benchmark of the streaming CNJ ingest (SURVEY §2.9):
   * [[Reader.readDirStream]] -> the SAME Resumo aggregation as the batch
@@ -28,19 +31,18 @@ import graft.cnj.{MetasJob, Reader}
   * REMAINING corpus, not a from-scratch rerun.
   */
 object CnjStreamBench {
+
+  /** The fixture both code paths warm up on. */
+  private val WarmupDir = "src/test/resources/cnj/dados"
+
   def main(args: Array[String]): Unit = {
     val inDir = args(0)
     val filesPerTrigger = if (args.length > 1) args(1).toInt else 10
     val restartAfter = if (args.length > 2) args(2).toInt else 0
-    val (l1, l5) = Loadavg.read()
-    // measurement tool -> the shared harness session (same config as the
-    // shipped CnjMain session plus the A/B env overrides and UI off)
-    val spark = GraftSession.harnessBuilder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // same split sizing as CnjBench: the largest court file (~119 MB)
     // must not be one task
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
     // Symmetric fixture-scale warm-up of BOTH code paths before timing
     // either: the first Spark action in a JVM absorbs JIT + codegen
@@ -48,54 +50,28 @@ object CnjStreamBench {
     // would pay the cold-start and the published stream/batch comparison
     // would flatter streaming. Streaming additionally warms its own
     // machinery (microbatch planner, state store).
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_CNJ_WARMUP_DIR",
-      "src/test/resources/cnj/dados")
     try {
       MetasJob.stringlyOutput(
-        MetasJob.resumoTyped(spark, Reader.readDir(spark, warmDir))).collect()
-      val wq = MetasJob.stringlyOutput(
-          MetasJob.resumoTyped(spark, Reader.readDirStream(spark, warmDir)))
-        .writeStream.format("memory").queryName("cnj_stream_warmup")
-        .outputMode("complete").start()
-      try wq.processAllAvailable() finally wq.stop()
+        MetasJob.resumoTyped(spark, Reader.readDir(spark, WarmupDir))).collect()
+      drain(start(spark, WarmupDir, filesPerTrigger, "cnj_stream_warmup"))
     } catch { case e: Throwable =>
-      System.err.println(s"WARNING: warm-up on $warmDir failed " +
+      System.err.println(s"WARNING: warm-up on $WarmupDir failed " +
         s"(${e.getMessage}); the first timed pass will include JIT/codegen")
     }
 
     // batch truth, timed like CnjBench's resumo phase
-    val tb0 = System.nanoTime()
-    val batch = MetasJob.stringlyOutput(
-      MetasJob.resumoTyped(spark, Reader.readDir(spark, inDir))).collect()
-    val batchSec = (System.nanoTime() - tb0) / 1e9
+    val (batchSec, batch) = Harness.timed(MetasJob.stringlyOutput(
+      MetasJob.resumoTyped(spark, Reader.readDir(spark, inDir))).collect().toIndexedSeq)
 
     if (restartAfter > 0) {
-      recoveryBench(spark, inDir, filesPerTrigger, restartAfter,
-        batch.toIndexedSeq, batchSec, l1, l5)
+      recoveryBench(spark, inDir, filesPerTrigger, restartAfter, batch, batchSec)
       spark.stop()
       return
     }
 
-    val ts0 = System.nanoTime()
-    val stream = Reader.readDirStream(spark, inDir,
-      Map("maxFilesPerTrigger" -> filesPerTrigger.toString))
-    val q = MetasJob.stringlyOutput(MetasJob.resumoTyped(spark, stream))
-      .writeStream.format("memory").queryName("cnj_stream_bench")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamSec = (System.nanoTime() - ts0) / 1e9
-
-    val got = spark.table("cnj_stream_bench").collect()
-
-    // Cell-level parity with the float-determinism contract documented
-    // (and unit-tested) on graft.cnj.ResultParity: byte-identical except
-    // counted-and-bounded 0.01 rounding-boundary flips.
-    val report = graft.cnj.ResultParity.compare(
-      got.toIndexedSeq, batch.toIndexedSeq)
-    report.details.foreach(d => System.err.println(s"DIFF $d"))
-    val (hardDiffs, boundaryCells, totalCells) =
-      (report.hardDiffs, report.boundaryCells, report.totalCells)
-    val parity = report.parity()
+    val (streamSec, q) =
+      Harness.timed(drain(start(spark, inDir, filesPerTrigger, "cnj_stream_bench")))
+    val (parity, parityFields) = compare(spark, "cnj_stream_bench", batch)
 
     // per-microbatch evidence: input rows + streaming-agg state rows
     val perBatch = q.recentProgress.toIndexedSeq
@@ -104,58 +80,85 @@ object CnjStreamBench {
         val state = p.stateOperators.map(_.numRowsTotal).sum
         (p.batchId, p.numInputRows, state)
       }
-    val batchesJson = perBatch
-      .map { case (id, in, st) => s"""{"batch":$id,"input_rows":$in,"state_rows":$st}""" }
-      .mkString("[", ",", "]")
     val maxState = if (perBatch.isEmpty) -1L else perBatch.map(_._3).max
 
-    println(s"""{"metric":"cnj_stream_bench","stream_sec":${fmt(streamSec)},"batch_sec":${fmt(batchSec)},"parity":$parity,"hard_diff_cells":$hardDiffs,"rounding_boundary_cells":$boundaryCells,"total_cells":$totalCells,"files_per_trigger":$filesPerTrigger,"n_batches":${perBatch.size},"max_state_rows":$maxState,"result_rows":${got.length},"batches":$batchesJson,"loadavg_1m":${fmt(l1)},"loadavg_5m":${fmt(l5)}}""")
+    println(Harness.jsonLine(spark, "cnj_stream_bench", Seq("stream_sec" -> streamSec,
+      "batch_sec" -> batchSec) ++ parityFields ++ Seq("files_per_trigger" -> filesPerTrigger,
+      "n_batches" -> perBatch.size, "max_state_rows" -> maxState,
+      "batches" -> perBatch.map { case (id, in, st) =>
+        Harness.Obj("batch" -> id, "input_rows" -> in, "state_rows" -> st) }): _*))
     spark.stop()
     if (!parity) sys.exit(1)
   }
 
-  /** The kill-and-recover measurement (see object doc). */
-  private def recoveryBench(spark: org.apache.spark.sql.SparkSession,
-      inDir: String, filesPerTrigger: Int, restartAfter: Int,
-      batch: IndexedSeq[org.apache.spark.sql.Row], batchSec: Double,
-      l1: Double, l5: Double): Unit = {
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("cnj_recovery_ckpt").toString
-    def start(name: String) = MetasJob.stringlyOutput(
-        MetasJob.resumoTyped(spark, Reader.readDirStream(spark, inDir,
+  /** The streamed Resumo of `dir` into the memory table `name`, complete
+    * mode, at most `filesPerTrigger` court files per microbatch. */
+  private def start(spark: SparkSession, dir: String, filesPerTrigger: Int,
+      name: String, checkpoint: Option[String] = None): StreamingQuery = {
+    val w = MetasJob.stringlyOutput(
+        MetasJob.resumoTyped(spark, Reader.readDirStream(spark, dir,
           Map("maxFilesPerTrigger" -> filesPerTrigger.toString))))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .start()
+      .writeStream.format("memory").queryName(name).outputMode("complete")
+    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+  }
+
+  /** Runs `q` to the end of its input, then stops it. */
+  private def drain(q: StreamingQuery): StreamingQuery = {
+    try q.processAllAvailable() finally q.stop()
+    q
+  }
+
+  /** Cell-level parity of the memory table `table` with the batch truth,
+    * under the float-determinism contract documented (and unit-tested)
+    * on graft.cnj.ResultParity: byte-identical except counted-and-bounded
+    * 0.01 rounding-boundary flips. Each differing cell is printed on
+    * stderr. Returns the verdict and the report's JSON fields. */
+  private def compare(spark: SparkSession, table: String,
+      batch: IndexedSeq[Row]): (Boolean, Seq[(String, Any)]) = {
+    val got = spark.table(table).collect()
+    val r = ResultParity.compare(got.toIndexedSeq, batch)
+    r.details.foreach(d => System.err.println(s"DIFF $d"))
+    (r.parity(), Seq("parity" -> r.parity(), "hard_diff_cells" -> r.hardDiffs,
+      "rounding_boundary_cells" -> r.boundaryCells, "total_cells" -> r.totalCells,
+      "result_rows" -> got.length))
+  }
+
+  /** The kill-and-recover measurement (see object doc). */
+  private def recoveryBench(spark: SparkSession, inDir: String,
+      filesPerTrigger: Int, restartAfter: Int, batch: IndexedSeq[Row],
+      batchSec: Double): Unit = {
+    val ckpt = Some(java.nio.file.Files
+      .createTempDirectory("cnj_recovery_ckpt").toString)
 
     // incarnation 1: run to the kill point (k completed input batches)
-    val t10 = System.nanoTime()
-    val q1 = start("cnj_recovery_1")
-    val deadline = System.nanoTime() + 600L * 1000 * 1000 * 1000
-    while (q1.recentProgress.count(_.numInputRows > 0) < restartAfter &&
-        System.nanoTime() < deadline) Thread.sleep(100)
-    q1.stop()
-    val preKillSec = (System.nanoTime() - t10) / 1e9
+    val (preKillSec, q1) = Harness.timed {
+      val q1 = start(spark, inDir, filesPerTrigger, "cnj_recovery_1", ckpt)
+      val deadline = System.nanoTime() + 600L * 1000 * 1000 * 1000
+      while (q1.recentProgress.count(_.numInputRows > 0) < restartAfter &&
+          System.nanoTime() < deadline) Thread.sleep(100)
+      q1.stop()
+      q1
+    }
     val preBatches = q1.recentProgress.filter(_.numInputRows > 0)
     require(preBatches.length >= restartAfter,
       s"kill point never reached: ${preBatches.length} < $restartAfter batches")
 
     // incarnation 2: recover from the checkpoint, drain to completion
-    val t20 = System.nanoTime()
-    val q2 = start("cnj_recovery_2")
-    try q2.processAllAvailable() finally q2.stop()
-    val recoverSec = (System.nanoTime() - t20) / 1e9
+    val (recoverSec, q2) =
+      Harness.timed(drain(start(spark, inDir, filesPerTrigger, "cnj_recovery_2", ckpt)))
     val postBatches = q2.recentProgress.filter(_.numInputRows > 0)
     val postState = q2.recentProgress.flatMap(_.stateOperators)
       .map(_.numRowsTotal).lastOption.getOrElse(-1L)
 
-    val got = spark.table("cnj_recovery_2").collect()
-    val report = graft.cnj.ResultParity.compare(got.toIndexedSeq, batch)
-    report.details.foreach(d => System.err.println(s"DIFF $d"))
+    val (parity, parityFields) = compare(spark, "cnj_recovery_2", batch)
 
-    println(s"""{"metric":"cnj_stream_recovery","batch_sec":${fmt(batchSec)},"pre_kill_sec":${fmt(preKillSec)},"recover_sec":${fmt(recoverSec)},"killed_after_batches":${preBatches.length},"recovery_batches":${postBatches.length},"recovery_input_rows":${postBatches.map(_.numInputRows).sum},"pre_kill_input_rows":${preBatches.map(_.numInputRows).sum},"state_rows_after_recovery":$postState,"files_per_trigger":$filesPerTrigger,"parity":${report.parity()},"hard_diff_cells":${report.hardDiffs},"rounding_boundary_cells":${report.boundaryCells},"total_cells":${report.totalCells},"result_rows":${got.length},"loadavg_1m":${fmt(l1)},"loadavg_5m":${fmt(l5)}}""")
-    if (!report.parity()) sys.exit(1)
+    println(Harness.jsonLine(spark, "cnj_stream_recovery", Seq("batch_sec" -> batchSec,
+      "pre_kill_sec" -> preKillSec, "recover_sec" -> recoverSec,
+      "killed_after_batches" -> preBatches.length, "recovery_batches" -> postBatches.length,
+      "recovery_input_rows" -> postBatches.map(_.numInputRows).sum,
+      "pre_kill_input_rows" -> preBatches.map(_.numInputRows).sum,
+      "state_rows_after_recovery" -> postState,
+      "files_per_trigger" -> filesPerTrigger) ++ parityFields: _*))
+    if (!parity) sys.exit(1)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
 /** Dev utility: dump formatted physical plans for the named queries (or
   * all) to stdout — under the SHIPPED harness session (GraftSession.
@@ -8,17 +8,15 @@ import org.apache.spark.sql.SparkSession
   * run, not a hand-rolled config's (a 10 MB default broadcast threshold
   * dumps a SortMergeJoin where the harness runs a BroadcastHashJoin).
   * With SPARK_GRAFT_PLAN_DIR set, each query's plan additionally lands
-  * in `<dir>/<name>_<suffix>.txt` (suffix from SPARK_GRAFT_PLAN_SUFFIX,
-  * default "plan") — the before/after evidence files of the
-  * optimization rounds. Usage: runMain graft.ExplainDump [name ...]
+  * in `<dir>/<name>_plan.txt` — the before/after evidence files of the
+  * optimization rounds (one dir per side). Usage: runMain
+  * graft.ExplainDump [name ...]
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "plan")
-    val spark = GraftSession.harnessBuilder().getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     planDir.foreach(d => new java.io.File(d).mkdirs())
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
@@ -28,8 +26,7 @@ object ExplainDump {
       planDir.foreach { d =>
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        val w = new java.io.PrintWriter(s"$d/${name}_$suffix.txt")
-        try w.println(txt) finally w.close()
+        Files.writeString(Paths.get(s"$d/${name}_plan.txt"), txt + "\n")
       }
     }
     spark.stop()

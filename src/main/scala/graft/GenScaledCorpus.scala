@@ -160,8 +160,7 @@ object GenScaledCorpus {
     val outDir = args(1)
     val seed = if (args.length > 2) args(2).toLong else 42L
     require(scale >= 1, "scale must be >= 1")
-    val spark = GraftSession.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val nDocs = DocsPerScale * scale
     val nVecs = VecsPerScale * scale
@@ -179,7 +178,8 @@ object GenScaledCorpus {
     // IvfModelStore.ensure (a same-cardinality regeneration with another
     // seed would otherwise rely on the content check alone)
     operators.IvfModelStore.invalidate(spark, outDir)
-    println(s"""{"metric":"gen_scaled_corpus","scale":$scale,"docs":$nDocs,"vecs":$nVecs,"vocab":$vocab,"labels":$nLabels,"out":"$outDir"}""")
+    println(Harness.jsonLine(spark, "gen_scaled_corpus", "scale" -> scale, "docs" -> nDocs,
+      "vecs" -> nVecs, "vocab" -> vocab, "labels" -> nLabels, "out" -> outDir))
     spark.stop()
   }
 }

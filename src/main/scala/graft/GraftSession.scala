@@ -60,30 +60,19 @@ object GraftSession {
 
   def getOrCreate(): SparkSession = builder().getOrCreate()
 
-  /** The measurement-harness session (Bench / Verify / TimeQuery): the
-    * library [[builder]] above — so the benchmarked, the verified, and
+  /** The measurement-harness session (every measurement main, through
+    * `Harness.session`): the library [[builder]] above at
+    * `local[$SPARK_GRAFT_CPUS]` with as many shuffle partitions (default:
+    * the host's available processors, as in [[builder]]), plus the UI
+    * off — a measurement tool should not pay (or time) the UI listener
+    * path. Nothing else differs, so the benchmarked, the verified and
     * the shipped configuration are one configuration and cannot drift
     * (hand-copied subsets previously omitted the extensions registration
-    * and picked up new GraftSession knobs only by luck) — plus the env
-    * overrides the tools use to isolate a config knob from jitter in an
-    * A/B run:
-    *  - SPARK_GRAFT_CPUS: local[] core count (default: the host's
-    *    available processors, as in [[builder]]);
-    *  - SPARK_GRAFT_SHUFFLE_PARTITIONS: non-adaptive shuffle width
-    *    (default = cpus);
-    *  - SPARK_GRAFT_INITIAL_PARTITIONS / SPARK_GRAFT_BROADCAST_THRESHOLD:
-    *    the data-proportional AQE width and broadcast threshold defaults.
-    * The UI is off: a measurement tool should not pay (or time) the UI
-    * listener path. */
+    * and picked up new GraftSession knobs only by luck). */
   def harnessBuilder(): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    builder(master = s"local[$cpus]", shufflePartitions = parts.toInt)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "512"))
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    builder(master = s"local[$cpus]", shufflePartitions = cpus)
       .config("spark.ui.enabled", "false")
   }
 }

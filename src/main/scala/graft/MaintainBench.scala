@@ -26,17 +26,12 @@ import graft.operators.CorpusStore
   */
 object MaintainBench {
 
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
-    val (l1, l5) = Loadavg.read()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val batches = sys.env.getOrElse("SPARK_GRAFT_BATCHES", "96").toInt
     val every = sys.env.getOrElse("SPARK_GRAFT_MAINTAIN_EVERY", "8").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = GraftSession.harnessBuilder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val docs = Tables.documents(spark, sfDir)
@@ -53,8 +48,8 @@ object MaintainBench {
           .toSeq
       }
 
-    def runArm(tag: String, maintainEvery: Int)
-        : (String, Double, Double, Double, Long, Long, Long) = {
+    // (the arm's JSON fields, live delta dirs, rows, content checksum)
+    def runArm(tag: String, maintainEvery: Int): (Harness.Obj, Long, Long, Long) = {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val store = s"${System.getProperty("java.io.tmpdir")}/graft_maintbench_$tag"
       val ckpt = s"$store-ckpt"
@@ -71,25 +66,16 @@ object MaintainBench {
         // ratio effectively off: minor-only maintenance keeps the two
         // arms comparable (no O(corpus) rewrite hiding in one of them)
         maxDeltaToBaseRatio = 1e9).start()
-      val t0 = System.nanoTime()
-      try {
-        slices.foreach { s => ms.addData(s); q.processAllAvailable() }
-      } finally q.stop()
-      val ingestSec = (System.nanoTime() - t0) / 1e9
-      def timeMin(body: => Long): (Double, Long) = {
-        val runs = (1 to reps).map { _ =>
-          val s0 = System.nanoTime()
-          val r = body
-          ((System.nanoTime() - s0) / 1e9, r)
-        }
-        (runs.map(_._1).min, runs.head._2)
+      val (ingestSec, _) = Harness.timed {
+        try slices.foreach { s => ms.addData(s); q.processAllAvailable() }
+        finally q.stop()
       }
       def readAgg(): Long = CorpusStore.read(spark, store, "doc_id").count()
       def feedAgg(): Long =
         CorpusStore.changesSince(spark, store, "doc_id", -1L).count()
       readAgg(); feedAgg() // warm
-      val (readSec, rows) = timeMin(readAgg())
-      val (feedSec, _) = timeMin(feedAgg())
+      val (readSec, rows) = Harness.minOf(reps)(readAgg())
+      val (feedSec, _) = Harness.minOf(reps)(feedAgg())
       // CONTENT checksum, not just cardinality: a fold bug resolving the
       // wrong VERSION per key keeps the row count — only a value hash
       // makes the cross-arm equality require mean "answer-preserving"
@@ -98,17 +84,20 @@ object MaintainBench {
           lit(1000000007L)))).head().getLong(0)
       val live = CorpusStore.describe(spark, store)
         .filter(col("kind") === "delta").count()
-      (tag, ingestSec, readSec, feedSec, live, rows, chk)
+      (Harness.Obj("ingest_sec" -> ingestSec, "read_sec" -> readSec,
+        "changes_feed_sec" -> feedSec, "live_deltas" -> live), live, rows, chk)
     }
 
     val un = runArm("unmaintained", 0)
     val mt = runArm("maintained", every)
-    require(un._6 == mt._6 && un._7 == mt._7,
-      s"maintenance changed the read answer: ${un._6}/${un._7} vs ${mt._6}/${mt._7}")
-    require(mt._5 <= math.max(every, 2).toLong + 1,
-      s"maintained live-delta count must be bounded, got ${mt._5}")
+    require(un._3 == mt._3 && un._4 == mt._4,
+      s"maintenance changed the read answer: ${un._3}/${un._4} vs ${mt._3}/${mt._4}")
+    require(mt._2 <= math.max(every, 2).toLong + 1,
+      s"maintained live-delta count must be bounded, got ${mt._2}")
 
-    println(s"""{"metric":"stream_self_maintenance","sf":"$sfDir","batches":$batches,"maintain_every":$every,"reps":$reps,"rows":${un._6},"unmaintained":{"ingest_sec":${fmt(un._2)},"read_sec":${fmt(un._3)},"changes_feed_sec":${fmt(un._4)},"live_deltas":${un._5}},"maintained":{"ingest_sec":${fmt(mt._2)},"read_sec":${fmt(mt._3)},"changes_feed_sec":${fmt(mt._4)},"live_deltas":${mt._5}},"loadavg_1m":${fmt(l1)},"loadavg_5m":${fmt(l5)}}""")
+    println(Harness.jsonLine(spark, "stream_self_maintenance", "sf" -> sfDir,
+      "batches" -> batches, "maintain_every" -> every, "reps" -> reps,
+      "rows" -> un._3, "unmaintained" -> un._1, "maintained" -> mt._1))
     spark.stop()
   }
 }

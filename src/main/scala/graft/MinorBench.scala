@@ -20,16 +20,11 @@ import graft.operators.CorpusStore
   */
 object MinorBench {
 
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
-    val (l1, l5) = Loadavg.read()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val appends = sys.env.getOrElse("SPARK_GRAFT_APPENDS", "64").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = GraftSession.harnessBuilder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val store = s"${System.getProperty("java.io.tmpdir")}/graft_minorbench"
     val sp = new Path(store)
@@ -59,14 +54,6 @@ object MinorBench {
     def liveDeltas(): Long = CorpusStore.describe(spark, store)
       .filter(col("kind") === "delta").count()
 
-    def timeMin(body: => Long): (Double, Long) = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val r = body
-        ((System.nanoTime() - t0) / 1e9, r)
-      }
-      (runs.map(_._1).min, runs.head._2)
-    }
     def readAgg(): Long = CorpusStore.read(spark, store, "doc_id").count()
     def feedAgg(): Long =
       CorpusStore.changesSince(spark, store, "doc_id", -1L).count()
@@ -80,24 +67,29 @@ object MinorBench {
     readAgg(); feedAgg(); prunedAgg()
     val partsBefore = parts()
     val deltasBefore = liveDeltas()
-    val (readB, rowsB) = timeMin(readAgg())
-    val (feedB, feedRowsB) = timeMin(feedAgg())
-    val (prunedB, _) = timeMin(prunedAgg())
+    val (readB, rowsB) = Harness.minOf(reps)(readAgg())
+    val (feedB, feedRowsB) = Harness.minOf(reps)(feedAgg())
+    val (prunedB, _) = Harness.minOf(reps)(prunedAgg())
 
-    val tFold0 = System.nanoTime()
-    require(CorpusStore.compactDeltas(spark, store, "doc_id"), "fold must run")
-    val foldSec = (System.nanoTime() - tFold0) / 1e9
+    val (foldSec, folded) = Harness.timed(CorpusStore.compactDeltas(spark, store, "doc_id"))
+    require(folded, "fold must run")
 
     val partsAfter = parts()
     val deltasAfter = liveDeltas()
-    val (readA, rowsA) = timeMin(readAgg())
-    val (feedA, feedRowsA) = timeMin(feedAgg())
-    val (prunedA, _) = timeMin(prunedAgg())
+    val (readA, rowsA) = Harness.minOf(reps)(readAgg())
+    val (feedA, feedRowsA) = Harness.minOf(reps)(feedAgg())
+    val (prunedA, _) = Harness.minOf(reps)(prunedAgg())
     require(rowsB == rowsA, s"fold changed the read answer: $rowsB -> $rowsA")
     require(feedRowsA <= feedRowsB,
       s"netted feed must not grow: $feedRowsB -> $feedRowsA")
 
-    println(s"""{"metric":"store_minor_compaction","sf":"$sfDir","appends":$appends,"reps":$reps,"rows":$rowsB,"live_deltas_before":$deltasBefore,"live_deltas_after":$deltasAfter,"manifest_parts_before":$partsBefore,"manifest_parts_after":$partsAfter,"read_sec_before":${fmt(readB)},"read_sec_after":${fmt(readA)},"changes_feed_sec_before":${fmt(feedB)},"changes_feed_sec_after":${fmt(feedA)},"pruned_read_sec_before":${fmt(prunedB)},"pruned_read_sec_after":${fmt(prunedA)},"fold_sec":${fmt(foldSec)},"feed_rows_before":$feedRowsB,"feed_rows_after":$feedRowsA,"loadavg_1m":${fmt(l1)},"loadavg_5m":${fmt(l5)}}""")
+    println(Harness.jsonLine(spark, "store_minor_compaction", "sf" -> sfDir, "appends" -> appends,
+      "reps" -> reps, "rows" -> rowsB, "live_deltas_before" -> deltasBefore,
+      "live_deltas_after" -> deltasAfter, "manifest_parts_before" -> partsBefore,
+      "manifest_parts_after" -> partsAfter, "read_sec_before" -> readB, "read_sec_after" -> readA,
+      "changes_feed_sec_before" -> feedB, "changes_feed_sec_after" -> feedA,
+      "pruned_read_sec_before" -> prunedB, "pruned_read_sec_after" -> prunedA,
+      "fold_sec" -> foldSec, "feed_rows_before" -> feedRowsB, "feed_rows_after" -> feedRowsA))
     spark.stop()
   }
 }

@@ -33,12 +33,7 @@ object ScaleFamilies {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val includeQuadratic = sys.env.get("INCLUDE_QUADRATIC").contains("1")
-    // measurement tool -> the shared harness session (library config +
-    // SPARK_GRAFT_* env overrides, UI off), like Bench/Verify/TimeQuery.
-    // At default env this is config-identical to the library session
-    // except spark.ui.enabled=false.
-    val spark = GraftSession.harnessBuilder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // scale from the corpus, not an env knob that could disagree with it
     val scale = math.max(1,
       math.round(Tables.embeddings(spark, dir).count() / 2000.0).toInt)
@@ -47,11 +42,7 @@ object ScaleFamilies {
     // operating point — corpus-derived cells (Similarity.scaledCellCount)
     // AND the 5-sigma DefaultSemanticThreshold — so the former
     // `dedup_semantic_scaledcells` contrast row is redundant and gone.
-    val extra: Seq[(String, String => org.apache.spark.sql.DataFrame)] =
-      if (includeQuadratic)
-        Seq("embed_neardup_blocked" ->
-          ((d: String) => SparkEntry.queries("embed_neardup_blocked")(spark, d)))
-      else Nil
+    val extra = if (includeQuadratic) Seq("embed_neardup_blocked") else Nil
 
     // SCALE_FAMILIES_ONLY=<name[,name…]>: run a subset, one family per
     // fresh JVM. The suite-in-one-JVM statistic measures a MARATHON —
@@ -64,71 +55,15 @@ object ScaleFamilies {
     // engine number; the no-knob suite stays the cross-round series.
     val only = sys.env.get("SCALE_FAMILIES_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val all: Seq[(String, String => org.apache.spark.sql.DataFrame)] =
-      (Families.map(n => n -> ((d: String) => SparkEntry.queries(n)(spark, d))) ++ extra)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
+    val all = (Families ++ extra).filter(n => only.forall(_.contains(n)))
+      .map(n => n -> SparkEntry.queries(n))
     require(all.nonEmpty, s"SCALE_FAMILIES_ONLY matched no family: $only")
 
-    // JIT/codegen warm-up at the small committed fixture — failures are
-    // LOGGED, not swallowed: a family that never warmed up carries
-    // JIT/codegen compilation inside its timed row
-    // operator-internal localCheckpoint blocks are dead once the noop
-    // write returns but are freed only on driver-side GC; across 15+
-    // back-to-back families at a big corpus the backlog drives GC
-    // pressure that inflates the LATER families' timed walls 3-4x
-    // (measured at gen1000x: dedup_winnowing 251.7 s inside the loop vs
-    // 58.4 s warm standalone). Blocking-unpersist between families keeps
-    // peak storage = one family's working set — same discipline as
-    // Verify, and it runs OUTSIDE the timed window.
-    def dropCheckpoints(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      // Shuffle files and broadcasts are reaped by the ContextCleaner only
-      // when the driver GC collects their references; with a multi-GB heap
-      // a full GC may not run for many families and tens of GB of DEAD
-      // shuffle data pile up on local disk, throttling later families'
-      // shuffles (measured at gen1000x: sim_knn_graph 253.7 s as family 14
-      // of the loop vs 52.3 s warm standalone). An explicit GC between
-      // families (outside every timed window) lets the cleaner reap after
-      // each family, bounding on-disk state to one family's working set.
-      System.gc()
-      // SCALE_FAMILIES_SETTLE_S: optional pause after the GC (outside the
-      // timed window) to let the ContextCleaner's ASYNCHRONOUS deletion of
-      // the previous family's shuffle files drain before the next timed
-      // window opens (the GC only queues the cleanup; the IO proceeds
-      // concurrently). Measured at gen1000x (r11, 4-family alternating
-      // A/B): a 20 s settle was a TIE — the marathon-context inflation is
-      // not drained by pausing, it migrates between families run-to-run
-      // (SCALE.md §9). Default 0; the knob stays for boxes where delete
-      // IO genuinely contends with the next family's shuffle writes.
-      sys.env.get("SCALE_FAMILIES_SETTLE_S").map(_.toInt).filter(_ > 0)
-        .foreach(s => Thread.sleep(s * 1000L))
-    }
+    // the landing prep (the pretrained probe's model training) runs only
+    // when SCALE_FAMILIES_ONLY keeps the probe: training at corpus scale
+    // would bill ~a minute to every unrelated family's JVM
+    Harness.warmUp(spark, all, dir)
 
-    all.foreach { case (name, fn) =>
-      try fn("/root/testdata/sf0.01").write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"WARNING: warm-up for $name failed at sf0.01 " +
-          s"(${e.getMessage}); its timed row may include JIT/codegen warm-up")
-      }
-      dropCheckpoints()
-    }
-    // landing prep, as in Bench: the pretrained probe's first-ever
-    // invocation on a corpus trains + persists the model — a once-per-
-    // corpus-lifetime cost that must not be billed to the timed probe
-    // (skipped when SCALE_FAMILIES_ONLY excludes the probe: training at
-    // corpus scale would bill ~a minute to every unrelated family's JVM)
-    if (all.exists(_._1 == "sim_topk_ivf_pretrained")) {
-      try SparkEntry.queries("sim_topk_ivf_pretrained")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(
-          s"WARNING: landing prep failed (${e.getMessage}); " +
-            "sim_topk_ivf_pretrained's timed number will include training")
-      }
-      dropCheckpoints()
-    }
-
-    val (l1, l5) = Loadavg.read()
     val results = all.map { case (name, fn) =>
       // qualifying-pair counts come from the SAME execution the timer
       // measures (an Observation/CollectMetrics row count piggybacked on
@@ -137,33 +72,27 @@ object ScaleFamilies {
       // on training determinism for the count to describe the timed run
       val wantRows = CountRows(name)
       val obs = org.apache.spark.sql.Observation(s"rows_$name")
-      val t0 = System.nanoTime()
-      val ok =
+      val (sec, ok) = Harness.timed {
         try {
-          val df = fn(dir)
-          val timed = if (wantRows)
+          val df = fn(spark, dir)
+          Harness.noop(if (wantRows)
             df.observe(obs, org.apache.spark.sql.functions.count(
               org.apache.spark.sql.functions.lit(1)).as("rows"))
-          else df
-          timed.write.format("noop").mode("overwrite").save()
+          else df)
           true
         } catch { case e: Throwable =>
           System.err.println(s"$name failed: ${e.getMessage}"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
+      }
       val rows = if (ok && wantRows)
         obs.get.apply("rows").asInstanceOf[Long] else -1L
-      dropCheckpoints() // outside the timed window (see warm-up note)
+      Harness.release(spark)
       (name, sec, rows, ok)
     }
-    def f(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (n, s, r, ok) =>
-      val body = if (!ok) "null"
-        else if (r >= 0) s"""{"sec":${f(s)},"rows":$r}"""
-        else s"""{"sec":${f(s)}}"""
-      s""""$n":$body"""
-    }.mkString("{", ",", "}")
+      n -> Option.when(ok)(Harness.Obj(("sec" -> s) +: Option.when(r >= 0)("rows" -> r).toSeq: _*)) }
     val total = results.collect { case (_, s, _, true) => s }.sum
-    println(s"""{"metric":"scale_families","dir":"$dir","scale":$scale,"value":${f(total)},"unit":"sec","queries":$qs,"loadavg_1m":${f(l1)},"loadavg_5m":${f(l5)}}""")
+    println(Harness.jsonLine(spark, "scale_families", "dir" -> dir, "scale" -> scale,
+      "value" -> total, "unit" -> "sec", "queries" -> Harness.Obj(qs: _*)))
     spark.stop()
   }
 }

@@ -42,11 +42,11 @@ object SparkEntry {
     modules.flatMap(q => q.oracleFor(dir).map(q.name -> _)).toMap
 
   /** [[oracleSql]] (optionally restricted to `names`) as one JSON object
-    * string for the driver's json.load — shared by Verify and DumpOne so
-    * the escaping rules cannot drift. Escapes backslash, quote, and ALL
-    * control chars (<0x20): a tab or CR in builder-authored SQL would
-    * otherwise make json.load fail and silently zero the round's
-    * correctness. */
+    * string for the driver's json.load: Verify's `oracle_sql.json`, whole
+    * or, under `SPARK_GRAFT_ONLY`, for the named queries only. Escapes
+    * backslash, quote, and ALL control chars (<0x20): a tab or CR in
+    * builder-authored SQL would otherwise make json.load fail and
+    * silently zero the round's correctness. */
   def oracleJson(names: Option[Set[String]] = None,
       dir: Option[String] = None): String = {
     val all = oracleSqlFor(dir)
@@ -55,7 +55,8 @@ object SparkEntry {
   }
 
   /** A JSON string literal: escapes backslash, quote and every control
-    * character. Used by the oracle JSON and Bench's crash names. */
+    * character. Used by the oracle JSON and every harness JSON line
+    * (`Harness.jsonLine`). */
   private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusStore
@@ -51,15 +54,6 @@ object StoreStreamBench {
 
   private val Key = "doc_id"
 
-  private def fmt(v: Double) =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-
-  private def session(): SparkSession = {
-    val spark = GraftSession.harnessBuilder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def inputStream(spark: SparkSession, work: String): DataFrame = {
     val schema = spark.read.parquet(s"$work/input").schema
     spark.readStream.schema(schema)
@@ -67,42 +61,70 @@ object StoreStreamBench {
       .parquet(s"$work/input")
   }
 
-  def main(args: Array[String]): Unit = args(0) match {
-    case "prep"    => prep(args(1),
-      if (args.length > 2) args(2).toInt else 100,
-      if (args.length > 3) args(3).toInt else 8)
-    case "victim"  => victim(args(1), args(2).toLong)
-    case "recover" => recover(args(1))
-    case "repl-prep"    => replPrep(args(1),
-      if (args.length > 2) args(2).toInt else 100,
-      if (args.length > 3) args(3).toInt else 8)
-    case "repl-victim"  => replVictim(args(1), args(2).toLong)
-    case "repl-recover" => replRecover(args(1))
-    case other => sys.error(
-      s"unknown phase '$other' (prep|victim|recover|repl-prep|repl-victim|repl-recover)")
+  /** `count` overlapping key windows over `n` rows: window i covers
+    * [i*step, i*step + rows) with rows = n / count and step = 0.8*rows,
+    * so each window overwrites the tail of the previous one. Returns
+    * (rows, step, windows). */
+  private def overlapping(n: Long, count: Int): (Long, Long, IndexedSeq[Column]) = {
+    val rows = n / count
+    val step = math.max(1L, (rows * 4) / 5)
+    (rows, step, (0 until count).map(i => col(Key) >= i * step && col(Key) < i * step + rows))
   }
 
-  /** Stage base + overlapping upsert chunks. Chunk i covers doc_ids
-    * [i*step, i*step + chunkRows) with step = 0.8*chunkRows, so each
-    * chunk overwrites the tail of the previous one — the replayed batch
-    * must win against its predecessor and lose to its successor exactly
-    * as the uninterrupted run does. Each chunk is ONE parquet file so
-    * maxFilesPerTrigger=1 maps one chunk to one microbatch. */
+  /** The numbers a victim recorded under `name` in its JSON note at
+    * `path` (one number, or an array of them). */
+  private def victimNote(path: String): String => IndexedSeq[Long] = {
+    val json = Files.readString(Paths.get(path))
+    name => s""""$name":\\[?([0-9, ]*)""".r.findFirstMatchIn(json)
+      .map(_.group(1).split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toIndexedSeq)
+      .filter(_.nonEmpty)
+      .getOrElse(sys.error(s"$path missing $name"))
+  }
+
+  /** Drains a restarted stream to the end of its input and stops it;
+    * returns the ids of the batches that read input. */
+  private def drain(q: StreamingQuery): IndexedSeq[Long] = {
+    try q.processAllAvailable() finally q.stop()
+    q.recentProgress.toIndexedSeq.filter(_.numInputRows > 0).map(_.batchId)
+  }
+
+  /** Rows only in `a` and rows only in `b`, as multisets. */
+  private def diff(a: DataFrame, b: DataFrame): (Long, Long) =
+    (a.exceptAll(b).count(), b.exceptAll(a).count())
+
+  def main(args: Array[String]): Unit = {
+    lazy val scale = args.lift(2).fold(100)(_.toInt)
+    lazy val windows = args.lift(3).fold(8)(_.toInt)
+    args(0) match {
+      case "prep"    => prep(args(1), scale, windows)
+      case "victim"  => victim(args(1), args(2).toLong)
+      case "recover" => recover(args(1))
+      case "repl-prep"    => replPrep(args(1), scale, windows)
+      case "repl-victim"  => replVictim(args(1), args(2).toLong)
+      case "repl-recover" => replRecover(args(1))
+      case other => sys.error(
+        s"unknown phase '$other' (prep|victim|recover|repl-prep|repl-victim|repl-recover)")
+    }
+  }
+
+  /** Stage base + overlapping upsert chunks ([[overlapping]] windows):
+    * the replayed batch must win against its predecessor and lose to its
+    * successor exactly as the uninterrupted run does. Each chunk is ONE
+    * parquet file so maxFilesPerTrigger=1 maps one chunk to one
+    * microbatch. */
   private def prep(work: String, scale: Int, chunks: Int): Unit = {
-    val spark = session()
+    val spark = Harness.session()
     val docs = GenScaledCorpus.documentsDf(spark, scale)
       .withColumn("rev", lit(0L))
     docs.write.mode(SaveMode.Overwrite).parquet(s"$work/base")
     val n = spark.read.parquet(s"$work/base").count()
-    val chunkRows = n / chunks
-    val step = math.max(1L, (chunkRows * 4) / 5)
+    val (chunkRows, step, windows) = overlapping(n, chunks)
     val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(s"$work/input"), true)
     fs.mkdirs(new Path(s"$work/input"))
     val base = spark.read.parquet(s"$work/base")
-    (0 until chunks).foreach { i =>
-      val lo = i * step
-      val chunk = base.filter(col(Key) >= lo && col(Key) < lo + chunkRows)
+    windows.zipWithIndex.foreach { case (window, i) =>
+      val chunk = base.filter(window)
         .withColumn("rev", lit(i + 1L))
         .coalesce(1)
       val stage = s"$work/stage_chunk"
@@ -113,12 +135,13 @@ object StoreStreamBench {
         s"staging rename failed for chunk $i")
       fs.delete(new Path(stage), true)
     }
-    println(s"""{"metric":"store_stream_prep","base_rows":$n,"chunks":$chunks,"chunk_rows":$chunkRows,"step":$step}""")
+    println(Harness.jsonLine(spark, "store_stream_prep", "base_rows" -> n,
+      "chunks" -> chunks, "chunk_rows" -> chunkRows, "step" -> step))
     spark.stop()
   }
 
   private def victim(work: String, killAfter: Long): Unit = {
-    val spark = session()
+    val spark = Harness.session()
     CorpusStore.init(spark.read.parquet(s"$work/base"), s"$work/store")
     val q = inputStream(spark, work).writeStream
       .option("checkpointLocation", s"$work/ckpt")
@@ -131,9 +154,8 @@ object StoreStreamBench {
           val fullRows = batch.count()
           CorpusStore.append(batch.sparkSession, s"$work/store", batchId,
             Key, half)
-          val out = new java.io.PrintWriter(s"$work/victim.json")
-          try out.println(s"""{"killed_batch":$batchId,"partial_rows":$halfRows,"full_rows":$fullRows}""")
-          finally out.close()
+          Files.writeString(Paths.get(s"$work/victim.json"),
+            s"""{"killed_batch":$batchId,"partial_rows":$halfRows,"full_rows":$fullRows}""")
           Console.out.flush(); Console.err.flush()
           Runtime.getRuntime.halt(137)
         } else CorpusStore.append(batch.sparkSession, s"$work/store", batchId,
@@ -144,62 +166,49 @@ object StoreStreamBench {
   }
 
   private def recover(work: String): Unit = {
-    val (l1, l5) = Loadavg.read()
-    val spark = session()
+    val spark = Harness.session()
     // the victim died holding (or having just released) the writer lease;
     // crashed-writer recovery breaks it explicitly instead of waiting out
     // the staleness bound — the documented appendStream restart step
     CorpusStore.breakLock(spark, s"$work/store")
-    val victimJson = {
-      val src = scala.io.Source.fromFile(s"$work/victim.json")
-      try src.mkString finally src.close()
-    }
-    def field(name: String): Long =
-      s""""$name":(\\d+)""".r.findFirstMatchIn(victimJson)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"victim.json missing $name"))
-    val killedBatch = field("killed_batch")
-    val partialRows = field("partial_rows")
-    val fullRows = field("full_rows")
+    val note = victimNote(s"$work/victim.json")
+    val killedBatch = note("killed_batch").head
+    val partialRows = note("partial_rows").head
+    val fullRows = note("full_rows").head
     val deltaDir = f"$work/store/delta_$killedBatch%019d"
     // the partial delta the victim left behind — evidence the crash
     // window is the one under test
     val beforeRows = spark.read.parquet(deltaDir).count()
 
     // incarnation 2: the REAL appendStream against the victim's checkpoint
-    val t0 = System.nanoTime()
-    val q = CorpusStore.appendStream(inputStream(spark, work),
-      s"$work/store", Key, s"$work/ckpt").start()
-    try q.processAllAvailable() finally {}
-    val replayed = q.recentProgress.toIndexedSeq
-      .filter(_.numInputRows > 0).map(_.batchId)
-    q.stop()
-    val recoverSec = (System.nanoTime() - t0) / 1e9
+    val (recoverSec, replayed) = Harness.timed(drain(CorpusStore.appendStream(
+      inputStream(spark, work), s"$work/store", Key, s"$work/ckpt").start()))
     val afterRows = spark.read.parquet(deltaDir).count()
 
     // uninterrupted control: fresh store + checkpoint, same input
-    val t1 = System.nanoTime()
-    CorpusStore.init(spark.read.parquet(s"$work/base"), s"$work/store_control")
-    val qc = CorpusStore.appendStream(inputStream(spark, work),
-      s"$work/store_control", Key, s"$work/ckpt_control").start()
-    try qc.processAllAvailable() finally {}
-    val controlBatches = qc.recentProgress.toIndexedSeq
-      .count(_.numInputRows > 0)
-    qc.stop()
-    val controlSec = (System.nanoTime() - t1) / 1e9
+    val (controlSec, controlIds) = Harness.timed {
+      CorpusStore.init(spark.read.parquet(s"$work/base"), s"$work/store_control")
+      drain(CorpusStore.appendStream(inputStream(spark, work),
+        s"$work/store_control", Key, s"$work/ckpt_control").start())
+    }
 
     // parity: the recovered store must read exactly as the control
     val got = CorpusStore.read(spark, s"$work/store", Key)
     val want = CorpusStore.read(spark, s"$work/store_control", Key)
     val gotRows = got.count()
     val wantRows = want.count()
-    val onlyGot = got.exceptAll(want).count()
-    val onlyWant = want.exceptAll(got).count()
+    val (onlyGot, onlyWant) = diff(got, want)
     val parity = gotRows == wantRows && onlyGot == 0L && onlyWant == 0L
     val overwrote = beforeRows == partialRows && afterRows == fullRows
     val replayedKilled = replayed.contains(killedBatch)
 
-    println(s"""{"metric":"store_stream_recovery","killed_batch":$killedBatch,"partial_delta_rows_before":$beforeRows,"delta_rows_after_replay":$afterRows,"full_chunk_rows":$fullRows,"partial_overwritten":$overwrote,"replayed_batch_ids":${replayed.mkString("[", ",", "]")},"replayed_killed_batch":$replayedKilled,"recover_sec":${fmt(recoverSec)},"control_sec":${fmt(controlSec)},"control_batches":$controlBatches,"store_rows":$gotRows,"control_rows":$wantRows,"rows_only_in_recovered":$onlyGot,"rows_only_in_control":$onlyWant,"parity":$parity,"loadavg_1m":${fmt(l1)},"loadavg_5m":${fmt(l5)}}""")
+    println(Harness.jsonLine(spark, "store_stream_recovery", "killed_batch" -> killedBatch,
+      "partial_delta_rows_before" -> beforeRows, "delta_rows_after_replay" -> afterRows,
+      "full_chunk_rows" -> fullRows, "partial_overwritten" -> overwrote,
+      "replayed_batch_ids" -> replayed, "replayed_killed_batch" -> replayedKilled,
+      "recover_sec" -> recoverSec, "control_sec" -> controlSec,
+      "control_batches" -> controlIds.size, "store_rows" -> gotRows, "control_rows" -> wantRows,
+      "rows_only_in_recovered" -> onlyGot, "rows_only_in_control" -> onlyWant, "parity" -> parity))
     spark.stop()
     if (!(parity && overwrote && replayedKilled)) sys.exit(1)
   }
@@ -228,24 +237,23 @@ object StoreStreamBench {
     * 4 part files so maxFilesPerTrigger=3 straddles seqs across
     * microbatches. */
   private def replPrep(work: String, scale: Int, appends: Int): Unit = {
-    val spark = session()
+    val spark = Harness.session()
     val docs = GenScaledCorpus.documentsDf(spark, scale)
       .withColumn("rev", lit(0L))
     CorpusStore.init(docs, s"$work/primary")
     val base = spark.read.parquet(s"$work/primary/base")
     val n = base.count()
-    val chunkRows = n / appends
-    val step = math.max(1L, (chunkRows * 4) / 5)
-    (0 until appends).foreach { i =>
-      val lo = i * step
-      val window = col(Key) >= lo && col(Key) < lo + chunkRows
+    val (chunkRows, step, windows) = overlapping(n, appends)
+    windows.zipWithIndex.foreach { case (window, i) =>
       CorpusStore.append(spark, s"$work/primary", i.toLong, Key,
         base.filter(window).withColumn("rev", lit(i + 1L)).repartition(4),
         deleteKeys = Some(base.filter(window && col(Key) % 13 === 0)
           .select(col(Key))))
     }
     val deltaFiles = spark.read.parquet(s"$work/primary/delta_*").inputFiles.length
-    println(s"""{"metric":"store_repl_prep","base_rows":$n,"appends":$appends,"chunk_rows":$chunkRows,"step":$step,"delta_files":$deltaFiles}""")
+    println(Harness.jsonLine(spark, "store_repl_prep", "base_rows" -> n,
+      "appends" -> appends, "chunk_rows" -> chunkRows, "step" -> step,
+      "delta_files" -> deltaFiles))
     spark.stop()
   }
 
@@ -256,7 +264,7 @@ object StoreStreamBench {
     * returns — a replicator dead mid-apply with partial replica deltas
     * on disk and the batch's offset uncommitted. */
   private def replVictim(work: String, killAfter: Long): Unit = {
-    val spark = session()
+    val spark = Harness.session()
     CorpusStore.init(spark.read.parquet(s"$work/primary/base"), s"$work/replica")
     val q = CorpusStore.changesStream(spark, s"$work/primary", ReplOpts)
       .writeStream
@@ -270,9 +278,8 @@ object StoreStreamBench {
             .map(_.getLong(0)).sorted
           CorpusStore.applyChangeSlice(batch.sparkSession, s"$work/replica",
             Key, half)
-          val out = new java.io.PrintWriter(s"$work/repl_victim.json")
-          try out.println(s"""{"killed_batch":$batchId,"partial_rows":$halfRows,"full_rows":$fullRows,"killed_seqs":${seqs.mkString("[", ",", "]")}}""")
-          finally out.close()
+          Files.writeString(Paths.get(s"$work/repl_victim.json"),
+            s"""{"killed_batch":$batchId,"partial_rows":$halfRows,"full_rows":$fullRows,"killed_seqs":${seqs.mkString("[", ",", "]")}}""")
           Console.out.flush(); Console.err.flush()
           Runtime.getRuntime.halt(137)
         } else CorpusStore.applyChangeSlice(batch.sparkSession,
@@ -283,25 +290,14 @@ object StoreStreamBench {
   }
 
   private def replRecover(work: String): Unit = {
-    val (l1, l5) = Loadavg.read()
-    val spark = session()
+    val spark = Harness.session()
     // break the dead replicator's lease before restarting (see recover)
     CorpusStore.breakLock(spark, s"$work/replica")
-    val victimJson = {
-      val src = scala.io.Source.fromFile(s"$work/repl_victim.json")
-      try src.mkString finally src.close()
-    }
-    def field(name: String): Long =
-      s""""$name":(\\d+)""".r.findFirstMatchIn(victimJson)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"repl_victim.json missing $name"))
-    val killedBatch = field("killed_batch")
-    val partialRows = field("partial_rows")
-    val fullRows = field("full_rows")
-    val killedSeqs = """"killed_seqs":\[([0-9, ]*)\]""".r
-      .findFirstMatchIn(victimJson).map(_.group(1))
-      .getOrElse(sys.error("repl_victim.json missing killed_seqs"))
-      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toIndexedSeq
+    val note = victimNote(s"$work/repl_victim.json")
+    val killedBatch = note("killed_batch").head
+    val partialRows = note("partial_rows").head
+    val fullRows = note("full_rows").head
+    val killedSeqs = note("killed_seqs")
     // replica deltas are keyed by PRIMARY seq; the killed batch's seqs are
     // in a partial merged state right now. Row count alone is not enough
     // evidence — a skipped slice can be pure tombstone FLIPS for keys
@@ -326,39 +322,28 @@ object StoreStreamBench {
     val (beforeRows, beforeTombs) = killedDeltaState()
 
     // incarnation 2: the REAL replicateTo against the victim's checkpoint
-    val t0 = System.nanoTime()
-    val q = CorpusStore.replicateTo(spark, s"$work/primary", s"$work/replica",
-      Key, s"$work/rckpt", ReplOpts).start()
-    try q.processAllAvailable() finally {}
-    val replayed = q.recentProgress.toIndexedSeq
-      .filter(_.numInputRows > 0).map(_.batchId)
-    q.stop()
-    val recoverSec = (System.nanoTime() - t0) / 1e9
+    val (recoverSec, replayed) = Harness.timed(drain(CorpusStore.replicateTo(
+      spark, s"$work/primary", s"$work/replica", Key, s"$work/rckpt", ReplOpts).start()))
     val (afterRows, afterTombs) = killedDeltaState()
 
     // uninterrupted control replica: fresh store + checkpoint, same feed
-    val t1 = System.nanoTime()
-    CorpusStore.init(spark.read.parquet(s"$work/primary/base"),
-      s"$work/replica_control")
-    val qc = CorpusStore.replicateTo(spark, s"$work/primary",
-      s"$work/replica_control", Key, s"$work/rckpt_control", ReplOpts).start()
-    try qc.processAllAvailable() finally {}
-    val controlBatches = qc.recentProgress.toIndexedSeq.count(_.numInputRows > 0)
-    qc.stop()
-    val controlSec = (System.nanoTime() - t1) / 1e9
+    val (controlSec, controlIds) = Harness.timed {
+      CorpusStore.init(spark.read.parquet(s"$work/primary/base"),
+        s"$work/replica_control")
+      drain(CorpusStore.replicateTo(spark, s"$work/primary",
+        s"$work/replica_control", Key, s"$work/rckpt_control", ReplOpts).start())
+    }
 
     // parity 1 (the operator contract): replica.read == primary.read
     val primary = CorpusStore.read(spark, s"$work/primary", Key)
     val replica = CorpusStore.read(spark, s"$work/replica", Key)
     val primRows = primary.count()
     val replRows = replica.count()
-    val onlyRepl = replica.exceptAll(primary).count()
-    val onlyPrim = primary.exceptAll(replica).count()
+    val (onlyRepl, onlyPrim) = diff(replica, primary)
     val parityPrimary = primRows == replRows && onlyRepl == 0L && onlyPrim == 0L
     // parity 2: recovered replica == uninterrupted control replica
     val control = CorpusStore.read(spark, s"$work/replica_control", Key)
-    val onlyGotC = replica.exceptAll(control).count()
-    val onlyCtlC = control.exceptAll(replica).count()
+    val (onlyGotC, onlyCtlC) = diff(replica, control)
     val parityControl = onlyGotC == 0L && onlyCtlC == 0L
     // crash-state evidence: the killed seqs' replica deltas were short of
     // the primary's netted state (fewer keys OR fewer tombstones) before
@@ -367,7 +352,18 @@ object StoreStreamBench {
       afterRows == expectedRows && afterTombs == expectedTombs
     val replayedKilled = replayed.contains(killedBatch)
 
-    println(s"""{"metric":"store_replication_recovery","killed_batch":$killedBatch,"killed_seqs":${killedSeqs.mkString("[", ",", "]")},"victim_partial_rows":$partialRows,"victim_batch_rows":$fullRows,"killed_delta_rows_before":$beforeRows,"killed_delta_tombs_before":$beforeTombs,"killed_delta_rows_after":$afterRows,"killed_delta_tombs_after":$afterTombs,"killed_delta_rows_expected":$expectedRows,"killed_delta_tombs_expected":$expectedTombs,"partial_merged_to_full":$overwrote,"replayed_batch_ids":${replayed.mkString("[", ",", "]")},"replayed_killed_batch":$replayedKilled,"recover_sec":${fmt(recoverSec)},"control_sec":${fmt(controlSec)},"control_batches":$controlBatches,"primary_rows":$primRows,"replica_rows":$replRows,"rows_only_in_replica":$onlyRepl,"rows_only_in_primary":$onlyPrim,"parity_vs_primary":$parityPrimary,"rows_only_vs_control":${onlyGotC + onlyCtlC},"parity_vs_control":$parityControl,"loadavg_1m":${fmt(l1)},"loadavg_5m":${fmt(l5)}}""")
+    println(Harness.jsonLine(spark, "store_replication_recovery", "killed_batch" -> killedBatch,
+      "killed_seqs" -> killedSeqs, "victim_partial_rows" -> partialRows,
+      "victim_batch_rows" -> fullRows, "killed_delta_rows_before" -> beforeRows,
+      "killed_delta_tombs_before" -> beforeTombs, "killed_delta_rows_after" -> afterRows,
+      "killed_delta_tombs_after" -> afterTombs, "killed_delta_rows_expected" -> expectedRows,
+      "killed_delta_tombs_expected" -> expectedTombs, "partial_merged_to_full" -> overwrote,
+      "replayed_batch_ids" -> replayed, "replayed_killed_batch" -> replayedKilled,
+      "recover_sec" -> recoverSec, "control_sec" -> controlSec,
+      "control_batches" -> controlIds.size, "primary_rows" -> primRows, "replica_rows" -> replRows,
+      "rows_only_in_replica" -> onlyRepl, "rows_only_in_primary" -> onlyPrim,
+      "parity_vs_primary" -> parityPrimary, "rows_only_vs_control" -> (onlyGotC + onlyCtlC),
+      "parity_vs_control" -> parityControl))
     spark.stop()
     if (!(parityPrimary && parityControl && overwrote && replayedKilled)) sys.exit(1)
   }

@@ -112,7 +112,7 @@ final case class QueryDef(
     // Oracles derived from run-time-pinned state (the IVF centroid
     // models) depend on WHICH sf-dir the queries ran against; such
     // entries set oracle=None and resolve here, with the dir threaded
-    // explicitly from Verify/DumpOne — no process-global hint.
+    // explicitly from Verify — no process-global hint.
     oracleDirFn: Option[Option[String] => Option[String]] = None) {
   /** Oracle SQL for the given sf-dir. Dir-independent oracles (the vast
     * majority) ignore `dir`; dir-dependent ones (pinned IVF models)

@@ -19,22 +19,20 @@ import graft.operators.Dedup
 object ValidateComponents {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/sf1"
-    val spark = GraftSession.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val pairs = Dedup.ngramJaccardPairs(Tables.documents(spark, dir), threshold = 0.2)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
     val nPairs = pairs.count()
-    def run(driverMax: Long): (Array[(Long, Long, Long)], Double) = {
-      val t0 = System.nanoTime()
-      val rows = Dedup.connectedComponents(pairs, driverMax = driverMax)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      (rows, (System.nanoTime() - t0) / 1e9)
-    }
-    val (viaDriver, tDriver) = run(driverMax = Long.MaxValue)
-    val (viaLoop, tLoop) = run(driverMax = 0L)
+    def run(driverMax: Long): (Double, Array[(Long, Long, Long)]) = Harness.timed(
+      Dedup.connectedComponents(pairs, driverMax = driverMax)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    val (tDriver, viaDriver) = run(driverMax = Long.MaxValue)
+    val (tLoop, viaLoop) = run(driverMax = 0L)
     // both paths orderBy(doc_id): element-wise equality IS byte identity
     val equal = viaDriver.sameElements(viaLoop)
-    println(f"""{"metric":"cc_equivalence","dir":"$dir","n_pairs":$nPairs,"n_rows":${viaDriver.length},"driver_sec":$tDriver%.2f,"distributed_sec":$tLoop%.2f,"equal":$equal}""")
+    println(Harness.jsonLine(spark, "cc_equivalence", "dir" -> dir, "n_pairs" -> nPairs,
+      "n_rows" -> viaDriver.length, "driver_sec" -> tDriver, "distributed_sec" -> tLoop,
+      "equal" -> equal))
     spark.stop()
     if (!equal) sys.exit(1)
   }

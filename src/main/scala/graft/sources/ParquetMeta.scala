@@ -165,7 +165,7 @@ object ParquetMeta {
     * (SchemaMergeUtils.mergeSchemasInParallel always schedules one), and
     * the store's verbs construct MANY reads per operation — the
     * inference jobs, not the data jobs, dominated the e2e store wall
-    * (JobProbe, r15). Non-Spark-written files fall back to the normal
+    * (per-job census, r15). Non-Spark-written files fall back to the normal
     * inference read. */
   def read(spark: SparkSession,
       dirs: Seq[String]): org.apache.spark.sql.DataFrame =

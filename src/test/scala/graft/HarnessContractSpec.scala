@@ -24,6 +24,23 @@ class HarnessContractSpec extends SparkTestBase {
     assert(Bench.crashName(new RuntimeException("x" * 500)).length == 160)
     assert(Bench.crashName(new NullPointerException) == "java.lang.NullPointerException")
     assert(SparkEntry.jsonString("a\\b\u0001") == "\"a\\\\b\\u0001\"")
+    // every harness main prints its JSON line through Harness.jsonLine
+    val line = Harness.jsonLine(spark, "m", "s" -> "say \"hi\"\nbye", "t" -> Double.NaN)
+    assert(line.startsWith("""{"metric":"m","s":"say \"hi\"\nbye","t":null,"""))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("s").asText == "say \"hi\"\nbye")
+    Seq("metric", "loadavg_1m", "loadavg_5m", "host").foreach(k => assert(json.has(k), k))
+    assert(json.get("host").get("nproc").asInt == Runtime.getRuntime.availableProcessors())
+  }
+
+  test("Verify deletes a query's old output before running it and names its crash") {
+    val out = java.nio.file.Files.createTempDirectory("verify_dump").toFile
+    val stale = new java.io.File(out, "boom")
+    assert(stale.mkdirs())
+    val boom: Harness.Query = (_, _) => throw new IllegalStateException("no plan")
+    val crashes = Verify.dump(spark, "/root/testdata/sf0.001", out.getPath, Map("boom" -> boom))
+    assert(!stale.exists(), "a crashed query's stale output must not survive")
+    assert(crashes == Map("boom" -> "java.lang.IllegalStateException: no plan"))
   }
 
   test("every registered query executes at sf0.001") {
@@ -45,7 +62,7 @@ class HarnessContractSpec extends SparkTestBase {
     Seq("sim_topk_ivf", "sim_topk_ivf_pretrained", "sim_topk_batch",
         "dedup_semantic", "dedup_semantic_lowtau").foreach { n =>
       SparkEntry.queries(n)(spark, dir).count()
-      // dir-hinted lookup, exactly as Verify/DumpOne resolve it: checks
+      // dir-hinted lookup, exactly as Verify resolves it: checks
       // the pin for the dir this test just ran, immune to other suites
       // in the same JVM having pinned the same query against another dir
       assert(SparkEntry.oracleSqlFor(Some(dir)).contains(n),
