@@ -10,12 +10,11 @@ import org.apache.spark.sql.graft.{BloomFilterAgg, BloomMightContain, BloomMight
   */
 object HashFunctions {
 
-  /** 64-bit SimHash of an array<string> token column (xxhash64 votes).
-    * With `portable = true` the votes come from the md5-low-60-bits
-    * token hash any engine can recompute (cross-engine reproducible
-    * signatures; bits 60-63 always clear). */
-  def simhash(toks: Column, portable: Boolean = false): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(toks), portable))
+  /** SimHash of an array<string> token column: votes over the
+    * md5-low-60-bits token hash any engine can recompute (cross-engine
+    * reproducible signatures; bits 60-63 always clear). */
+  def simhash(toks: Column): Column =
+    ColumnBridge.column(SimHash64(ColumnBridge.expression(toks)))
 
   /** MinHash signature (array<long>, length numHashes) of an array<string>
     * shingle column. */
@@ -23,16 +22,13 @@ object HashFunctions {
     ColumnBridge.column(
       MinHashSignature(ColumnBridge.expression(shingles), numHashes))
 
-  /** Winnowing fingerprints (rolling n-gram hash, window-w min selection)
-    * of an array<string> token column — guarantees a shared fingerprint
-    * for any shared run of >= w + n - 1 tokens at ~2/(w+1) the density of
-    * a full shingle index. With `portable = true` the gram hash is the
-    * md5-low-60-bits formula any engine can recompute (cross-engine
-    * reproducible fingerprints, at md5 cost per gram) instead of the
-    * faster engine-internal xxhash64 fold. */
-  def winnowing(toks: Column, n: Int, w: Int, portable: Boolean = false): Column =
-    ColumnBridge.column(
-      WinnowingFingerprints(ColumnBridge.expression(toks), n, w, portable))
+  /** Winnowing fingerprints (n-gram hash, window-w min selection) of an
+    * array<string> token column — guarantees a shared fingerprint for any
+    * shared run of >= w + n - 1 tokens at ~2/(w+1) the density of a full
+    * shingle index. The gram hash is the md5-low-60-bits formula any
+    * engine can recompute (cross-engine reproducible fingerprints). */
+  def winnowing(toks: Column, n: Int, w: Int): Column =
+    ColumnBridge.column(WinnowingFingerprints(ColumnBridge.expression(toks), n, w))
 
   /** Bloom filter (BinaryType bytes) over a pre-hashed long column.
     * numBits/8 bytes of state, map-side partial merge = bitwise OR —

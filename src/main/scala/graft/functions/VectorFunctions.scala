@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ArgMaxFloatDot, ColumnBridge, Dequantize8, FloatVectorDot, HyperplaneSignBits, Quantize8, QuantizedDot, QuantizedDotRaw}
+import org.apache.spark.sql.graft.{ArgMaxFloatDot, ColumnBridge, Dequantize8, FloatVectorDot, HyperplaneSignBits, Quantize8, QuantizedDot}
 
 /** User-facing vector math over array<float> embedding columns.
   * Backed by native codegen'd expressions (org.apache.spark.sql.graft).
@@ -52,40 +52,27 @@ object VectorFunctions {
 
   /** Symmetric int8 quantization of an embedding: struct<scale, q:binary>,
     * 4x smaller than float32 at rest and on the shuffle wire; max
-    * elementwise round-trip error scale/2. With `portable = true` the
-    * bytes come from the all-f64 clamp(floor(v / (max|v|/127) + 0.5))
-    * formula any IEEE engine reproduces bit-for-bit. */
-  def quantize8(a: Column, portable: Boolean = false): Column =
-    ColumnBridge.column(Quantize8(ColumnBridge.expression(a), portable))
+    * elementwise round-trip error scale/2. The bytes come from the
+    * all-f64 clamp(floor(v / (max|v|/127) + 0.5)) formula any IEEE
+    * engine reproduces bit-for-bit. */
+  def quantize8(a: Column): Column =
+    ColumnBridge.column(Quantize8(ColumnBridge.expression(a)))
 
   def dequantize8(a: Column): Column =
     ColumnBridge.column(Dequantize8(ColumnBridge.expression(a)))
 
-  /** Dot product of two quantize8 structs scored in the int8 domain
-    * (long integer MAC x scale product — no dequantization, so a
-    * quantized-index scan moves 1/4 the bytes of float32). */
-  def quantizedDot(a: Column, b: Column): Column =
-    ColumnBridge.column(QuantizedDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Cosine over quantized structs: the scale factors cancel, leaving a
-    * pure integer cosine. Null on zero norms, like [[cosine]]. */
+  /** Cosine over quantize8 structs scored in the int8 domain (no
+    * dequantization, so a quantized-index scan moves 1/4 the bytes of
+    * float32). The scale factors cancel, leaving a pure integer cosine
+    * over exact long dots: with one IEEE sqrt/division each, the double
+    * result is bit-identical in any engine evaluating
+    * dot_ab / (sqrt(dot_aa) * sqrt(dot_bb)). Null on zero norms, like
+    * [[cosine]]. */
   def quantizedCosine(a: Column, b: Column): Column = {
-    val d = quantizedDot(a, b)
-    val n = sqrt(quantizedDot(a, a)) * sqrt(quantizedDot(b, b))
-    when(n =!= 0.0, d / n)
-  }
-
-  /** [[quantizedCosine]] computed from raw integer dots (no scale
-    * factors anywhere): with exact long inputs and one IEEE sqrt/division
-    * each, the double result is bit-identical in any engine evaluating
-    * dot_ab / (sqrt(dot_aa) * sqrt(dot_bb)) — the scoring form the
-    * cross-engine quantized top-k oracle requires. */
-  def quantizedCosineRaw(a: Column, b: Column): Column = {
-    def raw(x: Column, y: Column): Column =
-      ColumnBridge.column(QuantizedDotRaw(ColumnBridge.expression(x), ColumnBridge.expression(y)))
-    val d = raw(a, b).cast("double")
-    val n = sqrt(raw(a, a).cast("double")) * sqrt(raw(b, b).cast("double"))
-    when(n =!= 0.0, d / n)
+    def dot(x: Column, y: Column): Column = ColumnBridge.column(
+      QuantizedDot(ColumnBridge.expression(x), ColumnBridge.expression(y))).cast("double")
+    val n = sqrt(dot(a, a)) * sqrt(dot(b, b))
+    when(n =!= 0.0, dot(a, b) / n)
   }
 
   /** Reference implementation of vecDot via built-in higher-order

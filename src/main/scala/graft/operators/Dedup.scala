@@ -256,12 +256,11 @@ object Dedup {
     * folds of (subset id, chunk values); a 64-bit collision only ADDS a
     * candidate, which exact verification then filters, so the OUTPUT is
     * blocking-invariant: the all-pairs hamming <= maxHamming answer for
-    * the chosen hash family at any agreeChunks. With `portableHash =
-    * true` that family is the md5-low-60 token hash any engine can
-    * recompute — the registered dedup_simhash query runs this way and
+    * the md5-low-60 token-hash signature at any agreeChunks. Any engine
+    * can recompute that signature, so the registered dedup_simhash query
     * carries a full (blocking-free, all-pairs) DuckDB oracle. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      portableHash: Boolean = false, agreeChunks: Int = 1): DataFrame = {
+      agreeChunks: Int = 1): DataFrame = {
     require(maxHamming >= 1 && maxHamming <= 15,
       s"maxHamming must be in [1,15], got $maxHamming")
     require(agreeChunks >= 1 && agreeChunks <= 4,
@@ -277,7 +276,7 @@ object Dedup {
     val base = Compute.toComputeBudget(docs)
       .withColumn("toks", TextFunctions.tokens(col("text")))
       .filter(size(col("toks")) > 0)
-      .select(col("doc_id"), HashFunctions.simhash(col("toks"), portableHash).as("sim"))
+      .select(col("doc_id"), HashFunctions.simhash(col("toks")).as("sim"))
       .localCheckpoint(true)
     // chunk c covers bits [c*width, (c+1)*width); the final chunk absorbs
     // the 64 - chunks*width remainder bits (shiftright sign-extends, so
@@ -311,15 +310,13 @@ object Dedup {
     * Verification is unaffected: surfaced pairs carry their exact
     * full-set Jaccard.
     *
-    * `portableHash = true` fingerprints with the md5-low-60-bits gram
-    * hash instead of the engine-internal xxhash64 fold: any engine with
-    * md5 then reproduces the candidate surfacing (and hence the full
-    * output) bit-for-bit — the registered dedup_winnowing query runs
-    * this way and carries a complete DuckDB oracle. The default stays
-    * on xxhash64 (no md5 cost per gram) for engine-internal dedup. */
+    * Fingerprints use the md5-low-60-bits gram hash: any engine with
+    * md5 reproduces the candidate surfacing (and hence the full output)
+    * bit-for-bit, so the registered dedup_winnowing query carries a
+    * complete DuckDB oracle. */
   def winnowingPairs(docs: DataFrame, threshold: Double,
       n: Int = 3, w: Int = 4, minShared: Int = 2, maxDf: Int = 1000,
-      maxCandidates: Long = DefaultMaxCandidates, portableHash: Boolean = false): DataFrame = {
+      maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
     // one tokenization pass: fingerprints (candidate index) and shingles
     // (verification sets) are both derived from the same `toks` projection
     // and the frame is localCheckpoint-ed, so the corpus is tokenized and
@@ -336,7 +333,7 @@ object Dedup {
       .withColumn("toks", TextFunctions.tokens(col("text")))
       .select(col("doc_id"),
         TextFunctions.shingles(col("toks"), n).as("sh"),
-        HashFunctions.winnowing(col("toks"), n, w, portableHash).as("fp"))
+        HashFunctions.winnowing(col("toks"), n, w).as("fp"))
       .filter(size(col("sh")) > 0)
       .transform(Compute.checkpointSer) // wide shingle+fp arrays: serialized storage (OOM'd an 8g heap deserialized at sf~1)
     val inv = base.filter(size(col("fp")) > 0)

@@ -40,24 +40,22 @@ object Versioning {
     * rows pass through. Schemas must match (unionByName).
     *
     * Scale shape — the batch is small, the corpus is the 100 TB side:
-    * with `broadcastUpdates` (default) the corpus NEVER shuffles — its
-    * rows stream once through a broadcast LEFT ANTI join on the batch's
-    * keys and the union is append-only. The hint is COUNT-GUARDED (the
-    * verifyJaccard pattern): the batch plan is executed once to size it
-    * — O(batch) by this operator's contract; the corpus side never runs
-    * — and a batch past `maxBroadcastKeys` falls back to a plain
-    * shuffled anti-join with identical output instead of forcing an
-    * unbounded broadcast. Set `broadcastUpdates` false to skip the count
-    * and take the shuffled path directly, or pre-filter with the bloom
+    * the corpus NEVER shuffles — its rows stream once through a
+    * broadcast LEFT ANTI join on the batch's keys and the union is
+    * append-only. The hint is COUNT-GUARDED (the verifyJaccard pattern):
+    * the batch plan is executed once to size it — O(batch) by this
+    * operator's contract; the corpus side never runs — and a batch past
+    * `maxBroadcastKeys` falls back to a plain shuffled anti-join with
+    * identical output instead of forcing an unbounded broadcast. A batch
+    * too large to count cheaply can be pre-filtered with the bloom
     * pattern of [[Dedup.incrementalDups]] so only might-match corpus
     * rows pay the exact join. Idempotent: applying the same batch twice
     * equals once (VersioningSpec). */
   def upsert(corpus: DataFrame, updates: DataFrame, key: String,
-      broadcastUpdates: Boolean = true,
       maxBroadcastKeys: Long = CorpusStore.DefaultMaxBroadcastKeys): DataFrame = {
     val keys = updates.select(col(key))
     val kept =
-      if (broadcastUpdates && updates.count() <= maxBroadcastKeys)
+      if (updates.count() <= maxBroadcastKeys)
         corpus.join(broadcast(keys), Seq(key), "left_anti")
       else corpus.join(keys, Seq(key), "left_anti")
     updates.unionByName(kept)

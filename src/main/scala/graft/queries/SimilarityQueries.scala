@@ -42,10 +42,10 @@ object SimilarityQueries {
     Dedup.minhashPairs(Tables.documents(s, dir), threshold = 0.9,
       maxCandidates = 16000000L)
 
-  // registered with portableHash = true: chunk blocking is exact-recall
-  // (pigeonhole), so the output is the all-pairs hamming <= 3 answer for
-  // the md5-low-60 hash family — which DuckDB recomputes signature-for-
-  // signature (per-bit vote aggregation + bit_count(xor)).
+  // chunk blocking is exact-recall (pigeonhole), so the output is the
+  // all-pairs hamming <= 3 answer for the md5-low-60 signature — which
+  // DuckDB recomputes signature-for-signature (per-bit vote aggregation
+  // + bit_count(xor)).
   // agreeChunks derived from the corpus cardinality (a metadata-only
   // parquet count): the 4 x 16-bit blocking saturates its key space past
   // 2^16 docs (34x wall measured for the 100x -> 1000x gen decade); wider
@@ -54,7 +54,7 @@ object SimilarityQueries {
   // so the all-pairs oracle below is valid at every derived m.
   private def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    Dedup.simhashPairs(docs, maxHamming = 3, portableHash = true,
+    Dedup.simhashPairs(docs, maxHamming = 3,
       agreeChunks = Dedup.simhashAgreeChunks(docs.count()))
   }
 
@@ -74,8 +74,8 @@ object SimilarityQueries {
       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
       |  FROM documents
       |), th AS (
-      |  -- per-OCCURRENCE token hashes (md5 low 60 bits, the portable
-      |  -- formula of graft simhash(portable = true))
+      |  -- per-OCCURRENCE token hashes (md5 low 60 bits, the token
+      |  -- hash of graft simhash)
       |  SELECT doc_id, CAST('0x' || substring(md5(unnest(toks)), 1, 15) AS BIGINT) AS h
       |  FROM toked WHERE len(toks) >= 1
       |), votes AS (
@@ -109,12 +109,11 @@ object SimilarityQueries {
   private def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
     Dedup.ngramJaccardPairs(Tables.documents(s, dir), threshold = 0.2)
 
-  // registered with portableHash = true: the md5-low-60 gram hash lets
-  // DuckDB reproduce the fingerprint selection (min-over-window of the
-  // same hash), the candidate surfacing, and hence the exact output —
-  // a full oracle for a windowed-fingerprint dedup, valid for any
-  // corpus, not a data-dependent coincidence. Engine-internal runs keep
-  // the default xxhash64 fold (no md5 cost per gram).
+  // the md5-low-60 gram hash lets DuckDB reproduce the fingerprint
+  // selection (min-over-window of the same hash), the candidate
+  // surfacing, and hence the exact output — a full oracle for a
+  // windowed-fingerprint dedup, valid for any corpus, not a
+  // data-dependent coincidence.
   // maxCandidates raised above the 1M ad-hoc default: winnowing's
   // candidate set is provably post-blocking (shared distinct window-min
   // fingerprints, minShared >= 2), and on a heavily-duplicated corpus the
@@ -124,7 +123,7 @@ object SimilarityQueries {
   // not sit at the unblocked-input tripwire.
   private def dedupWinnowing(s: SparkSession, dir: String): DataFrame =
     Dedup.winnowingPairs(Tables.documents(s, dir), threshold = 0.2,
-      portableHash = true, maxCandidates = 16000000L)
+      maxCandidates = 16000000L)
 
   private val dedupWinnowingSql =
     """WITH toked AS (
@@ -138,7 +137,7 @@ object SimilarityQueries {
       |  SELECT doc_id, grams, len(grams) AS n FROM sh WHERE len(grams) > 0
       |), gseq AS (
       |  -- ordered (non-distinct) gram sequence, md5-low-60 hash per gram:
-      |  -- the portable hash winnowingPairs(portableHash = true) uses
+      |  -- the gram hash graft winnowingPairs uses
       |  SELECT doc_id, x.pos AS pos, x.h AS h FROM (
       |    SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1), i -> {
       |      'pos': i,
@@ -358,22 +357,22 @@ object SimilarityQueries {
   // the cosine) — never dequantized, so the 4x byte saving of the
   // quantized index holds in the scoring scan, not just at rest. At scale
   // the quantize8 struct is a landed column; here it is computed in the
-  // same scan. Registered portable: the all-f64 quantizer and the
-  // raw-integer-dot cosine are both bit-reproducible in any IEEE engine,
-  // so the query carries a full DuckDB oracle (recall vs float-exact
-  // stays spec-checked in SimilaritySpec).
+  // same scan. The all-f64 quantizer and the raw-integer-dot cosine are
+  // both bit-reproducible in any IEEE engine, so the query carries a full
+  // DuckDB oracle (recall vs float-exact stays spec-checked in
+  // SimilaritySpec).
   private def simTopkQuantized(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, round}
-    import graft.functions.VectorFunctions.{quantize8, quantizedCosineRaw}
+    import graft.functions.VectorFunctions.{quantize8, quantizedCosine}
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
-        quantize8(col("embedding"), portable = true).as("qz"))
+        quantize8(col("embedding")).as("qz"))
     val q = emb.filter(col("vec_id") === 0L).select(col("qz").as("q_qz"))
     emb.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= 0L)
       .select(col("vec_id"),
         col("label").cast(org.apache.spark.sql.types.LongType).as("label"),
-        round(quantizedCosineRaw(col("qz"), col("q_qz")), 6).as("cos_sim"))
+        round(quantizedCosine(col("qz"), col("q_qz")), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -387,7 +386,7 @@ object SimilarityQueries {
       |  FROM (SELECT vec_id, label, v,
       |          list_max(list_transform(v, y -> abs(y))) AS m FROM e)
       |), q8 AS (
-      |  -- the portable quantizer: clamp(floor(v / scale + 0.5)) in f64
+      |  -- graft's quantizer: clamp(floor(v / scale + 0.5)) in f64
       |  SELECT vec_id, label,
       |    list_transform(v, x -> GREATEST(-127.0, LEAST(127.0, FLOOR(x / s + 0.5)))) AS q
       |  FROM scaled

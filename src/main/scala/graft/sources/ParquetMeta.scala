@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.control.NonFatal
 
 /** Driver-side parquet FOOTER reads — the metadata behind every
   * cadence / broadcast-preflight decision in the store family.
@@ -68,11 +70,13 @@ object ParquetMeta {
       .map(_.getPath)
   }
 
-  /** invokeAll + get, unwrapping ExecutionException so call sites see the
-    * same IOException/AnalysisException surface a direct read would
-    * throw, not a java.util.concurrent wrapper. */
-  private def pooled[T](tasks: Seq[java.util.concurrent.Callable[T]]): Seq[T] = {
+  /** `read` applied to every file on the shared pool, results in file
+    * order. Unwraps ExecutionException so call sites see the same
+    * IOException/AnalysisException surface a direct read would throw,
+    * not a java.util.concurrent wrapper. */
+  private def pooled[T](files: Seq[Path])(read: Path => T): Seq[T] = {
     import scala.jdk.CollectionConverters._
+    val tasks = files.map(f => ((() => read(f)): java.util.concurrent.Callable[T]))
     pool.invokeAll(tasks.asJava).asScala.toSeq.map { f =>
       try f.get()
       catch {
@@ -82,11 +86,22 @@ object ParquetMeta {
     }
   }
 
-  private def footerRows(conf: Configuration, f: Path): Long = {
+  /** Opens `f`'s footer, applies `read`, and always closes the reader. */
+  private[sources] def withFooter[T](conf: Configuration, f: Path)(
+      read: ParquetFileReader => T): T = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-    try r.getRecordCount
+    try read(r)
     finally r.close()
   }
+
+  /** The StructType JSON a Spark writer serializes into `f`'s footer
+    * key-value metadata; None for files from other writers. */
+  private def footerSchemaJson(conf: Configuration, f: Path): Option[String] =
+    withFooter(conf, f)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")))
+
+  private def parseSchema(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
 
   /** Total row count across `dirs`' parquet files plus the file count —
     * bit-identical to `spark.read.parquet(dirs: _*).count()` (both sum
@@ -95,11 +110,7 @@ object ParquetMeta {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = dirs.flatMap(dataFiles(conf, _))
     if (files.isEmpty) return (0L, 0)
-    val rows = pooled(files.map { f =>
-      new java.util.concurrent.Callable[Long] {
-        def call(): Long = footerRows(conf, f)
-      }: java.util.concurrent.Callable[Long]
-    }).sum
+    val rows = pooled(files)(withFooter(conf, _)(_.getRecordCount)).sum
     (rows, files.size)
   }
 
@@ -110,28 +121,16 @@ object ParquetMeta {
     * None when any file lacks the metadata (non-Spark writer) or the
     * schemas differ (a widened delta — the caller falls back to Spark's
     * own mergeSchema read, which is built for exactly that case). */
-  def uniformSparkSchema(spark: SparkSession,
-      dirs: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
+  def uniformSparkSchema(spark: SparkSession, dirs: Seq[String]): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = dirs.flatMap(dataFiles(conf, _))
     if (files.isEmpty) return None
-    val key = "org.apache.spark.sql.parquet.row.metadata"
-    val jsons = pooled(files.map { f =>
-      new java.util.concurrent.Callable[String] {
-        def call(): String = {
-          val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-          try r.getFooter.getFileMetaData.getKeyValueMetaData.get(key)
-          finally r.close()
-        }
-      }: java.util.concurrent.Callable[String]
-    })
-    if (jsons.exists(_ == null)) return None
+    val jsons = pooled(files)(footerSchemaJson(conf, _))
+    if (jsons.contains(None)) return None
     try {
-      val parsed = jsons.distinct.map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      val parsed = jsons.flatten.distinct.map(parseSchema)
       if (parsed.distinct.size == 1) Some(parsed.head) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** The Spark schema recorded in the FIRST data file's footer (by name
@@ -144,20 +143,13 @@ object ParquetMeta {
     * see [[uniformSparkSchema]]). A single Spark write emits one schema
     * across its files, so for any committed store dir the first file IS
     * the directory's schema. */
-  def firstFileSparkSchema(spark: SparkSession,
-      dirs: Seq[String]): Option[org.apache.spark.sql.types.StructType] =
+  def firstFileSparkSchema(spark: SparkSession, dirs: Seq[String]): Option[StructType] =
     try {
       val conf = spark.sparkContext.hadoopConfiguration
       val f = dirs.iterator.flatMap(dataFiles(conf, _)).toSeq
         .sortBy(_.getName).headOption.getOrElse(return None)
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      val json =
-        try r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")
-        finally r.close()
-      Option(json).map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    } catch { case scala.util.control.NonFatal(_) => None }
+      footerSchemaJson(conf, f).map(parseSchema)
+    } catch { case NonFatal(_) => None }
 
   /** `spark.read.parquet` with the schema recovered driver-side when the
     * footers carry it: parquet schema inference costs a Spark JOB per
@@ -221,65 +213,58 @@ object ParquetMeta {
     if (files.isEmpty) return None // scan path's schema read throws the same contract error
 
     // null result = this file's footers cannot reproduce the aggregate
-    def statsOf(f: Path): FileStats = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        val blocks = r.getRowGroups.asScala.toSeq
-        var ok = true
-        val perCol = cols.map { c =>
-          var mn: Option[Any] = None
-          var mx: Option[Any] = None
-          if (ok) {
-            val okType = schema.containsField(c) && {
-              val fld = schema.getType(Seq(c): _*)
-              fld.isPrimitive && {
-                val pt = fld.asPrimitiveType()
-                (pt.getPrimitiveTypeName == INT64 ||
-                  pt.getPrimitiveTypeName == INT32) &&
-                (pt.getLogicalTypeAnnotation == null ||
-                  pt.getLogicalTypeAnnotation.isInstanceOf[
-                    org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation])
-              }
-            }
-            if (!okType) ok = false
-            else blocks.foreach { b =>
-              if (ok) b.getColumns.asScala.find(_.getPath.toDotString == c) match {
-                case None => ok = false
-                case Some(cc) =>
-                  val st = cc.getStatistics
-                  if (st == null) ok = false
-                  else if (st.hasNonNullValue) (st.genericGetMin, st.genericGetMax) match {
-                    case (p: java.lang.Long, q: java.lang.Long) =>
-                      mn = Some(mn.fold(p: Any)(m =>
-                        if (p < m.asInstanceOf[java.lang.Long]) p else m))
-                      mx = Some(mx.fold(q: Any)(m =>
-                        if (q > m.asInstanceOf[java.lang.Long]) q else m))
-                    case (p: java.lang.Integer, q: java.lang.Integer) =>
-                      mn = Some(mn.fold(p: Any)(m =>
-                        if (p < m.asInstanceOf[java.lang.Integer]) p else m))
-                      mx = Some(mx.fold(q: Any)(m =>
-                        if (q > m.asInstanceOf[java.lang.Integer]) q else m))
-                    case _ => ok = false
-                  }
-                  else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount))
-                    ok = false // not provably all-null: a fabricated null
-                               // min/max would DROP the file from box scans
-              }
+    def statsOf(f: Path): FileStats = withFooter(conf, f) { r =>
+      val schema = r.getFooter.getFileMetaData.getSchema
+      val blocks = r.getRowGroups.asScala.toSeq
+      var ok = true
+      val perCol = cols.map { c =>
+        var mn: Option[Any] = None
+        var mx: Option[Any] = None
+        if (ok) {
+          val okType = schema.containsField(c) && {
+            val fld = schema.getType(Seq(c): _*)
+            fld.isPrimitive && {
+              val pt = fld.asPrimitiveType()
+              (pt.getPrimitiveTypeName == INT64 ||
+                pt.getPrimitiveTypeName == INT32) &&
+              (pt.getLogicalTypeAnnotation == null ||
+                pt.getLogicalTypeAnnotation.isInstanceOf[
+                  org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation])
             }
           }
-          (mn, mx)
+          if (!okType) ok = false
+          else blocks.foreach { b =>
+            if (ok) b.getColumns.asScala.find(_.getPath.toDotString == c) match {
+              case None => ok = false
+              case Some(cc) =>
+                val st = cc.getStatistics
+                if (st == null) ok = false
+                else if (st.hasNonNullValue) (st.genericGetMin, st.genericGetMax) match {
+                  case (p: java.lang.Long, q: java.lang.Long) =>
+                    mn = Some(mn.fold(p: Any)(m =>
+                      if (p < m.asInstanceOf[java.lang.Long]) p else m))
+                    mx = Some(mx.fold(q: Any)(m =>
+                      if (q > m.asInstanceOf[java.lang.Long]) q else m))
+                  case (p: java.lang.Integer, q: java.lang.Integer) =>
+                    mn = Some(mn.fold(p: Any)(m =>
+                      if (p < m.asInstanceOf[java.lang.Integer]) p else m))
+                    mx = Some(mx.fold(q: Any)(m =>
+                      if (q > m.asInstanceOf[java.lang.Integer]) q else m))
+                  case _ => ok = false
+                }
+                else if (!(st.isNumNullsSet && st.getNumNulls == b.getRowCount))
+                  ok = false // not provably all-null: a fabricated null
+                             // min/max would DROP the file from box scans
+            }
+          }
         }
-        if (!ok) null
-        else FileStats(f.toUri.getPath, blocks.map(_.getRowCount).sum, perCol)
-      } finally r.close()
+        (mn, mx)
+      }
+      if (!ok) null
+      else FileStats(f.toUri.getPath, blocks.map(_.getRowCount).sum, perCol)
     }
 
-    val out = pooled(files.map { f =>
-      new java.util.concurrent.Callable[FileStats] {
-        def call(): FileStats = statsOf(f)
-      }: java.util.concurrent.Callable[FileStats]
-    })
+    val out = pooled(files)(statsOf)
     if (out.contains(null)) None else Some(out)
   }
 }

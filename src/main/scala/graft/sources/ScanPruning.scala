@@ -277,13 +277,9 @@ object ScanPruning {
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           st.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.getName).headOption.map { st =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              st.getPath, spark.sparkContext.hadoopConfiguration))
-          try {
-            import scala.jdk.CollectionConverters._
-            r.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap
-          } finally r.close()
+          import scala.jdk.CollectionConverters._
+          ParquetMeta.withFooter(spark.sparkContext.hadoopConfiguration, st.getPath)(
+            _.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap)
         }.getOrElse(Map.empty)
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 

@@ -36,7 +36,7 @@ object GraftFunctionRegistry {
       Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("simhash64"),
       info(classOf[SimHash64], "simhash64",
-        "simhash64(tokens) - 64-bit SimHash of an array<string>."),
+        "simhash64(tokens) - SimHash (md5-low-60 token votes) of an array<string>."),
       (args: Seq[Expression]) => SimHash64(args.head)),
     (FunctionIdentifier("minhash_signature"),
       info(classOf[MinHashSignature], "minhash_signature",

@@ -229,46 +229,21 @@ case class HyperplaneSignBits(child: Expression, planes: Array[Double], dim: Int
 
 /** Tight-loop kernels shared by interpreted eval and generated Java (the
   * Scala object emits static forwarders, so codegen calls them directly).
-  * Token hashing reuses catalyst's XXH64 with the xxhash64() seed (42), so
-  * SimHash64 output is bit-identical to the equivalent built-in-function
-  * formulation over xxhash64(token).
+  * SimHash, winnowing and int8 quantization each have ONE kernel, the
+  * form any SQL engine recomputes bit for bit (md5-low-60 hashes, all-f64
+  * arithmetic), so the registered queries carry full DuckDB oracles.
   */
 object HashUtil {
 
-  /** 64-bit SimHash over per-occurrence token votes: bit i is set when the
-    * count of tokens whose xxhash64 has bit i minus the count without it is
-    * positive. Per-occurrence ±1 votes are exactly the classic
+  /** SimHash over per-occurrence token votes: bit i is set when the count
+    * of tokens whose [[md5Low60]] hash has bit i minus the count without
+    * it is positive. Per-occurrence ±1 votes are exactly the classic
     * per-distinct-token frequency weighting, without building the
-    * frequency map.
-    */
+    * frequency map. Bits 60-63 are never set, which also keeps the
+    * signature positive in engines without unsigned longs. Any engine
+    * with md5 and integer bit ops reproduces the signature — and
+    * therefore the hamming-<=k pair set — bit-for-bit. */
   def simhash64(arr: ArrayData): Long = {
-    val n = arr.numElements()
-    val votes = new Array[Int](64)
-    var k = 0
-    while (k < n) {
-      if (!arr.isNullAt(k)) {
-        val h = XXH64.hashUTF8String(arr.getUTF8String(k), 42L)
-        var i = 0
-        while (i < 64) {
-          if (((h >>> i) & 1L) == 1L) votes(i) += 1 else votes(i) -= 1
-          i += 1
-        }
-      }
-      k += 1
-    }
-    var bits = 0L
-    var i = 0
-    while (i < 64) { if (votes(i) > 0) bits |= (1L << i); i += 1 }
-    bits
-  }
-
-  /** Portable-hash SimHash: per-token votes over the 60 bits of
-    * [[md5Low60]] instead of the engine-internal xxhash64 (bits 60-63
-    * are never set, which also keeps the signature positive in engines
-    * without unsigned longs). Any engine with md5 and integer bit ops
-    * reproduces the signature — and therefore the hamming-<=k pair set —
-    * bit-for-bit. */
-  def simhash64Portable(arr: ArrayData): Long = {
     val n = arr.numElements()
     val votes = new Array[Int](60)
     var k = 0
@@ -314,39 +289,16 @@ object HashUtil {
   }
 
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03) over
-    * the token stream: hash every n-token gram with a rolling fold of the
-    * per-token xxhash64s, then select the minimum hash in each window of
-    * w consecutive grams (ties -> rightmost), deduplicating repeated
-    * selections. Guarantee: documents sharing a run of >= w + n - 1
-    * tokens share at least one fingerprint. */
-  def winnowing(arr: ArrayData, n: Int, w: Int): ArrayData = {
-    val num = arr.numElements()
-    val m = num - n + 1
-    if (m < 1) return new GenericArrayData(Array.empty[Any])
-    // per-token hashes once, then rolling n-fold per gram
-    val th = new Array[Long](num)
-    var i = 0
-    while (i < num) { th(i) = XXH64.hashUTF8String(arr.getUTF8String(i), 42L); i += 1 }
-    val gh = new Array[Long](m)
-    i = 0
-    while (i < m) {
-      var h = 42L
-      var j = 0
-      while (j < n) { h = XXH64.hashLong(th(i + j), h); j += 1 }
-      gh(i) = h
-      i += 1
-    }
-    selectWindowMinima(gh, w)
-  }
-
-  /** Portable-hash winnowing: same window-minima selection, but each
-    * gram (n tokens joined by one space — the exact WordShingles text)
-    * is hashed with [[md5Low60]] instead of the engine-internal xxhash64
-    * fold. Any engine with md5 reproduces the fingerprint set
+    * the token stream: hash every n-token gram (n tokens joined by one
+    * space — the exact WordShingles text) with [[md5Low60]], then select
+    * the minimum hash in each window of w consecutive grams (ties ->
+    * rightmost), deduplicating repeated selections. Guarantee: documents
+    * sharing a run of >= w + n - 1 tokens share at least one
+    * fingerprint. Any engine with md5 reproduces the fingerprint set
     * bit-for-bit (DuckDB: min-over-window of
     * CAST('0x' || substring(md5(gram), 1, 15) AS BIGINT)), which is what
     * lets a winnowing dedup carry a cross-engine oracle. */
-  def winnowingPortable(arr: ArrayData, n: Int, w: Int): ArrayData = {
+  def winnowing(arr: ArrayData, n: Int, w: Int): ArrayData = {
     val num = arr.numElements()
     val m = num - n + 1
     if (m < 1) return new GenericArrayData(Array.empty[Any])
@@ -417,35 +369,15 @@ object HashUtil {
   }
 
   /** Symmetric int8 quantization: scale = max|v| / 127 (1 when the
-    * vector is all-zero), bytes = round(v / scale) clamped. */
+    * vector is all-zero), bytes = round(v / scale) clamped to [-127, 127].
+    * All arithmetic in f64 (float inputs widen exactly), rounding spelled
+    * floor(x + 0.5) — every step is a single correctly-rounded IEEE op,
+    * so any engine computing clamp(floor(v / (max|v| / 127.0) + 0.5))
+    * over CAST(v AS DOUBLE) reproduces the bytes bit-for-bit (DuckDB:
+    * list_transform + GREATEST/LEAST/FLOOR). The stored scale is the f64
+    * value narrowed to f32 for the struct; cosine scoring cancels it
+    * anyway. */
   def quantize8(arr: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
-    val n = arr.numElements()
-    var maxAbs = 0.0f
-    var i = 0
-    while (i < n) {
-      val v = math.abs(arr.getFloat(i))
-      if (v > maxAbs) maxAbs = v
-      i += 1
-    }
-    val scale = if (maxAbs == 0.0f) 1.0f else maxAbs / 127.0f
-    val q = new Array[Byte](n)
-    i = 0
-    while (i < n) {
-      val r = Math.round(arr.getFloat(i) / scale)
-      q(i) = math.max(-127, math.min(127, r)).toByte
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(scale, q)
-  }
-
-  /** Portable int8 quantization: all arithmetic in f64 (float inputs
-    * widen exactly), rounding spelled floor(x + 0.5) — every step is a
-    * single correctly-rounded IEEE op, so any engine computing
-    * clamp(floor(v / (max|v| / 127.0) + 0.5)) over CAST(v AS DOUBLE)
-    * reproduces the bytes bit-for-bit (DuckDB: list_transform +
-    * GREATEST/LEAST/FLOOR). The stored scale is the f64 value narrowed
-    * to f32 for the struct; cosine scoring cancels it anyway. */
-  def quantize8Portable(arr: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
     val n = arr.numElements()
     var maxAbs = 0.0
     var i = 0
@@ -466,11 +398,11 @@ object HashUtil {
   }
 
   /** Integer MAC over two quantized byte vectors, WITHOUT the scale
-    * product — exact in long. cos over raw dots equals cos over scaled
-    * dots mathematically, and unlike the scaled form it is bit-for-bit
-    * reproducible across engines (integer inputs, one IEEE div/sqrt
-    * each), which is what the quantized top-k oracle needs. */
-  def quantizedDotRaw(a: org.apache.spark.sql.catalyst.InternalRow,
+    * product — exact in long (64 * 127^2 << 2^63). Cosine over these dots
+    * cancels the scales, and it is bit-for-bit reproducible across
+    * engines (integer inputs, one IEEE div/sqrt each), which is what the
+    * quantized top-k oracle needs. */
+  def quantizedDot(a: org.apache.spark.sql.catalyst.InternalRow,
       b: org.apache.spark.sql.catalyst.InternalRow): Long = {
     val qa = a.getBinary(1)
     val qb = b.getBinary(1)
@@ -486,21 +418,6 @@ object HashUtil {
     var i = 0
     while (i < q.length) { out(i) = q(i) * scale; i += 1 }
     UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** Dot product in the int8 domain: integer multiply-accumulate over the
-    * quantized bytes (exact in long — 64 * 127^2 << 2^63), scaled once by
-    * the two scale factors. Never materializes float vectors, so a scan
-    * over a quantized index moves 1/4 the bytes of a float32 scan. */
-  def quantizedDot(a: org.apache.spark.sql.catalyst.InternalRow,
-      b: org.apache.spark.sql.catalyst.InternalRow): Double = {
-    val qa = a.getBinary(1)
-    val qb = b.getBinary(1)
-    val n = math.min(qa.length, qb.length)
-    var acc = 0L
-    var i = 0
-    while (i < n) { acc += qa(i).toLong * qb(i).toLong; i += 1 }
-    acc.toDouble * a.getFloat(0).toDouble * b.getFloat(0).toDouble
   }
 
   /** ALL word n-gram occurrences (n consecutive tokens joined by one
@@ -593,12 +510,14 @@ case class WhitespaceTokens(child: Expression)
 
 /** Codegen'd symmetric int8 quantization of an array<float> embedding:
   * returns struct<scale: float, q: binary> with q[i] =
-  * round(v[i] / scale) clamped to [-127, 127] and scale = max|v| / 127.
-  * 4x smaller at rest and on the shuffle wire than float32 — the
-  * storage/bandwidth half of an IVF-quantized ANN index. Dequantize with
-  * [[Dequantize8]]; max elementwise round-trip error is scale / 2.
+  * round(v[i] / scale) clamped to [-127, 127] and scale = max|v| / 127,
+  * computed in f64 so any IEEE engine reproduces the bytes (see
+  * [[HashUtil.quantize8]]). 4x smaller at rest and on the shuffle wire
+  * than float32 — the storage/bandwidth half of an IVF-quantized ANN
+  * index. Dequantize with [[Dequantize8]]; max elementwise round-trip
+  * error is scale / 2.
   */
-case class Quantize8(child: Expression, portable: Boolean = false)
+case class Quantize8(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
@@ -607,15 +526,11 @@ case class Quantize8(child: Expression, portable: Boolean = false)
     StructField("q", BinaryType, nullable = false)))
   override def prettyName: String = "quantize8"
 
-  private def fn: String = if (portable) "quantize8Portable" else "quantize8"
-
-  override def nullSafeEval(a: Any): Any =
-    if (portable) HashUtil.quantize8Portable(a.asInstanceOf[ArrayData])
-    else HashUtil.quantize8(a.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any): Any = HashUtil.quantize8(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = org.apache.spark.sql.graft.HashUtil.$fn($x);")
+      s"${ev.value} = org.apache.spark.sql.graft.HashUtil.quantize8($x);")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -643,13 +558,14 @@ case class Dequantize8(child: Expression)
 }
 
 /** Codegen'd dot product of two [[Quantize8]] structs computed entirely in
-  * the int8 domain: long multiply-accumulate over the quantized bytes,
-  * scaled once by scale_a * scale_b. This is the scoring half of a
+  * the int8 domain: the exact long multiply-accumulate over the quantized
+  * bytes, without the scale product. This is the scoring half of a
   * quantized ANN index — the 4x storage/bandwidth saving of int8 only
   * pays off if scans score the bytes directly instead of dequantizing to
   * float first. For cosine the scales cancel:
   * qdot(a,b) / (sqrt(qdot(a,a)) * sqrt(qdot(b,b))) is a pure integer
-  * cosine. Exact: |acc| <= dim * 127^2 fits a long with no rounding.
+  * cosine, bit-for-bit across engines (integer inputs, one IEEE division
+  * and sqrt each) — the scoring form the quantized top-k oracle uses.
   */
 case class QuantizedDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -659,7 +575,7 @@ case class QuantizedDot(left: Expression, right: Expression)
     StructField("q", BinaryType, nullable = false)))
 
   override def inputTypes: Seq[AbstractDataType] = Seq(quantType, quantType)
-  override def dataType: DataType = DoubleType
+  override def dataType: DataType = LongType
   override def prettyName: String = "quantized_dot"
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -675,43 +591,14 @@ case class QuantizedDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** [[QuantizedDot]] without the scale product: the exact long MAC over
-  * the quantized bytes. Cosine over raw dots cancels the scales
-  * mathematically AND bit-for-bit across engines (integer inputs, one
-  * IEEE division and sqrt each) — the scoring form the quantized top-k
-  * oracle uses. */
-case class QuantizedDotRaw(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  private val quantType = StructType(Seq(
-    StructField("scale", FloatType, nullable = false),
-    StructField("q", BinaryType, nullable = false)))
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(quantType, quantType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quantized_dot_raw"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashUtil.quantizedDotRaw(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = org.apache.spark.sql.graft.HashUtil.quantizedDotRaw($x, $y);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** Codegen'd winnowing fingerprints of an array<string> token column —
-  * array<long> of selected rolling-gram hashes. The fingerprint density
-  * is ~2/(w+1) of the gram count, so the inverted index a dedup builds on
-  * these is ~w/2 times smaller than a full shingle index while still
-  * guaranteeing detection of shared runs of >= w + n - 1 tokens.
+  * array<long> of selected md5-low-60 gram hashes (see
+  * [[HashUtil.winnowing]]). The fingerprint density is ~2/(w+1) of the
+  * gram count, so the inverted index a dedup builds on these is ~w/2
+  * times smaller than a full shingle index while still guaranteeing
+  * detection of shared runs of >= w + n - 1 tokens.
   */
-case class WinnowingFingerprints(child: Expression, n: Int, w: Int,
-    portable: Boolean = false)
+case class WinnowingFingerprints(child: Expression, n: Int, w: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   require(n >= 1 && w >= 1, "n, w >= 1")
@@ -720,15 +607,12 @@ case class WinnowingFingerprints(child: Expression, n: Int, w: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnowing_fingerprints"
 
-  private def fn: String = if (portable) "winnowingPortable" else "winnowing"
-
   override def nullSafeEval(a: Any): Any =
-    if (portable) HashUtil.winnowingPortable(a.asInstanceOf[ArrayData], n, w)
-    else HashUtil.winnowing(a.asInstanceOf[ArrayData], n, w)
+    HashUtil.winnowing(a.asInstanceOf[ArrayData], n, w)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = org.apache.spark.sql.graft.HashUtil.$fn($x, $n, $w);")
+      s"${ev.value} = org.apache.spark.sql.graft.HashUtil.winnowing($x, $n, $w);")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -763,29 +647,26 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Codegen'd 64-bit SimHash of an array<string> token column — the
-  * document-fingerprint primitive for near-dedup blocking. One pass over
-  * the tokens inside whole-stage codegen; replaces a nested
+/** Codegen'd SimHash (md5-low-60 token votes, see [[HashUtil.simhash64]])
+  * of an array<string> token column — the document-fingerprint primitive
+  * for near-dedup blocking. One pass over the tokens inside whole-stage
+  * codegen; replaces a nested
   * aggregate(sequence(0,63), aggregate(tokens, ...)) higher-order
   * formulation that evaluated lambdas interpretively per bit per token
   * (~37x slower end-to-end at sf0.1).
   */
-case class SimHash64(child: Expression, portable: Boolean = false)
+case class SimHash64(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  private def fn: String = if (portable) "simhash64Portable" else "simhash64"
-
-  override def nullSafeEval(a: Any): Any =
-    if (portable) HashUtil.simhash64Portable(a.asInstanceOf[ArrayData])
-    else HashUtil.simhash64(a.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any): Any = HashUtil.simhash64(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = org.apache.spark.sql.graft.HashUtil.$fn($x);")
+      s"${ev.value} = org.apache.spark.sql.graft.HashUtil.simhash64($x);")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -233,7 +233,7 @@ class PlanShapeSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val df = graft.Tables.documents(spark, sf).select(col("doc_id"),
       graft.functions.HashFunctions.simhash(
-        graft.functions.TextFunctions.tokens(col("text")), portable = true)
+        graft.functions.TextFunctions.tokens(col("text")))
         .as("sim"))
     df.collect() // let AQE finalize the stages
     // codegen'd operators carry the "*(stageId)" marker in the simple plan

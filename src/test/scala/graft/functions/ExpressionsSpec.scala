@@ -9,7 +9,7 @@ import graft.SparkTestBase
 /** Cross-checks of the native codegen'd expressions
   * (org.apache.spark.sql.graft) against independent models: the built-in
   * higher-order-function formulation for vecDot, plain-Scala
-  * re-implementations for simhash / minhash / shingles.
+  * re-implementations for minhash / shingles.
   */
 class ExpressionsSpec extends SparkTestBase {
 
@@ -36,26 +36,6 @@ class ExpressionsSpec extends SparkTestBase {
 
   private def toks(text: String): Array[String] =
     text.split(" ").filter(_.nonEmpty)
-
-  test("simhash64 matches a plain-Scala model") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet").limit(50)
-    val got = docs
-      .select(col("doc_id"), col("text"),
-        HashFunctions.simhash(TextFunctions.tokens(col("text"))).as("sim"))
-      .collect()
-    got.foreach { row =>
-      val votes = new Array[Int](64)
-      toks(row.getString(1)).foreach { t =>
-        val h = hash(t, 42L)
-        (0 until 64).foreach { i =>
-          if (((h >>> i) & 1L) == 1L) votes(i) += 1 else votes(i) -= 1
-        }
-      }
-      var expected = 0L
-      (0 until 64).foreach(i => if (votes(i) > 0) expected |= (1L << i))
-      assert(row.getLong(2) === expected, s"doc ${row.getLong(0)}")
-    }
-  }
 
   test("word shingles match a plain-Scala sliding-window distinct") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(50)

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftFunctionRegistry
+import org.apache.spark.sql.graft.{GraftFunctionRegistry, HashUtil}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkTestBase
 
@@ -20,6 +21,51 @@ class GraftSqlSpec extends SparkTestBase {
     val viaCol = Seq(Seq("the", "quick", "fox", "the")).toDF("t")
       .select(HashFunctions.simhash(col("t"))).head().getLong(0)
     assert(viaSql === viaCol)
+  }
+
+  private def md5Low60(s: String): Long =
+    HashUtil.md5Low60(UTF8String.fromString(s))
+
+  test("SQL simhash64 equals the md5-low-60 vote model") {
+    val toks = Seq("the", "quick", "brown", "fox", "the", "lazy", "dog")
+    val got = spark.sql(
+      s"SELECT simhash64(array(${toks.map(t => s"'$t'").mkString(", ")})) AS s")
+      .head().getLong(0)
+    val votes = new Array[Int](60)
+    toks.foreach { t =>
+      val h = md5Low60(t)
+      (0 until 60).foreach(i => votes(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1))
+    }
+    val expected = (0 until 60).foldLeft(0L) {
+      case (acc, i) => if (votes(i) > 0) acc | (1L << i) else acc
+    }
+    assert(got === expected)
+  }
+
+  test("SQL winnowing_fingerprints equals the md5 window-minima model") {
+    val toks = (1 to 12).map(i => s"w$i")
+    val got = spark.sql(
+      s"SELECT winnowing_fingerprints(array(${toks.map(t => s"'$t'").mkString(", ")}), 3, 4)")
+      .head().getSeq[Long](0)
+    val gh = toks.sliding(3).map(g => md5Low60(g.mkString(" "))).toSeq
+    val expected = gh.sliding(4).map(_.min).toSeq.distinct
+    assert(got.sorted === expected.sorted)
+  }
+
+  test("SQL quantize8 equals the all-f64 floor(v / scale + 0.5) bytes") {
+    // -0.98818898 sits on an f32 rounding tie (-125.5 after an f32
+    // division by max|v| / 127), so an f32 quantizer rounds it elsewhere
+    val r = spark.sql(
+      """SELECT v, quantize8(v) AS q FROM (SELECT
+        |  CAST(array(1.0, -0.98818898, 0.25, -0.5, 0.1) AS ARRAY<FLOAT>) AS v)""".stripMargin)
+      .head()
+    val vs = r.getSeq[Float](0)
+    val scale = vs.map(v => math.abs(v.toDouble)).max / 127.0
+    val expected = vs.map(v =>
+      math.max(-127.0, math.min(127.0, math.floor(v.toDouble / scale + 0.5))).toByte)
+    val q = r.getStruct(1)
+    assert(q.getAs[Array[Byte]]("q").toSeq === expected)
+    assert(q.getAs[Float]("scale") === scale.toFloat)
   }
 
   test("word_shingles and minhash_signature compose in SQL") {

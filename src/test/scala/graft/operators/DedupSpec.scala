@@ -323,7 +323,7 @@ class DedupSpec extends SparkTestBase {
     import org.apache.spark.unsafe.types.UTF8String
     val sims = docs.limit(50)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"),
-        HashFunctions.simhash(col("toks"), portable = true).as("sim"))
+        HashFunctions.simhash(col("toks")).as("sim"))
       .collect()
     sims.foreach { r =>
       val toks = r.getSeq[String](1)
