@@ -7,14 +7,13 @@ import graft.cnj.{MetasJob, Reader}
   * four machines at ~0.93 GB) — read the 90-file CSV corpus, compute the
   * Resumo aggregate, write ResumoMetas.csv + Consolidado.csv +
   * grafico_meta1.png — as a step-for-step copy of [[MetasJob.runAll]]
-  * with a timer around each phase: the few-dozen-row per-court aggregate
-  * runs as one job and is collected to a driver-local frame
-  * ([[MetasJob.localSummary]]) that the Resumo sink, the fallback
-  * warning and the chart reuse; the raw corpus is never cached (its
-  * InMemoryRelation cost ~10x the one re-scan it saved), it is read
-  * exactly twice, and Consolidado is sharded — the documented S5/S6
-  * divergence: a coalesce(1) of the full corpus would funnel every byte
-  * through one task.
+  * with a timer around each phase: the corpus is read once, by the
+  * sharded Consolidado write, which observes the per-court sums on its
+  * way; the driver then builds the summary from them with no Spark job,
+  * and the Resumo sink, the fallback warning and the chart reuse it.
+  * Consolidado is sharded — the documented S5/S6 divergence: a
+  * coalesce(1) of the full corpus would funnel every byte through one
+  * task.
   *
   * Prints human-readable phase lines plus ONE machine-readable JSON line
   * (`{"metric":"cnj_bench_total_sec",...}`) carrying phase timings,
@@ -47,20 +46,21 @@ object CnjBench {
     }
     new java.io.File(outDir).mkdirs()
     val t0 = System.nanoTime()
-    val data = t("plan_read_headers")(Reader.readDir(spark, inDir))
-    val summary = t("resumo_agg_join_collect") {
-      MetasJob.localSummary(MetasJob.resumoTyped(spark, data))
+    val (observed, sums) =
+      t("plan_read_headers")(MetasJob.observeCourtSums(Reader.readDir(spark, inDir)))
+    t("consolidado_observed_write") {
+      MetasJob.writeCsv(observed, s"$outDir/Consolidado.csv", singleFile = false)
     }
-    val res = MetasJob.stringlyOutput(summary)
+    val (summary, res) = t("driver_summary") {
+      val summary = MetasJob.observedResumo(spark, sums)
+      (summary, MetasJob.stringlyOutput(summary))
+    }
     t("resumo_write")(MetasJob.writeCsv(res, s"$outDir/ResumoMetas.csv"))
     t("chart_png") {
       MetasJob.warnUnmapped(summary)
       val chart = MetasJob.chartData(res).collect()
         .map(r => (r.getString(0), r.getDouble(1)))
       MetasJob.writeChartPng(chart, s"$outDir/grafico_meta1.png")
-    }
-    t("consolidado_sharded_write") {
-      MetasJob.writeCsv(data, s"$outDir/Consolidado.csv", singleFile = false)
     }
     val total = (System.nanoTime() - t0) / 1e9
     println(Harness.jsonLine(spark, "cnj_bench_total_sec",

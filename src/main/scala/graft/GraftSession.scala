@@ -26,8 +26,8 @@ object GraftSession {
     *    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is
     *    false (the Spark 4.1 default): AQE may not coalesce a plan built
     *    for caching, so a cached aggregate keeps all 512 partitions and
-    *    every action over it schedules 512 tasks. Collect a small result
-    *    to the driver instead (see `graft.cnj.MetasJob.localSummary`);
+    *    every action over it schedules 512 tasks. Bring a small result
+    *    to the driver instead (see `graft.cnj.MetasJob.observedResumo`);
     *  - graft SQL functions registered via the session extension;
     *  - UTC timestamps for engine-portable semantics.
     */

@@ -1,11 +1,10 @@
 package graft.cnj
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The static per-branch factor dimension of the reference
-  * (/root/reference/Versao_Np.py:41-61) re-expressed as a broadcastable
-  * wide DataFrame: one row per mapped branch, one column per factor key.
+/** The static per-branch factor table of the reference (Versao_Np.py:
+  * 41-61): one literal map per factor key, from branch to factor.
   *
   * Lookup semantics (Versao_Np.py:10-30,122):
   *  1. branch remap: 'Tribunais Superiores' -> TST/STJ-specific branch by
@@ -13,8 +12,8 @@ import org.apache.spark.sql.functions._
   *  2. unmapped branch -> fall back to the whole 'Justiça Estadual' row;
   *  3. per-key fallback: a branch missing a factor key borrows the
   *     'Justiça Estadual' value for that key ('NA' if JE lacks it too).
-  * Steps 2-3 are one coalesce(branch_factor, je_factor) after a broadcast
-  * left join — two dict lookups become a single broadcast hash join.
+  * Steps 2-3 are one coalesce(branch_factor, je_factor) over the map
+  * lookup, as the reference does two dict lookups.
   */
 object Factors {
 
@@ -59,10 +58,10 @@ object Factors {
       "2ant" -> 100.0, "4a" -> 1000.0 / 9, "4b" -> 100.0, "6" -> 1000.0 / 7.5,
       "7a" -> 1000.0 / 7.5, "7b" -> 1000.0 / 7.5, "8" -> 1000.0 / 10, "10" -> 1000.0 / 10))
 
-  /** Column name for a factor key in the wide dimension DF. */
+  /** Column name for a factor key's [[branchFactor]] column. */
   def fcol(key: String): String = s"f_$key"
 
-  /** Branch remap of Versao_Np.py:11-24 as a when-chain on the join key. */
+  /** Branch remap of Versao_Np.py:11-24 as a when-chain on the branch. */
   def ramoUsado(ramo: Column, sigla: Column): Column =
     when(ramo === "Tribunais Superiores",
       when(sigla === "TST", lit("Tribunal Superior do Trabalho"))
@@ -71,26 +70,18 @@ object Factors {
       .when(ramo === "Justiça Eleitoral", lit("Tribunal Superior Eleitoral"))
       .otherwise(ramo)
 
-  /** Wide one-row-per-branch dimension DataFrame (8 x 16 — trivially
-    * broadcastable at any fact scale). */
-  def dimension(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val schema = StructType(
-      StructField("ramo_fatores", StringType, nullable = false) +:
-        allKeys.map(k => StructField(fcol(k), DoubleType, nullable = true)))
-    val rows: java.util.List[Row] = new java.util.ArrayList[Row]
-    byBranch.toSeq.sortBy(_._1).foreach { case (ramo, fs) =>
-      rows.add(Row.fromSeq(ramo +: allKeys.map(k =>
-        fs.get(k).map(d => java.lang.Double.valueOf(d)).orNull)))
-    }
-    spark.createDataFrame(rows, schema)
-  }
+  /** The remapped branch's own factor for `key`, null when the branch
+    * has none or is not mapped: a lookup in a literal map of the
+    * branches that carry the key. A projection, not a join, so over a
+    * driver-local summary it folds on the driver with no Spark job. */
+  def branchFactor(key: String, ramoUsado: Column): Column =
+    typedLit(byBranch.collect { case (ramo, fs) if fs.contains(key) => ramo -> fs(key) })
+      .apply(ramoUsado)
 
-  /** Per-key effective factor after the two-level fallback: the joined
-    * branch value if present, else the Justiça-Estadual constant, else null.
-    * `joined` must already carry the dimension's f_* columns (possibly all
-    * null when the branch missed the join entirely). */
+  /** Per-key effective factor after the two-level fallback: the
+    * branch's own value if present, else the Justiça-Estadual constant,
+    * else null. The frame must already carry the f_* columns (all null
+    * for an unmapped branch). */
   def effectiveFactor(key: String): Column =
     je.get(key) match {
       case Some(v) => coalesce(col(fcol(key)), lit(v))

@@ -2,7 +2,8 @@ package graft.cnj
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graft.{ColumnBridge, KeyedSums}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** The ratio-of-sums meta kernel (`calcular_meta`,
   * /root/reference/Versao_Np.py:65-81) as pure Column builders — no UDFs,
@@ -21,11 +22,24 @@ import org.apache.spark.sql.types.DoubleType
   */
 object MetaKernel {
 
-  private def sumc(c: String): Column = sum(col(c)).as(s"sum_$c")
+  private def sumName(c: String): String = s"sum_$c"
 
   /** Aggregate columns (one sum per numeric column) needed by every
     * meta — feed these into one groupBy(...).agg(...) call. */
-  def aggColumns: Seq[Column] = CnjSchema.numericCols.map(sumc)
+  def aggColumns: Seq[Column] = CnjSchema.numericCols.map(c => sum(col(c)).as(sumName(c)))
+
+  /** The schema that groupBy(court keys).agg([[aggColumns]]) produces. */
+  val sumsSchema: StructType = StructType(
+    CnjSchema.keyCols.map(StructField(_, StringType)) ++
+      CnjSchema.numericCols.map(c => StructField(sumName(c), DoubleType)))
+
+  /** The same per-court sums as ONE aggregate, for `Dataset.observe`:
+    * an array with one [[sumsSchema]] struct per court. */
+  def keyedSums: Column = {
+    def in(c: String) = ColumnBridge.expression(col(c))
+    ColumnBridge.column(KeyedSums(CnjSchema.keyCols.map(in), CnjSchema.numericCols.map(in),
+      sumsSchema.fieldNames.toSeq).toAggregateExpression())
+  }
 
   /** The column has >= 1 non-null value in the group. A double `sum`
     * stays null until its first non-null input and is non-null from

@@ -1,15 +1,27 @@
 package graft.cnj
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DriverSort
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
 /** The end-to-end Metas Nacionais pipeline — the reference's whole program
-  * (/root/reference/Versao_Np.py, Versao_P.py) as one declarative Spark
-  * plan: tolerant multi-file scan -> single HashAggregate keyed on the
-  * court -> broadcast join with the factor dimension -> meta projection ->
-  * stringly sinks. The Np/P distinction disappears: Spark's task scheduler
-  * IS the process pool, and the shuffle IS the temp-file merge.
+  * (Versao_Np.py, Versao_P.py) as Spark plans: tolerant multi-file scan
+  * -> per-court sums -> factor lookups -> meta projection -> stringly
+  * sinks. The Np/P distinction disappears: Spark's task scheduler IS the
+  * process pool.
+  *
+  * Like the reference, which takes each court file's metas row and its
+  * share of Consolidado from one loaded frame (Versao_Np.py:155,224-227),
+  * [[runAll]] scans the corpus ONCE: the Consolidado write carries the
+  * per-court sums as an observed metric ([[MetaKernel.keyedSums]]), and
+  * everything after it runs on the driver over those few dozen rows.
+  * [[resumoTyped]] is the same kernel over a lazy groupBy, for streams
+  * and for callers that want a plan rather than a result.
   *
   * Documented divergence (SURVEY.md §7.3): the reference keys results on
   * the file (one row per input file, identity from row 0); we key on
@@ -17,24 +29,27 @@ import org.apache.spark.sql.types.{DoubleType, StringType}
   */
 object MetasJob {
 
-  /** The shared front half of [[resumoTyped]] and [[debugTrace]]: one
-    * HashAggregate keyed on the court (the sum of every numeric column)
-    * plus the broadcast factor-dimension join. */
-  private def aggregatedWithFactors(spark: SparkSession, data: DataFrame): DataFrame = {
-    val aggregated = data
-      .groupBy(col("sigla_tribunal"), col("ramo_justica"))
+  /** One HashAggregate keyed on the court: the sum of every numeric
+    * column ([[MetaKernel.sumsSchema]]). */
+  private def courtSums(data: DataFrame): DataFrame =
+    data.groupBy(col("sigla_tribunal"), col("ramo_justica"))
       .agg(MetaKernel.aggColumns.head, MetaKernel.aggColumns.tail: _*)
-      .withColumn("ramo_fatores_key",
-        Factors.ramoUsado(col("ramo_justica"), col("sigla_tribunal")))
-    aggregated.join(
-      broadcast(Factors.dimension(spark)),
-      aggregated("ramo_fatores_key") === col("ramo_fatores"),
-      "left")
+
+  /** Per-court sums plus the remapped branch and its own factors (the
+    * f_* columns) — the front half of [[metas]] and [[debugTrace]]. */
+  private def withFactors(sums: DataFrame): DataFrame = {
+    val ramoUsado = Factors.ramoUsado(col("ramo_justica"), col("sigla_tribunal"))
+    sums.select(col("*") +: Factors.allKeys.map(k =>
+      Factors.branchFactor(k, ramoUsado).as(Factors.fcol(k))): _*)
   }
 
   /** Per-court meta summary with typed (double) meta columns. */
-  def resumoTyped(spark: SparkSession, data: DataFrame): DataFrame = {
-    val joined = aggregatedWithFactors(spark, data)
+  def resumoTyped(spark: SparkSession, data: DataFrame): DataFrame = metas(courtSums(data))
+
+  /** The meta projection over per-court sums ([[MetaKernel.sumsSchema]]),
+    * lazy ([[resumoTyped]]) or driver-local ([[observedResumo]]). */
+  private def metas(sums: DataFrame): DataFrame = {
+    val factored = withFactors(sums)
 
     val standard = CnjSchema.metaSpecs.map { spec =>
       spec.name -> MetaKernel.metaValue(spec, Factors.effectiveFactor(spec.factorKey))
@@ -51,7 +66,7 @@ object MetasJob {
     val metaCols: Seq[(String, Column)] =
       ("meta1" -> MetaKernel.meta1Value) +: (suppressed ++ stj)
 
-    joined.select(
+    factored.select(
       col("sigla_tribunal") +: col("ramo_justica") +:
         metaCols.map { case (n, c) => c.as(n) }: _*)
   }
@@ -60,13 +75,44 @@ object MetasJob {
     * (Versao_Np.py:231-242): every cell a string, nulls rendered 'NA',
     * columns ordered principal -> sorted metas -> sorted _stj -> rest.
     *
-    * Rendered exactly as [[runAll]] renders it: off the driver-local
-    * per-court summary ([[localSummary]]), so the aggregate runs when
-    * this is called and the returned frame sorts one local partition.
-    * One plan for both entry points means a caller that warms up on
-    * `resumo` has compiled the rendering `runAll` executes. */
-  def resumo(spark: SparkSession, inDir: String): DataFrame =
-    stringlyOutput(localSummary(resumoTyped(spark, Reader.readDir(spark, inDir))))
+    * Computed exactly as [[runAll]] computes it, with a `noop` sink in
+    * place of the Consolidado write: the scan runs when this is called
+    * and the returned frame is driver-local. One path for both entry
+    * points means a caller that warms up on `resumo` has compiled what
+    * `runAll` executes. */
+  def resumo(spark: SparkSession, inDir: String): DataFrame = {
+    val (observed, sums) = observeCourtSums(Reader.readDir(spark, inDir))
+    observed.write.format("noop").mode("overwrite").save()
+    stringlyOutput(observedResumo(spark, sums))
+  }
+
+  /** The corpus with its per-court sums attached as an observed metric
+    * ([[MetaKernel.keyedSums]]): whatever action runs on the returned
+    * frame first also computes them, in the same scan. */
+  private[graft] def observeCourtSums(data: DataFrame): (DataFrame, Observation) = {
+    val sums = new Observation()
+    (data.observe(sums, MetaKernel.keyedSums.as("court_sums")), sums)
+  }
+
+  /** The typed per-court summary ([[resumoTyped]]'s rows) as a
+    * driver-local frame, from the sums an action on the frame that
+    * [[observeCourtSums]] returned has observed. Call it only after that
+    * action returned: a failed action's metric, if one arrives, covers
+    * only part of the corpus. The
+    * metric reaches the driver through the listener bus, normally within
+    * milliseconds of the action; a minute without it is a named failure,
+    * not a hang. Everything over the local rows — factor lookups, the
+    * kernel, the rendering, the sorts — folds on the driver with no
+    * Spark job. */
+  private[graft] def observedResumo(spark: SparkSession, sums: Observation): DataFrame = {
+    val row =
+      try Await.result(sums.future, 1.minute)
+      catch {
+        case e: TimeoutException => throw new IllegalStateException(
+          s"the per-court sums (observation ${sums.name}) did not arrive within a minute", e)
+      }
+    metas(spark.createDataFrame(row.getSeq[Row](0).asJava, MetaKernel.sumsSchema))
+  }
 
   /** Python str() renders doubles in plain decimal up to 1e16 where
     * Spark's string cast flips to scientific notation at 1e7. Metas are
@@ -105,8 +151,8 @@ object MetasJob {
         case _ => c.cast(StringType)
       }).as(f.name)
     }: _*).na.fill("NA")
-    stringly.select(orderedColumns(stringly.columns.toIndexedSeq).map(col): _*)
-      .orderBy(col("sigla_tribunal"))
+    DriverSort.orderBy(stringly.select(orderedColumns(stringly.columns.toIndexedSeq).map(col): _*),
+      col("sigla_tribunal"))
   }
 
   /** Column ordering of Versao_Np.py:234-242 (F5). */
@@ -135,18 +181,30 @@ object MetasJob {
     * Accepts any frame carrying (ramo_justica, sigla_tribunal) — raw
     * corpus rows or the per-court aggregate give identical output (the
     * groupBy/collect_set only sees distinct pairs, and those pairs ARE
-    * the aggregate's keys), so [[runAll]] feeds it the driver-local
-    * per-court summary ([[localSummary]]) instead of re-scanning the
-    * corpus. */
-  def unmappedBranches(data: DataFrame): DataFrame = {
-    val mapped = Factors.byBranch.keys.toSeq
-    data
-      .select(col("ramo_justica"), col("sigla_tribunal"))
-      .withColumn("ramo_usado", Factors.ramoUsado(col("ramo_justica"), col("sigla_tribunal")))
-      .filter(col("ramo_usado").isNull || !col("ramo_usado").isin(mapped: _*))
+    * the aggregate's keys). */
+  def unmappedBranches(data: DataFrame): DataFrame =
+    unmappedCourts(data)
       .groupBy(col("ramo_justica"))
       .agg(sort_array(collect_set(col("sigla_tribunal"))).as("siglas"))
       .orderBy(col("ramo_justica"))
+
+  /** The (ramo_justica, sigla_tribunal) rows whose branch has no factors. */
+  private def unmappedCourts(data: DataFrame): DataFrame = {
+    val mapped = Factors.byBranch.keys.toSeq
+    val ramoUsado = Factors.ramoUsado(col("ramo_justica"), col("sigla_tribunal"))
+    data.select(col("ramo_justica"), col("sigla_tribunal"))
+      .filter(ramoUsado.isNull || !ramoUsado.isin(mapped: _*))
+  }
+
+  /** [[unmappedBranches]]' rows off a driver-local per-court summary,
+    * with no Spark job: the unmapped courts fold on the driver and sort
+    * by (branch, court), and each branch collects its courts in that
+    * order. A null court is dropped, as `collect_set` drops it; the
+    * summary's (branch, court) pairs are distinct already. */
+  private[cnj] def unmappedOnDriver(summary: DataFrame): Seq[(String, Seq[String])] = {
+    val rows = DriverSort.orderBy(unmappedCourts(summary), col("ramo_justica"), col("sigla_tribunal"))
+      .collect().toSeq.map(r => (r.getString(0), Option(r.getString(1))))
+    rows.map(_._1).distinct.map(ramo => ramo -> rows.collect { case (`ramo`, Some(s)) => s })
   }
 
   /** Golden-trace debug mode (the reference's NOME_ARQUIVO_DEBUG,
@@ -179,24 +237,26 @@ object MetasJob {
       entry(spec.name, s(spec.j), s(spec.d) - s(spec.s),
         col(Factors.fcol(spec.factorKey)), MetaKernel.stjValue(spec))
     }
-    aggregatedWithFactors(spark, data)
+    withFactors(courtSums(data))
       .filter(col("sigla_tribunal") === sigla)
       .select(col("sigla_tribunal"), col("ramo_justica"),
         explode(array(meta1 +: (standard ++ stj): _*)).as("t"))
       .select(col("sigla_tribunal"), col("ramo_justica"), col("t.*"))
   }
 
-  /** Chart feed (S7/O1/F3/F4): courts with numeric meta1, sorted desc.
+  /** Chart feed (S7/O1/F3/F4): courts with numeric meta1, sorted desc
+    * (then by court), on the driver when `resumo` is driver-local.
     * The cast is built with the Column API, not `expr("try_cast(...)")`:
     * the same TRY-mode cast, without a trip through the SQL parser, whose
     * first use in a JVM costs a few hundred ms of driver time (the rest of the
     * job never parses SQL). */
   def chartData(resumo: DataFrame): DataFrame =
-    resumo
-      .withColumn("meta1_val", col("meta1").try_cast(DoubleType))
-      .na.drop(Seq("meta1_val"))
-      .select(col("sigla_tribunal"), col("meta1_val"))
-      .orderBy(col("meta1_val").desc, col("sigla_tribunal"))
+    DriverSort.orderBy(
+      resumo
+        .withColumn("meta1_val", col("meta1").try_cast(DoubleType))
+        .na.drop(Seq("meta1_val"))
+        .select(col("sigla_tribunal"), col("meta1_val")),
+      col("meta1_val").desc, col("sigla_tribunal"))
 
   /** ;-separated UTF-8 CSV sink (S4-S6; Versao_Np.py:100-102). A real
     * cluster keeps the sharded part files; coalesce(1) only mirrors the
@@ -242,63 +302,42 @@ object MetasJob {
     ImageIO.write(img, "png", new java.io.File(path))
   }
 
-  /** Materializes the per-court summary on the driver: one AQE-coalesced
-    * job runs the aggregate, and its rows come back as a driver-local
-    * frame (a LocalRelation) for the sinks to reuse. Safe to collect:
-    * the row count is bounded by the distinct (sigla_tribunal,
-    * ramo_justica) keys, whatever the corpus size. Preferred over
-    * `.cache()`: while `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * is false (the Spark 4.1 default) AQE may not coalesce a plan built
-    * for caching, so a cached aggregate keeps the full
-    * `coalescePartitions.initialPartitionNum` width (512 under
-    * [[graft.GraftSession]]) and every later action and sort pass runs
-    * that many empty tasks.
-    *
-    * The frame is ONE partition (`coalesce(1)` over the local rows).
-    * Sorting a single partition needs no range exchange, so the
-    * `orderBy` in [[stringlyOutput]] and [[chartData]] plans none: the
-    * ResumoMetas write and the chart each run as one job instead of
-    * three (range-bound sampling, shuffle map, sort and write). A few
-    * dozen rows gain nothing from more partitions. */
-  def localSummary(typed: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    typed.sparkSession.createDataFrame(typed.collect().toSeq.asJava, typed.schema).coalesce(1)
-  }
-
   /** Mirrors the reference's once-per-branch fallback warning
-    * (Versao_Np.py:29,168-169) off a per-court summary. */
+    * (Versao_Np.py:29,168-169) off a driver-local per-court summary. */
   def warnUnmapped(summary: DataFrame): Unit = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    unmappedBranches(summary).collect().foreach { r =>
-      val siglas = r.getSeq[String](1).mkString(", ")
-      log.warn(s"branch '${r.getString(0)}' (courts: $siglas) has no specific " +
+    unmappedOnDriver(summary).foreach { case (ramo, siglas) =>
+      log.warn(s"branch '$ramo' (courts: ${siglas.mkString(", ")}) has no specific " +
         "factors; falling back to Justiça Estadual")
     }
   }
 
   /** Full run: ResumoMetas.csv + Consolidado.csv + grafico_meta1.png.
     *
-    * The corpus is read exactly twice: once by the aggregate, whose
-    * few-dozen-row result [[localSummary]] brings to the driver, and
-    * once by the Consolidado write. ResumoMetas, the fallback warning
-    * and the chart all run off that driver-local summary. The raw corpus
-    * is NOT cached: building the InMemoryRelation for ~1 GB of expanded
-    * rows costs ~10x the one extra CSV scan it would save (measured at
-    * the 930 MB corpus). The sinks run one after the other: overlapping
-    * them from two threads contended for the same cores
-    * (CNJBENCH_r14.json), and the summary sinks are sub-second. */
+    * The corpus is read exactly once, by the Consolidado write, which
+    * observes the per-court sums on its way ([[observeCourtSums]]). The
+    * rest runs on the driver over those few dozen rows
+    * ([[observedResumo]]): the kernel, the rendering, the fallback
+    * warning, both sorts and the chart. So a run is two Spark jobs: the
+    * Consolidado write and the single-file ResumoMetas write. The raw
+    * corpus is NOT cached: building the InMemoryRelation for ~1 GB of
+    * expanded rows costs ~10x the one CSV scan it would share (measured
+    * at the 930 MB corpus).
+    *
+    * A failed Consolidado write throws from here before anything waits
+    * for its metric, and writes no ResumoMetas or chart. */
   def runAll(spark: SparkSession, inDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
-    val data = Reader.readDir(spark, inDir)
-    val summary = localSummary(resumoTyped(spark, data))
+    val (observed, sums) = observeCourtSums(Reader.readDir(spark, inDir))
+    // sharded: a coalesce(1) write of the full corpus funnels every byte
+    // through one task (measured 187 s vs 19 s for ~1 GB); the
+    // single-file contract is kept only for the tiny summary
+    writeCsv(observed, s"$outDir/Consolidado.csv", singleFile = false)
+    val summary = observedResumo(spark, sums)
     val res = stringlyOutput(summary)
     writeCsv(res, s"$outDir/ResumoMetas.csv")
     warnUnmapped(summary)
     val chart = chartData(res).collect().map(r => (r.getString(0), r.getDouble(1)))
     writeChartPng(chart, s"$outDir/grafico_meta1.png")
-    // sharded: a coalesce(1) write of the full corpus funnels every byte
-    // through one task (measured 187 s vs 19 s for ~1 GB); the
-    // single-file contract is kept only for the tiny summary
-    writeCsv(data, s"$outDir/Consolidado.csv", singleFile = false)
   }
 }

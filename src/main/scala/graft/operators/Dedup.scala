@@ -219,36 +219,52 @@ object Dedup {
   private def jaccard(common: Column, sizeA: Column, sizeB: Column): Column =
     common.cast(DoubleType) / (sizeA + sizeB - common)
 
+  /** The signature bits SimHash sets: the md5-low-60 kernel leaves bits
+    * 60-63 at 0, so a chunk over them would key on constants. */
+  private val SimhashBits = 60
+
   /** Smallest agree-subset size m (see [[simhashPairs]]) whose block-key
     * space keeps expected candidates ~linear in the corpus. A key of
-    * m x (64/(maxHamming+m)) bits over C(maxHamming+m, m) subsets emits
+    * m x (60/(maxHamming+m)) bits over C(maxHamming+m, m) subsets emits
     * ~subsets x n^2 / 2^keyBits uniform-hash candidates; pick the
     * smallest m bounding that at `budget` candidates per document.
-    * At maxHamming = 3: m = 1 (the classic 4 x 16-bit config) up to
-    * ~520k docs, m = 2 (10 x 24-bit keys) to ~53M, m = 3 (20 x 30-bit
-    * keys) to ~1.7B — the fixed 16-bit key space saturates past 2^16
-    * docs and candidate mass turns quadratic (measured: 34x wall for the
+    * At maxHamming = 3: m = 1 (4 x 15-bit chunks) up to ~262k docs,
+    * m = 2 (10 x 24-bit keys) to ~53M, m = 3 (20 x 30-bit keys) to
+    * ~1.7B — a fixed 15-bit key space saturates past 2^15 docs and
+    * candidate mass turns quadratic (measured: 34x wall for the
     * 100x -> 1000x decade at 5M docs before this derivation existed). */
   def simhashAgreeChunks(nDocs: Long, maxHamming: Int = 3,
       budget: Int = 32): Int =
     (1 to 4).find { m =>
-      val keyBits = math.min(62, m * (64 / (maxHamming + m)))
+      val keyBits = math.min(62, m * (SimhashBits / (maxHamming + m)))
       val subsets = (0 until m).map(i => (maxHamming + m - i).toDouble / (i + 1))
         .product
       subsets * nDocs.toDouble <= budget.toDouble * math.pow(2.0, keyBits)
     }.getOrElse(4)
 
+  /** The bit mask of each of `chunks` SimHash block chunks: chunk c
+    * covers bits [c*width, (c+1)*width) of the 60 live bits, width =
+    * 60 / chunks, and the last chunk also takes the remainder. */
+  private[operators] def simhashChunkMasks(chunks: Int): IndexedSeq[Long] = {
+    val width = SimhashBits / chunks
+    (0 until chunks).map { c =>
+      val end = if (c == chunks - 1) SimhashBits else (c + 1) * width
+      ((1L << end) - 1) & ~((1L << (c * width)) - 1)
+    }
+  }
+
   /** SimHash near-dup pairs: pigeonhole blocking + exact Hamming
-    * verification via bit_count(xor). The 64-bit signature is split into
-    * maxHamming + agreeChunks chunks; any pair within the threshold
-    * differs in at most maxHamming chunks, so it AGREES on at least
+    * verification via bit_count(xor). The signature's 60 live bits are
+    * split into maxHamming + agreeChunks chunks ([[simhashChunkMasks]]);
+    * any pair within the threshold differs in at most maxHamming
+    * chunks, so it AGREES on at least
     * agreeChunks of them — every size-agreeChunks subset of chunk values
     * becomes a block key (C(chunks, agreeChunks) keys per doc) and
     * recall is exact at every threshold.
     *
     * agreeChunks trades replication for key width: m = 1 is the classic
-    * 4-table 16-bit config (4 keys/doc, saturates past 2^16 docs — at
-    * 5M docs every 16-bit bucket holds ~76 docs and the join is
+    * 4-table config (4 keys/doc of 15 bits, saturates past 2^15 docs —
+    * at 5M docs every bucket holds ~150 docs and the join is
     * quadratic); m = 3 emits 20 keys/doc but blocks on 30-bit keys.
     * [[simhashAgreeChunks]] derives the smallest m whose key space keeps
     * candidates ~linear — the multi-table scheme of Manku et al., WWW'07
@@ -265,8 +281,7 @@ object Dedup {
       s"maxHamming must be in [1,15], got $maxHamming")
     require(agreeChunks >= 1 && agreeChunks <= 4,
       s"agreeChunks must be in [1,4], got $agreeChunks")
-    val chunks = maxHamming + agreeChunks
-    val width = 64 / chunks
+    val masks = simhashChunkMasks(maxHamming + agreeChunks)
     // pinned once: the keyed frame self-joins (a/b), and unpinned each
     // side replays the tokenize + simhash fold — the dominant per-row
     // compute. Two longs per doc: trivially checkpointable at any scale.
@@ -278,14 +293,10 @@ object Dedup {
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), HashFunctions.simhash(col("toks")).as("sim"))
       .localCheckpoint(true)
-    // chunk c covers bits [c*width, (c+1)*width); the final chunk absorbs
-    // the 64 - chunks*width remainder bits (shiftright sign-extends, so
-    // the unsigned mask is load-bearing for the last chunk)
-    def cval(c: Int): Column = {
-      val mask = if (c == chunks - 1) -1L >>> (c * width) else (1L << width) - 1
-      shiftright(col("sim"), c * width).bitwiseAND(lit(mask))
-    }
-    val keys = (0 until chunks).combinations(agreeChunks).toSeq.zipWithIndex
+    // a chunk's value is the signature under its mask, left in place:
+    // two docs agree on the chunk exactly when these are equal
+    def cval(c: Int): Column = col("sim").bitwiseAND(lit(masks(c)))
+    val keys = masks.indices.combinations(agreeChunks).toSeq.zipWithIndex
       .map { case (s, i) => xxhash64((lit(i) +: s.map(cval)): _*) }
     val keyed = base.select(col("doc_id"), col("sim"),
       explode(array(keys: _*)).as("bkey"))

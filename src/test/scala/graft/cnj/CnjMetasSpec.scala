@@ -136,18 +136,62 @@ class CnjMetasSpec extends SparkTestBase {
     assert(tasks < 512, s"runAll scheduled $tasks tasks")
   }
 
-  test("the per-court summary is one partition and its sinks sort without a shuffle") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val summary = MetasJob.localSummary(
-      MetasJob.resumoTyped(spark, Reader.readDir(spark, resourcePath("cnj/dados"))))
-    assert(summary.rdd.getNumPartitions == 1)
-    val res = MetasJob.stringlyOutput(summary)
-    Seq(res, MetasJob.chartData(res)).foreach { df =>
-      df.collect() // runs the plan, so an adaptive one shows its final shape
-      val plan = df.queryExecution.executedPlan
-      val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
-      assert(exchanges.isEmpty, plan.toString)
+  /** The fixture corpus without its unmapped-branch court, in a fresh
+    * directory: every branch has factors. */
+  private def allMappedCorpus(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cnj-mapped")
+    new java.io.File(resourcePath("cnj/dados")).listFiles()
+      .filter(_.getName != "teste_XX99.csv")
+      .foreach(f => java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    dir.toString
+  }
+
+  test("a warm runAll runs 2 Spark jobs: the Consolidado write and the ResumoMetas write") {
+    val mapped = allMappedCorpus()
+    MetasJob.runAll(spark, mapped, freshOut("jobs"))
+    val (_, jobs, _) = countJobsAndTasks(MetasJob.runAll(spark, mapped, freshOut("jobs")))
+    assert(jobs == 2)
+    // with an unmapped branch too: the fallback warning folds on the driver
+    val (_, fixtureJobs, _) =
+      countJobsAndTasks(MetasJob.runAll(spark, resourcePath("cnj/dados"), freshOut("jobs")))
+    assert(fixtureJobs == 2)
+  }
+
+  test("a Consolidado write that throws surfaces its exception, without waiting for the sums") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // an output directory under a regular file cannot be created
+    val notADir = java.io.File.createTempFile("graft-cnj-notadir", ".txt")
+    val out = s"${notADir.getPath}/out"
+    val run = Future(MetasJob.runAll(spark, resourcePath("cnj/dados"), out))(ExecutionContext.global)
+    Await.ready(run, 2.minutes) // a TimeoutException here means runAll blocked
+    val err = run.value.get.failed.get
+    assert(!err.isInstanceOf[IllegalStateException], s"the sums were awaited: $err")
+    assert(err.getStackTrace.exists(_.getMethodName == "writeCsv"), err)
+    assert(!new java.io.File(s"$out/ResumoMetas.csv").exists())
+  }
+
+  test("a header-only corpus keeps the output layout: header-only parts, no chart") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cnj-headers")
+    Seq("teste_STJ.csv", "teste_TRT3.csv").foreach { name =>
+      val src = scala.io.Source.fromFile(resourcePath(s"cnj/dados/$name"), "UTF-8")
+      val header = try src.getLines().next() finally src.close()
+      java.nio.file.Files.write(dir.resolve(name), (header + "\n").getBytes("UTF-8"))
     }
+    val out = freshOut("headers")
+    MetasJob.runAll(spark, dir.toString, out)
+    def visible(d: java.io.File) = d.listFiles().toSeq.filterNot(_.getName.startsWith("."))
+    assert(visible(new java.io.File(out)).map(_.getName).sorted ===
+      Seq("Consolidado.csv", "ResumoMetas.csv"))
+    Seq("Consolidado.csv" -> CnjSchema.allCols,
+        "ResumoMetas.csv" -> MetasJob.orderedColumns(
+          CnjSchema.keyCols ++ ("meta1" +: (CnjSchema.metaSpecs ++ CnjSchema.stjSpecs).map(_.name))))
+      .foreach { case (sub, header) =>
+        val parts = visible(new java.io.File(s"$out/$sub")).filter(_.getName.startsWith("part-"))
+        assert(parts.size == 1, s"$sub: ${parts.map(_.getName)}")
+        val src = scala.io.Source.fromFile(parts.head, "UTF-8")
+        try assert(src.getLines().toSeq === Seq(header.mkString(";")), sub)
+        finally src.close()
+      }
   }
 }

@@ -28,7 +28,8 @@ class MetaKernelPropertySpec extends SparkTestBase {
   private val cellGen: Gen[Option[Double]] =
     Gen.frequency(3 -> Gen.oneOf(-1.0, 0.0, 1.0, 2.0, 2.5).map(Some(_)),
       1 -> Gen.const(None))
-  private def courtGen(sigla: String): Gen[Seq[Map[String, Option[Double]]]] =
+  private def courtGen(sigla: String,
+      cellGen: Gen[Option[Double]] = cellGen): Gen[Seq[Map[String, Option[Double]]]] =
     for {
       nRows <- Gen.choose(1, 4)
       colPresent <- Gen.sequence[Seq[Boolean], Boolean](
@@ -116,5 +117,53 @@ class MetaKernelPropertySpec extends SparkTestBase {
         }
       }
     }
+  }
+
+  test("the observed per-court summary equals the lazy resumoTyped, in Spark's order") {
+    import org.apache.spark.sql.functions.col
+    // infinities too: +Inf and -Inf in one sum make NaN, which the kernel
+    // turns into NA on both paths
+    val wideCells: Gen[Option[Double]] = Gen.frequency(
+      6 -> Gen.oneOf(-1.0, 0.0, 1.0, 2.0, 2.5).map(Some(_)),
+      1 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity).map(Some(_)),
+      2 -> Gen.const(None))
+    val mapped = Factors.byBranch.keys.toSeq.sorted
+    // remapped, unmapped and null branches; non-ASCII courts whose UTF-8
+    // byte order (Spark's) differs from UTF-16 order (java.lang.String's):
+    // "ﬀ" is U+FB00, "𝒯" is U+1D4AF; and a court with no sigla
+    val courts: Seq[(String, String)] = Seq(
+      "STJ" -> "Tribunais Superiores", "TST" -> "Tribunais Superiores",
+      "TRE-X" -> "Justiça Eleitoral", "XX1" -> "Justiça Desconhecida", "NR1" -> null,
+      "TJÁ" -> ramo, "Ωmega" -> "Justiça Federal", "𝒯1" -> ramo, "ﬀ1" -> "Justiça do Trabalho",
+      "tj-low" -> ramo, (null: String) -> ramo) ++
+      (0 until 24).map(i => f"T$i%02d" -> mapped(i % mapped.size))
+    val rows = courts.flatMap { case (sigla, ramo) =>
+      val seed = Seed(7L + String.valueOf(sigla).hashCode + String.valueOf(ramo).hashCode)
+      courtGen(String.valueOf(sigla), wideCells)(Gen.Parameters.default, seed)
+        .getOrElse(fail(s"gen failed for $sigla"))
+        .map(m => Row.fromSeq(Seq(sigla, ramo) ++ CnjSchema.numericCols.map(c => m(c).orNull)))
+    }
+    // 4 partitions: a court's rows meet in the driver-side merge
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+
+    val (observed, sums) = MetasJob.observeCourtSums(df)
+    observed.write.format("noop").mode("overwrite").save()
+    val local = MetasJob.observedResumo(spark, sums)
+    val lazyTyped = MetasJob.resumoTyped(spark, df)
+
+    def keyed(rs: Array[Row]) = rs.map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
+    assert(keyed(local.collect()) === keyed(lazyTyped.collect()))
+    val localRes = MetasJob.stringlyOutput(local)
+    val lazyRes = MetasJob.stringlyOutput(lazyTyped)
+    val rendered = localRes.collect().toSeq
+    assert(rendered === lazyRes.collect().toSeq)
+    assert(rendered.map(_.getString(0)) === lazyRes.select(col("sigla_tribunal"))
+      .orderBy(col("sigla_tribunal")).collect().toSeq.map(_.getString(0)))
+    assert(rendered.map(_.getString(0)).filter(Set("ﬀ1", "𝒯1")) === Seq("ﬀ1", "𝒯1"))
+    assert(MetasJob.chartData(localRes).collect().toSeq ===
+      MetasJob.chartData(lazyRes).collect().toSeq)
+    assert(MetasJob.unmappedOnDriver(local) ===
+      MetasJob.unmappedBranches(df).collect().toSeq.map(r => (r.getString(0), r.getSeq[String](1))))
+    assert(MetasJob.unmappedOnDriver(local).map(_._1) === Seq(null, "Justiça Desconhecida"))
   }
 }

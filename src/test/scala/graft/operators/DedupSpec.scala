@@ -225,16 +225,31 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("simhashAgreeChunks widens block keys before their space saturates") {
-    // m = 1 blocks on 16-bit keys: 4 keys/doc over 2^16 buckets supports
-    // ~520k docs at the 32-candidates/doc budget; past that the bucket
-    // join is quadratic (measured 34x wall for the 100x->1000x gen decade
-    // at fixed m = 1) and the derivation steps to 24- then 30-bit keys
+    // m = 1 blocks on 15-bit keys (60 live bits in 4 chunks): 4 keys/doc
+    // over 2^15 buckets supports ~262k docs at the 32-candidates/doc
+    // budget; past that the bucket join is quadratic (measured 34x wall
+    // for the 100x->1000x gen decade at fixed m = 1) and the derivation
+    // steps to 24- then 30-bit keys
     assert(Dedup.simhashAgreeChunks(2000L) === 1)
-    assert(Dedup.simhashAgreeChunks(500000L) === 1)
+    assert(Dedup.simhashAgreeChunks(250000L) === 1)
+    assert(Dedup.simhashAgreeChunks(300000L) === 2)
     assert(Dedup.simhashAgreeChunks(600000L) === 2)
     assert(Dedup.simhashAgreeChunks(5000000L) === 2)
     assert(Dedup.simhashAgreeChunks(100000000L) === 3)
     assert(Dedup.simhashAgreeChunks(2000000000L) === 4)
+  }
+
+  test("simhash chunks cut the 60 live bits: at m = 1 every chunk key carries only live bits") {
+    val live = (1L << 60) - 1
+    (4 to 7).foreach { chunks =>
+      val masks = Dedup.simhashChunkMasks(chunks)
+      assert(masks.size === chunks)
+      assert(masks.forall(m => m != 0L && (m & ~live) == 0L), masks.map(_.toHexString))
+      assert(masks.reduce(_ | _) === live)
+      assert(masks.map(java.lang.Long.bitCount).sum === 60, "chunks overlap")
+    }
+    // maxHamming 3, m = 1: four 15-bit chunks, the last one included
+    assert(Dedup.simhashChunkMasks(4).map(java.lang.Long.bitCount) === Seq(15, 15, 15, 15))
   }
 
   test("connected components merge overlapping pairs transitively, both paths") {
