@@ -9,8 +9,9 @@ import graft.cnj.{MetasJob, Reader}
   * grafico_meta1.png — as a step-for-step copy of [[MetasJob.runAll]]
   * with a timer around each phase: the corpus is read once, by the
   * sharded Consolidado write, which observes the per-court sums on its
-  * way; the driver then builds the summary from them with no Spark job,
-  * and the Resumo sink, the fallback warning and the chart reuse it.
+  * way; the driver then computes, prints and writes ResumoMetas, the
+  * fallback warning and the chart from them in plain Scala, with no
+  * Spark job.
   * Consolidado is sharded — the documented S5/S6 divergence: a
   * coalesce(1) of the full corpus would funnel every byte through one
   * task.
@@ -51,16 +52,14 @@ object CnjBench {
     t("consolidado_observed_write") {
       MetasJob.writeCsv(observed, s"$outDir/Consolidado.csv", singleFile = false)
     }
-    val (summary, res) = t("driver_summary") {
-      val summary = MetasJob.observedResumo(spark, sums)
-      (summary, MetasJob.stringlyOutput(summary))
+    val (typed, res) = t("driver_summary") {
+      val typed = MetasJob.observedResumo(sums)
+      (typed, MetasJob.printed(typed))
     }
-    t("resumo_write")(MetasJob.writeCsv(res, s"$outDir/ResumoMetas.csv"))
+    t("resumo_write")(MetasJob.writeResumo(spark, res, s"$outDir/ResumoMetas.csv"))
     t("chart_png") {
-      MetasJob.warnUnmapped(summary)
-      val chart = MetasJob.chartData(res).collect()
-        .map(r => (r.getString(0), r.getDouble(1)))
-      MetasJob.writeChartPng(chart, s"$outDir/grafico_meta1.png")
+      MetasJob.warnUnmapped(typed)
+      MetasJob.writeChartPng(MetasJob.chartBars(res), s"$outDir/grafico_meta1.png")
     }
     val total = (System.nanoTime() - t0) / 1e9
     println(Harness.jsonLine(spark, "cnj_bench_total_sec",

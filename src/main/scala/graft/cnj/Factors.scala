@@ -1,10 +1,8 @@
 package graft.cnj
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** The static per-branch factor table of the reference (Versao_Np.py:
-  * 41-61): one literal map per factor key, from branch to factor.
+  * 41-61): one map per branch, from factor key to factor, and the lookup
+  * rules over it as plain Scala, called once per court by [[MetaKernel]].
   *
   * Lookup semantics (Versao_Np.py:10-30,122):
   *  1. branch remap: 'Tribunais Superiores' -> TST/STJ-specific branch by
@@ -12,19 +10,9 @@ import org.apache.spark.sql.functions._
   *  2. unmapped branch -> fall back to the whole 'Justiça Estadual' row;
   *  3. per-key fallback: a branch missing a factor key borrows the
   *     'Justiça Estadual' value for that key ('NA' if JE lacks it too).
-  * Steps 2-3 are one coalesce(branch_factor, je_factor) over the map
-  * lookup, as the reference does two dict lookups.
+  * Steps 2-3 are the reference's two dict lookups ([[factor]]).
   */
 object Factors {
-
-  /** Factor keys of the 13 standard metas, in config order. */
-  val standardKeys: Seq[String] =
-    Seq("2a", "2b", "2c", "2ant", "4a", "4b", "6", "7a", "7b", "8a", "8b", "10a", "10b")
-
-  /** STJ-only whole-meta keys (Versao_Np.py:59). */
-  val stjKeys: Seq[String] = Seq("8", "10")
-
-  val allKeys: Seq[String] = standardKeys ++ stjKeys
 
   private val je: Map[String, Double] = Map(
     "2a" -> 1000.0 / 8, "2b" -> 1000.0 / 9, "2c" -> 1000.0 / 9.5, "2ant" -> 100.0,
@@ -58,33 +46,27 @@ object Factors {
       "2ant" -> 100.0, "4a" -> 1000.0 / 9, "4b" -> 100.0, "6" -> 1000.0 / 7.5,
       "7a" -> 1000.0 / 7.5, "7b" -> 1000.0 / 7.5, "8" -> 1000.0 / 10, "10" -> 1000.0 / 10))
 
-  /** Column name for a factor key's [[branchFactor]] column. */
-  def fcol(key: String): String = s"f_$key"
-
-  /** Branch remap of Versao_Np.py:11-24 as a when-chain on the branch. */
-  def ramoUsado(ramo: Column, sigla: Column): Column =
-    when(ramo === "Tribunais Superiores",
-      when(sigla === "TST", lit("Tribunal Superior do Trabalho"))
-        .when(sigla === "STJ", lit("Superior Tribunal de Justiça"))
-        .otherwise(ramo))
-      .when(ramo === "Justiça Eleitoral", lit("Tribunal Superior Eleitoral"))
-      .otherwise(ramo)
-
-  /** The remapped branch's own factor for `key`, null when the branch
-    * has none or is not mapped: a lookup in a literal map of the
-    * branches that carry the key. A projection, not a join, so over a
-    * driver-local summary it folds on the driver with no Spark job. */
-  def branchFactor(key: String, ramoUsado: Column): Column =
-    typedLit(byBranch.collect { case (ramo, fs) if fs.contains(key) => ramo -> fs(key) })
-      .apply(ramoUsado)
-
-  /** Per-key effective factor after the two-level fallback: the
-    * branch's own value if present, else the Justiça-Estadual constant,
-    * else null. The frame must already carry the f_* columns (all null
-    * for an unmapped branch). */
-  def effectiveFactor(key: String): Column =
-    je.get(key) match {
-      case Some(v) => coalesce(col(fcol(key)), lit(v))
-      case None => col(fcol(key)) // '8'/'10' have no JE fallback
+  /** Branch remap of Versao_Np.py:11-24: the superior courts take their
+    * own court's row, the electoral branch takes the TSE's. A null
+    * branch stays null. */
+  def ramoUsado(ramo: String, sigla: String): String = ramo match {
+    case "Tribunais Superiores" => sigla match {
+      case "TST" => "Tribunal Superior do Trabalho"
+      case "STJ" => "Superior Tribunal de Justiça"
+      case _ => ramo
     }
+    case "Justiça Eleitoral" => "Tribunal Superior Eleitoral"
+    case _ => ramo
+  }
+
+  /** The remapped branch has a row in the table; an unmapped one takes
+    * the Justiça Estadual factors and is warned about. */
+  def mapped(ramoUsado: String): Boolean = byBranch.contains(ramoUsado)
+
+  /** Effective factor for `key` after the two-level fallback: the
+    * remapped branch's own value, else the Justiça Estadual value, else
+    * none. The STJ-only keys '8'/'10' have no JE value, so only a branch
+    * that carries them gets them. */
+  def factor(key: String, ramoUsado: String): Option[Double] =
+    byBranch.get(ramoUsado).flatMap(_.get(key)).orElse(je.get(key))
 }

@@ -4,24 +4,27 @@ import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.DriverSort
-import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.sql.graft.LocalCsv
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The end-to-end Metas Nacionais pipeline — the reference's whole program
-  * (Versao_Np.py, Versao_P.py) as Spark plans: tolerant multi-file scan
-  * -> per-court sums -> factor lookups -> meta projection -> stringly
-  * sinks. The Np/P distinction disappears: Spark's task scheduler IS the
-  * process pool.
+  * (Versao_Np.py, Versao_P.py): tolerant multi-file scan -> per-court
+  * sums -> [[MetaKernel]] per court -> stringly sinks. The Np/P
+  * distinction disappears: Spark's task scheduler IS the process pool.
   *
   * Like the reference, which takes each court file's metas row and its
   * share of Consolidado from one loaded frame (Versao_Np.py:155,224-227),
   * [[runAll]] scans the corpus ONCE: the Consolidado write carries the
   * per-court sums as an observed metric ([[MetaKernel.keyedSums]]), and
-  * everything after it runs on the driver over those few dozen rows.
-  * [[resumoTyped]] is the same kernel over a lazy groupBy, for streams
-  * and for callers that want a plan rather than a result.
+  * everything after it is plain Scala on the driver over those few dozen
+  * rows. The lazy API ([[resumoTyped]], [[stringlyOutput]], [[chartData]],
+  * [[unmappedBranches]], [[debugTrace]]) runs the same functions inside
+  * typed maps and filters of a plan, for streams and for callers that
+  * want a plan rather than a result.
   *
   * Documented divergence (SURVEY.md §7.3): the reference keys results on
   * the file (one row per input file, identity from row 0); we key on
@@ -35,55 +38,23 @@ object MetasJob {
     data.groupBy(col("sigla_tribunal"), col("ramo_justica"))
       .agg(MetaKernel.aggColumns.head, MetaKernel.aggColumns.tail: _*)
 
-  /** Per-court sums plus the remapped branch and its own factors (the
-    * f_* columns) — the front half of [[metas]] and [[debugTrace]]. */
-  private def withFactors(sums: DataFrame): DataFrame = {
-    val ramoUsado = Factors.ramoUsado(col("ramo_justica"), col("sigla_tribunal"))
-    sums.select(col("*") +: Factors.allKeys.map(k =>
-      Factors.branchFactor(k, ramoUsado).as(Factors.fcol(k))): _*)
-  }
-
-  /** Per-court meta summary with typed (double) meta columns. */
-  def resumoTyped(spark: SparkSession, data: DataFrame): DataFrame = metas(courtSums(data))
-
-  /** The meta projection over per-court sums ([[MetaKernel.sumsSchema]]),
-    * lazy ([[resumoTyped]]) or driver-local ([[observedResumo]]). */
-  private def metas(sums: DataFrame): DataFrame = {
-    val factored = withFactors(sums)
-
-    val standard = CnjSchema.metaSpecs.map { spec =>
-      spec.name -> MetaKernel.metaValue(spec, Factors.effectiveFactor(spec.factorKey))
-    }
-    val stj = CnjSchema.stjSpecs.map(spec => spec.name -> MetaKernel.stjValue(spec))
-    val stjByName = stj.toMap
-
-    val suppressed = standard.map {
-      case (n @ ("meta8a" | "meta8b"), c) => n -> MetaKernel.suppressIf(stjByName("meta8_stj"), c)
-      case (n @ ("meta10a" | "meta10b"), c) => n -> MetaKernel.suppressIf(stjByName("meta10_stj"), c)
-      case other => other
-    }
-
-    val metaCols: Seq[(String, Column)] =
-      ("meta1" -> MetaKernel.meta1Value) +: (suppressed ++ stj)
-
-    factored.select(
-      col("sigla_tribunal") +: col("ramo_justica") +:
-        metaCols.map { case (n, c) => c.as(n) }: _*)
-  }
+  /** Per-court meta summary with typed (double) meta columns
+    * ([[MetaKernel.resumoSchema]]): the sums' HashAggregate, then
+    * [[MetaKernel.metas]] once per court in a typed map. */
+  def resumoTyped(spark: SparkSession, data: DataFrame): DataFrame =
+    courtSums(data).map(MetaKernel.metas)(Encoders.row(MetaKernel.resumoSchema))
 
   /** ResumoMetas with the reference's stringly output contract
-    * (Versao_Np.py:231-242): every cell a string, nulls rendered 'NA',
-    * columns ordered principal -> sorted metas -> sorted _stj -> rest.
+    * (Versao_Np.py:231-242) as a driver-local frame.
     *
     * Computed exactly as [[runAll]] computes it, with a `noop` sink in
-    * place of the Consolidado write: the scan runs when this is called
-    * and the returned frame is driver-local. One path for both entry
-    * points means a caller that warms up on `resumo` has compiled what
-    * `runAll` executes. */
+    * place of the Consolidado write: the scan runs when this is called.
+    * One path for both entry points means a caller that warms up on
+    * `resumo` has compiled what `runAll` executes. */
   def resumo(spark: SparkSession, inDir: String): DataFrame = {
     val (observed, sums) = observeCourtSums(Reader.readDir(spark, inDir))
     observed.write.format("noop").mode("overwrite").save()
-    stringlyOutput(observedResumo(spark, sums))
+    spark.createDataFrame(printed(observedResumo(sums)).map(Row.fromSeq).asJava, printedSchema)
   }
 
   /** The corpus with its per-court sums attached as an observed metric
@@ -94,65 +65,55 @@ object MetasJob {
     (data.observe(sums, MetaKernel.keyedSums.as("court_sums")), sums)
   }
 
-  /** The typed per-court summary ([[resumoTyped]]'s rows) as a
-    * driver-local frame, from the sums an action on the frame that
+  /** The typed per-court summary ([[resumoTyped]]'s rows, in no
+    * particular order) from the sums an action on the frame that
     * [[observeCourtSums]] returned has observed. Call it only after that
     * action returned: a failed action's metric, if one arrives, covers
-    * only part of the corpus. The
-    * metric reaches the driver through the listener bus, normally within
-    * milliseconds of the action; a minute without it is a named failure,
-    * not a hang. Everything over the local rows — factor lookups, the
-    * kernel, the rendering, the sorts — folds on the driver with no
-    * Spark job. */
-  private[graft] def observedResumo(spark: SparkSession, sums: Observation): DataFrame = {
+    * only part of the corpus. The metric reaches the driver through the
+    * listener bus, normally within milliseconds of the action; a minute
+    * without it is a named failure, not a hang. */
+  private[graft] def observedResumo(sums: Observation): Seq[Row] = {
     val row =
       try Await.result(sums.future, 1.minute)
       catch {
         case e: TimeoutException => throw new IllegalStateException(
           s"the per-court sums (observation ${sums.name}) did not arrive within a minute", e)
       }
-    metas(spark.createDataFrame(row.getSeq[Row](0).asJava, MetaKernel.sumsSchema))
+    row.getSeq[Row](0).map(MetaKernel.metas)
   }
 
-  /** Python str() renders doubles in plain decimal up to 1e16 where
-    * Spark's string cast flips to scientific notation at 1e7. Metas are
-    * bround(x, 2), so render via DECIMAL(30,2) and trim trailing zeros
-    * (keeping one fractional digit, as str(3.0) == "3.0"). Residual
-    * divergence: Python switches to scientific at >= 1e16; we stay plain
-    * (decimal overflow to null -> "NA" beyond 1e28). */
-  private def plainDecimal(c: Column): Column = {
-    val s = c.cast(org.apache.spark.sql.types.DecimalType(30, 2)).cast(StringType)
-    regexp_replace(regexp_replace(s, "(\\.\\d*?)0+$", "$1"), "\\.$", ".0")
+  /** ResumoMetas' columns (Versao_Np.py:234-242), all strings. */
+  private val printedSchema: StructType = StructType(
+    orderedColumns(MetaKernel.resumoSchema.fieldNames.toSeq).map(StructField(_, StringType)))
+
+  /** ResumoMetas as printed, from typed rows: every cell through
+    * [[MetaKernel.cell]], the columns in [[printedSchema]] order, the
+    * rows sorted by the printed court as [[stringlyOutput]] sorts them
+    * (Spark's string order; courts that print alike keep their order). */
+  private[graft] def printed(typed: Seq[Row]): Seq[Seq[String]] = {
+    val order = printedSchema.fieldNames.toSeq.map(MetaKernel.resumoSchema.fieldIndex)
+    typed.map(r => order.map(i => MetaKernel.cell(r.get(i)))).sortBy(_.head)(sparkStrings)
   }
 
-  /** plainDecimal plus the 2-decimal contract check: a value whose
-    * DECIMAL(30,2) round-trip is not bit-identical was never bround(x, 2)
-    * and would be silently truncated — flag it instead. Decimal overflow
-    * (>= 1e28 -> null) keeps the documented 'NA' rendering. */
-  private def guardedPlainDecimal(c: Column): Column = {
-    val dec = c.cast(org.apache.spark.sql.types.DecimalType(30, 2))
-    when(c.isNotNull && dec.isNotNull &&
-        dec.cast(org.apache.spark.sql.types.DoubleType) =!= c, lit("PRECISION_LOSS"))
-      .otherwise(plainDecimal(c))
-  }
+  /** Spark's ascending string order: UTF-8 bytes, nulls first. */
+  private val sparkStrings: Ordering[String] = (a, b) =>
+    if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+    else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
-  /** CONTRACT: every DoubleType column fed through here must already be
-    * rounded to <= 2 decimals (the meta kernel brounds every meta value) —
-    * plainDecimal renders through DECIMAL(30,2), which would silently
-    * round a higher-precision double. Guarded at runtime: a double cell
-    * whose DECIMAL(30,2) round-trip is not bit-identical to the raw value
-    * renders as 'PRECISION_LOSS', surfacing the violation in golden
-    * output instead of hiding it. */
+  /** The stringly output contract over any typed frame, lazily (a stream
+    * in complete mode too): every cell a string, a double through
+    * [[MetaKernel.cell]] (so nulls and overflow print 'NA'), any other
+    * column through Spark's string cast with nulls as 'NA'; columns
+    * ordered principal -> sorted metas -> sorted _stj -> rest; rows
+    * sorted by court. */
   def stringlyOutput(typed: DataFrame): DataFrame = {
-    val stringly = typed.select(typed.schema.fields.toIndexedSeq.map { f =>
-      val c = col(f.name)
-      (f.dataType match {
-        case org.apache.spark.sql.types.DoubleType => guardedPlainDecimal(c)
-        case _ => c.cast(StringType)
-      }).as(f.name)
-    }: _*).na.fill("NA")
-    DriverSort.orderBy(stringly.select(orderedColumns(stringly.columns.toIndexedSeq).map(col): _*),
-      col("sigla_tribunal"))
+    val header = orderedColumns(typed.columns.toIndexedSeq)
+    val cells = typed.select(header.map { n =>
+      if (typed.schema(n).dataType == DoubleType) col(n) else col(n).cast(StringType).as(n)
+    }: _*)
+    cells.map(r => Row.fromSeq(r.toSeq.map(MetaKernel.cell)))(
+      Encoders.row(StructType(header.map(StructField(_, StringType)))))
+      .orderBy(col("sigla_tribunal"))
   }
 
   /** Column ordering of Versao_Np.py:234-242 (F5). */
@@ -170,103 +131,111 @@ object MetasJob {
   def consolidado(spark: SparkSession, inDir: String): DataFrame =
     Reader.readDir(spark, inDir)
 
+  /** A court whose remapped branch has no factors: it takes the Justiça
+    * Estadual ones, and the reference warns. */
+  private def unmapped(ramo: String, sigla: String): Boolean =
+    !Factors.mapped(Factors.ramoUsado(ramo, sigla))
+
   /** Warning channel for the silent factor fallback (Versao_Np.py:29,
-    * 145,168-169): branches with no row in the factor dimension get
+    * 145,168-169): branches with no row in the factor table get
     * Justiça-Estadual factors, and the reference warns once per branch
     * naming the court. One distinct row per unmapped branch with the
     * sorted courts it covers; a null branch (the pandas NaN-ramo case)
     * is reported too. Tiny by construction (bounded by the number of
-    * distinct branches), so [[runAll]] collects and logs it.
+    * distinct branches).
     *
     * Accepts any frame carrying (ramo_justica, sigla_tribunal) — raw
-    * corpus rows or the per-court aggregate give identical output (the
+    * corpus rows or the per-court summary give identical output (the
     * groupBy/collect_set only sees distinct pairs, and those pairs ARE
-    * the aggregate's keys). */
+    * the summary's keys). */
   def unmappedBranches(data: DataFrame): DataFrame =
-    unmappedCourts(data)
+    data.select(col("ramo_justica"), col("sigla_tribunal"))
+      .filter((r: Row) => unmapped(r.getString(0), r.getString(1)))
       .groupBy(col("ramo_justica"))
       .agg(sort_array(collect_set(col("sigla_tribunal"))).as("siglas"))
       .orderBy(col("ramo_justica"))
 
-  /** The (ramo_justica, sigla_tribunal) rows whose branch has no factors. */
-  private def unmappedCourts(data: DataFrame): DataFrame = {
-    val mapped = Factors.byBranch.keys.toSeq
-    val ramoUsado = Factors.ramoUsado(col("ramo_justica"), col("sigla_tribunal"))
-    data.select(col("ramo_justica"), col("sigla_tribunal"))
-      .filter(ramoUsado.isNull || !ramoUsado.isin(mapped: _*))
+  /** [[unmappedBranches]]' rows over typed courts, in plain Scala: the
+    * branches in Spark's order, each with its distinct non-null courts
+    * sorted (`collect_set` drops a null court). */
+  private[cnj] def unmappedOnDriver(typed: Seq[Row]): Seq[(String, Seq[String])] =
+    typed.map(r => (r.getString(1), r.getString(0)))
+      .filter { case (ramo, sigla) => unmapped(ramo, sigla) }
+      .groupBy(_._1).toSeq.sortBy(_._1)(sparkStrings)
+      .map { case (ramo, courts) => ramo -> courts.flatMap(c => Option(c._2)).distinct.sorted(sparkStrings) }
+
+  /** Mirrors the reference's once-per-branch fallback warning
+    * (Versao_Np.py:29,168-169) over typed courts. */
+  private[graft] def warnUnmapped(typed: Seq[Row]): Unit = {
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    unmappedOnDriver(typed).foreach { case (ramo, siglas) =>
+      log.warn(s"branch '$ramo' (courts: ${siglas.mkString(", ")}) has no specific " +
+        "factors; falling back to Justiça Estadual")
+    }
   }
 
-  /** [[unmappedBranches]]' rows off a driver-local per-court summary,
-    * with no Spark job: the unmapped courts fold on the driver and sort
-    * by (branch, court), and each branch collects its courts in that
-    * order. A null court is dropped, as `collect_set` drops it; the
-    * summary's (branch, court) pairs are distinct already. */
-  private[cnj] def unmappedOnDriver(summary: DataFrame): Seq[(String, Seq[String])] = {
-    val rows = DriverSort.orderBy(unmappedCourts(summary), col("ramo_justica"), col("sigla_tribunal"))
-      .collect().toSeq.map(r => (r.getString(0), Option(r.getString(1))))
-    rows.map(_._1).distinct.map(ramo => ramo -> rows.collect { case (`ramo`, Some(s)) => s })
-  }
+  private val traceSchema: StructType = StructType(
+    Seq("sigla_tribunal", "ramo_justica", "meta").map(StructField(_, StringType)) ++
+      Seq("numerator", "denominator", "factor", "raw", "value").map(StructField(_, DoubleType)))
 
   /** Golden-trace debug mode (the reference's NOME_ARQUIVO_DEBUG,
     * Versao_Np.py:147,174-211, generalized from meta1-only to every
     * meta): for one named court, one row per meta with the numerator
-    * sum, the denominator (and its value after the subtraction), the
-    * effective factor after the two-level fallback, the unrounded ratio,
-    * and the final guarded value. Values are pre-suppression (the
-    * meta8/meta10 a/b blanking happens in [[resumoTyped]]'s projection);
-    * the stj rows carry their own no-JE-fallback factor semantics.
-    * One filtered row off the same aggregate as resumoTyped — the trace
-    * shows exactly the numbers the pipeline used. */
+    * sum, the denominator after the subtraction, the effective factor
+    * after the two-level fallback, the unrounded ratio, and the guarded
+    * value ([[MetaKernel.Term]]). Values are pre-suppression (the
+    * meta8/meta10 a/b blanking happens in [[MetaKernel.metas]]). The
+    * terms come off the same sums as resumoTyped — the trace shows
+    * exactly the numbers the pipeline used. */
   def debugTrace(spark: SparkSession, data: DataFrame, sigla: String): DataFrame = {
-    def s(c: String) = col(s"sum_$c")
-    def entry(name: String, num: Column, den: Column, fac: Column, value: Column) =
-      struct(lit(name).as("meta"), num.cast(DoubleType).as("numerator"),
-        den.cast(DoubleType).as("denominator"), fac.cast(DoubleType).as("factor"),
-        (try_divide(num, den) * fac).cast(DoubleType).as("raw"),
-        value.cast(DoubleType).as("value"))
-    val meta1 = entry("meta1",
-      s("julgados_2025"),
-      s("casos_novos_2025") + coalesce(s("dessobrestados_2025"), lit(0.0)) - s("suspensos_2025"),
-      lit(100.0), MetaKernel.meta1Value)
-    val standard = CnjSchema.metaSpecs.map { spec =>
-      val fac = Factors.effectiveFactor(spec.factorKey)
-      entry(spec.name, s(spec.j), s(spec.d) - s(spec.s), fac,
-        MetaKernel.metaValue(spec, fac))
-    }
-    val stj = CnjSchema.stjSpecs.map { spec =>
-      entry(spec.name, s(spec.j), s(spec.d) - s(spec.s),
-        col(Factors.fcol(spec.factorKey)), MetaKernel.stjValue(spec))
-    }
-    withFactors(courtSums(data))
+    def boxed(v: Option[Double]): java.lang.Double = v.map(Double.box).orNull
+    courtSums(data)
       .filter(col("sigla_tribunal") === sigla)
-      .select(col("sigla_tribunal"), col("ramo_justica"),
-        explode(array(meta1 +: (standard ++ stj): _*)).as("t"))
-      .select(col("sigla_tribunal"), col("ramo_justica"), col("t.*"))
+      .flatMap(sums => MetaKernel.terms(sums).map(t => Row(sums.getString(0), sums.getString(1),
+        t.meta, boxed(t.num), boxed(t.den), boxed(t.factor), boxed(t.raw), boxed(t.value))))(
+        Encoders.row(traceSchema))
   }
 
-  /** Chart feed (S7/O1/F3/F4): courts with numeric meta1, sorted desc
-    * (then by court), on the driver when `resumo` is driver-local.
-    * The cast is built with the Column API, not `expr("try_cast(...)")`:
-    * the same TRY-mode cast, without a trip through the SQL parser, whose
-    * first use in a JVM costs a few hundred ms of driver time (the rest of the
-    * job never parses SQL). */
+  private val chartSchema: StructType = StructType(Seq(
+    StructField("sigla_tribunal", StringType), StructField("meta1_val", DoubleType)))
+
+  /** Chart feed (S7/O1/F3/F4) over a printed ResumoMetas frame: the
+    * courts whose meta1 cell is a number ([[MetaKernel.chartValue]]),
+    * sorted by it descending, then by court. */
   def chartData(resumo: DataFrame): DataFrame =
-    DriverSort.orderBy(
-      resumo
-        .withColumn("meta1_val", col("meta1").try_cast(DoubleType))
-        .na.drop(Seq("meta1_val"))
-        .select(col("sigla_tribunal"), col("meta1_val")),
-      col("meta1_val").desc, col("sigla_tribunal"))
+    resumo.select(col("sigla_tribunal"), col("meta1").cast(StringType))
+      .flatMap(r => MetaKernel.chartValue(r.getString(1)).map(v => Row(r.getString(0), v)))(
+        Encoders.row(chartSchema))
+      .orderBy(col("meta1_val").desc, col("sigla_tribunal"))
+
+  /** [[chartData]]'s bars over printed rows ([[printed]]), in plain
+    * Scala with Spark's orderings. */
+  private[graft] def chartBars(printed: Seq[Seq[String]]): Array[(String, Double)] = {
+    val meta1 = printedSchema.fieldIndex("meta1")
+    printed.flatMap(r => MetaKernel.chartValue(r(meta1)).map(r.head -> _)).toArray
+      .sortWith { case ((sa, va), (sb, vb)) =>
+        val byValue = SQLOrderingUtil.compareDoubles(vb, va)
+        if (byValue != 0) byValue < 0 else sparkStrings.lt(sa, sb)
+      }
+  }
+
+  /** The sink options of ResumoMetas and Consolidado (S4-S6;
+    * Versao_Np.py:100-102): ;-separated UTF-8 CSV with a header. */
+  private val csvOptions: Map[String, String] =
+    Map("sep" -> ";", "header" -> "true", "encoding" -> "UTF-8")
 
   /** ;-separated UTF-8 CSV sink (S4-S6; Versao_Np.py:100-102). A real
     * cluster keeps the sharded part files; coalesce(1) only mirrors the
     * reference's single-file contract for small outputs. */
   def writeCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
     val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite")
-      .option("sep", ";").option("header", "true").option("encoding", "UTF-8")
-      .csv(path)
+    out.write.mode("overwrite").options(csvOptions).csv(path)
   }
+
+  /** [[writeCsv]]'s single-file output for printed ResumoMetas rows,
+    * written on the driver with no Spark job ([[LocalCsv]]). */
+  private[graft] def writeResumo(spark: SparkSession, printed: Seq[Seq[String]], path: String): Unit =
+    LocalCsv.write(spark, printedSchema.fieldNames.toSeq, printed, path, csvOptions)
 
   /** PNG bar-chart sink for meta1 (S7; Versao_Np.py:83-98) — pure JDK 2D,
     * driver-side over the tiny per-court summary. */
@@ -302,27 +271,16 @@ object MetasJob {
     ImageIO.write(img, "png", new java.io.File(path))
   }
 
-  /** Mirrors the reference's once-per-branch fallback warning
-    * (Versao_Np.py:29,168-169) off a driver-local per-court summary. */
-  def warnUnmapped(summary: DataFrame): Unit = {
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    unmappedOnDriver(summary).foreach { case (ramo, siglas) =>
-      log.warn(s"branch '$ramo' (courts: ${siglas.mkString(", ")}) has no specific " +
-        "factors; falling back to Justiça Estadual")
-    }
-  }
-
   /** Full run: ResumoMetas.csv + Consolidado.csv + grafico_meta1.png.
     *
     * The corpus is read exactly once, by the Consolidado write, which
-    * observes the per-court sums on its way ([[observeCourtSums]]). The
-    * rest runs on the driver over those few dozen rows
-    * ([[observedResumo]]): the kernel, the rendering, the fallback
-    * warning, both sorts and the chart. So a run is two Spark jobs: the
-    * Consolidado write and the single-file ResumoMetas write. The raw
-    * corpus is NOT cached: building the InMemoryRelation for ~1 GB of
-    * expanded rows costs ~10x the one CSV scan it would share (measured
-    * at the 930 MB corpus).
+    * observes the per-court sums on its way ([[observeCourtSums]]). That
+    * write is the run's only Spark job. The rest is plain Scala on the
+    * driver over those few dozen rows ([[observedResumo]]): the kernel,
+    * the rendering, the sorts, the ResumoMetas file ([[writeResumo]]),
+    * the fallback warning and the chart. The raw corpus is NOT cached:
+    * building the InMemoryRelation for ~1 GB of expanded rows costs ~10x
+    * the one CSV scan it would share (measured at the 930 MB corpus).
     *
     * A failed Consolidado write throws from here before anything waits
     * for its metric, and writes no ResumoMetas or chart. */
@@ -333,11 +291,10 @@ object MetasJob {
     // through one task (measured 187 s vs 19 s for ~1 GB); the
     // single-file contract is kept only for the tiny summary
     writeCsv(observed, s"$outDir/Consolidado.csv", singleFile = false)
-    val summary = observedResumo(spark, sums)
-    val res = stringlyOutput(summary)
-    writeCsv(res, s"$outDir/ResumoMetas.csv")
-    warnUnmapped(summary)
-    val chart = chartData(res).collect().map(r => (r.getString(0), r.getDouble(1)))
-    writeChartPng(chart, s"$outDir/grafico_meta1.png")
+    val typed = observedResumo(sums)
+    val res = printed(typed)
+    writeResumo(spark, res, s"$outDir/ResumoMetas.csv")
+    warnUnmapped(typed)
+    writeChartPng(chartBars(res), s"$outDir/grafico_meta1.png")
   }
 }

@@ -69,14 +69,30 @@ object Reader {
 
   /** Literal NaNs behave like nulls in pandas (`notna()`/`sum` skip
     * them); the parser nulls them at the edge. Infinities pass through,
-    * matching Spark's cast and pandas float semantics. */
-  private[cnj] def parseDouble(s: String): java.lang.Double =
-    if (s.isEmpty) null
-    else
-      try {
-        val d = java.lang.Double.parseDouble(s)
-        if (d.isNaN) null else java.lang.Double.valueOf(d)
-      } catch { case _: NumberFormatException => null }
+    * matching Spark's cast and pandas float semantics.
+    *
+    * A junk cell ("x", "n/a") is null without a thrown exception:
+    * `Double.parseDouble` trims chars <= ' ', takes one optional sign,
+    * and then needs a digit, '.', "NaN" or "Infinity" (hex starts with
+    * '0'), so a cell whose first char after those is anything else
+    * cannot parse. Throwing and catching its `NumberFormatException`
+    * (which fills in a stack trace) costs tens of times the parse of a
+    * number, and a corpus can hold thousands of such cells. */
+  private[cnj] def parseDouble(s: String): java.lang.Double = {
+    var i = 0
+    while (i < s.length && s.charAt(i) <= ' ') i += 1
+    if (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+    if (i == s.length) null
+    else {
+      val c = s.charAt(i)
+      if (!(c >= '0' && c <= '9') && c != '.' && c != 'N' && c != 'I') null
+      else
+        try {
+          val d = java.lang.Double.parseDouble(s)
+          if (d.isNaN) null else java.lang.Double.valueOf(d)
+        } catch { case _: NumberFormatException => null }
+    }
+  }
 
   /** Raw first line of the file (driver-side, one line of I/O). Doubles
     * as the header — column names split from it — and as the parser's

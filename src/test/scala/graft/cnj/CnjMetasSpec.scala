@@ -146,15 +146,35 @@ class CnjMetasSpec extends SparkTestBase {
     dir.toString
   }
 
-  test("a warm runAll runs 2 Spark jobs: the Consolidado write and the ResumoMetas write") {
+  test("a warm runAll runs 1 Spark job: the Consolidado write") {
     val mapped = allMappedCorpus()
     MetasJob.runAll(spark, mapped, freshOut("jobs"))
     val (_, jobs, _) = countJobsAndTasks(MetasJob.runAll(spark, mapped, freshOut("jobs")))
-    assert(jobs == 2)
-    // with an unmapped branch too: the fallback warning folds on the driver
+    assert(jobs == 1)
+    // with an unmapped branch too: the fallback warning is driver-side
     val (_, fixtureJobs, _) =
       countJobsAndTasks(MetasJob.runAll(spark, resourcePath("cnj/dados"), freshOut("jobs")))
-    assert(fixtureJobs == 2)
+    assert(fixtureJobs == 1)
+  }
+
+  test("runAll prints NA for a meta of 1e28 or more, whatever the ANSI setting") {
+    // DECIMAL(30,2), the rendering's range, ends below 1e28: a meta1 of
+    // ~1e27 prints, one of 1e30 is NA
+    val dir = java.nio.file.Files.createTempDirectory("graft-cnj-huge")
+    java.nio.file.Files.write(dir.resolve("teste_HUGE.csv"), Seq(
+      "sigla_tribunal,ramo_justica,julgados_2025,casos_novos_2025,suspensos_2025",
+      "TBIG,Justiça Estadual,1e28,1,0",
+      "TOK,Justiça Estadual,1e25,1,0").mkString("\n").getBytes("UTF-8"))
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val out = freshOut("huge")
+    MetasJob.runAll(spark, dir.toString, out)
+    val part = new java.io.File(s"$out/ResumoMetas.csv").listFiles()
+      .filter(_.getName.endsWith(".csv")).head
+    val src = scala.io.Source.fromFile(part, "UTF-8")
+    val rows = try src.getLines().drop(1).map(_.split(";", -1)).toSeq finally src.close()
+    val meta1 = rows.map(r => r(0) -> r(2)).toMap
+    assert(meta1("TBIG") == "NA")
+    assert(meta1("TOK").matches("1\\d{27}\\.0"), meta1("TOK")) // ~1e27, in plain decimal
   }
 
   test("a Consolidado write that throws surfaces its exception, without waiting for the sums") {

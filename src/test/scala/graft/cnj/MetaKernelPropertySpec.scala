@@ -9,10 +9,12 @@ import org.scalacheck.rng.Seed
 
 import graft.SparkTestBase
 
-/** Property-style differential test: random per-court datasets through the
-  * Spark meta kernel vs an independent plain-Scala re-implementation of the
+/** Property-style differential tests of the meta kernel: random per-court
+  * datasets against an independent plain-Scala re-implementation of the
   * reference semantics (sum guards, den==0, optional dessobrestados,
-  * half-even rounding). Values are drawn from a tiny set so zero
+  * half-even rounding), the driver path against the lazy plans, and the
+  * kernel with its rendering against the Column-expression oracle
+  * ([[ColumnKernelOracle]]). Values are drawn from small sets so zero
   * denominators and all-null columns occur constantly.
   */
 class MetaKernelPropertySpec extends SparkTestBase {
@@ -148,22 +150,79 @@ class MetaKernelPropertySpec extends SparkTestBase {
 
     val (observed, sums) = MetasJob.observeCourtSums(df)
     observed.write.format("noop").mode("overwrite").save()
-    val local = MetasJob.observedResumo(spark, sums)
+    val local = MetasJob.observedResumo(sums)
     val lazyTyped = MetasJob.resumoTyped(spark, df)
 
-    def keyed(rs: Array[Row]) = rs.map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
-    assert(keyed(local.collect()) === keyed(lazyTyped.collect()))
-    val localRes = MetasJob.stringlyOutput(local)
+    def keyed(rs: Seq[Row]) = rs.map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
+    assert(keyed(local) === keyed(lazyTyped.collect().toSeq))
+    val printed = MetasJob.printed(local)
     val lazyRes = MetasJob.stringlyOutput(lazyTyped)
-    val rendered = localRes.collect().toSeq
-    assert(rendered === lazyRes.collect().toSeq)
-    assert(rendered.map(_.getString(0)) === lazyRes.select(col("sigla_tribunal"))
+    assert(printed === lazyRes.collect().toSeq.map(_.toSeq))
+    assert(printed.map(_.head) === lazyRes.select(col("sigla_tribunal"))
       .orderBy(col("sigla_tribunal")).collect().toSeq.map(_.getString(0)))
-    assert(rendered.map(_.getString(0)).filter(Set("ﬀ1", "𝒯1")) === Seq("ﬀ1", "𝒯1"))
-    assert(MetasJob.chartData(localRes).collect().toSeq ===
-      MetasJob.chartData(lazyRes).collect().toSeq)
+    assert(printed.map(_.head).filter(Set("ﬀ1", "𝒯1")) === Seq("ﬀ1", "𝒯1"))
+    assert(MetasJob.chartBars(printed).toSeq ===
+      MetasJob.chartData(lazyRes).collect().toSeq.map(r => (r.getString(0), r.getDouble(1))))
     assert(MetasJob.unmappedOnDriver(local) ===
       MetasJob.unmappedBranches(df).collect().toSeq.map(r => (r.getString(0), r.getSeq[String](1))))
     assert(MetasJob.unmappedOnDriver(local).map(_._1) === Seq(null, "Justiça Desconhecida"))
+  }
+
+  test("the kernel and its rendering match the Column oracle on adversarial sums") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    // infinities, NaN, -0.0, magnitudes around DECIMAL(30,2)'s 1e28 edge,
+    // and cells whose meta lands on an .xx5 boundary (0.00125 * 100 =
+    // 0.125; 2.675 has no exact double, so bround sees its shortest
+    // rendering)
+    val adversarial: Gen[Option[Double]] = Gen.frequency(
+      6 -> Gen.oneOf(-1.0, 0.0, 1.0, 2.0, 2.5, 3.0, 7.0).map(Some(_)),
+      2 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN, -0.0)
+        .map(Some(_)),
+      3 -> Gen.oneOf(1e26, 3.3e26, 1e27, 9.99e27, 1e28, 5e28, 1e29, 1e30, -1e28, -2e26)
+        .map(Some(_)),
+      3 -> Gen.oneOf(0.00125, 0.02675, 0.01005, 0.00115, 1.115, 0.045, 2.675, 0.0001)
+        .map(Some(_)),
+      3 -> Gen.const(None))
+    val mapped = Factors.byBranch.keys.toSeq.sorted
+    val courts: Seq[(String, String)] = Seq(
+      "STJ" -> "Tribunais Superiores", "TST" -> "Tribunais Superiores",
+      "TRE-X" -> "Justiça Eleitoral", "XX1" -> "Justiça Desconhecida", "NR1" -> null) ++
+      (0 until 60).map(i => f"A$i%02d" -> mapped(i % mapped.size))
+    val rows = courts.flatMap { case (sigla, ramo) =>
+      courtGen(sigla, adversarial)(Gen.Parameters.default, Seed(11L + sigla.hashCode))
+        .getOrElse(fail(s"gen failed for $sigla"))
+        .map(m => Row.fromSeq(Seq(sigla, ramo) ++ CnjSchema.numericCols.map(c => m(c).orNull)))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    // one set of sums for both sides: a sum's value depends on the order
+    // it adds its cells in, and these cells are far apart in magnitude
+    val sums = df.groupBy(col("sigla_tribunal"), col("ramo_justica"))
+      .agg(MetaKernel.aggColumns.head, MetaKernel.aggColumns.tail: _*).collect().toSeq
+    val typed = sums.map(MetaKernel.metas)
+    val printed = MetasJob.printed(typed)
+    assert(printed.exists(_.contains("NA")) && printed.exists(_.exists(_.endsWith("5"))))
+
+    val sumsDf = spark.createDataFrame(spark.sparkContext.parallelize(sums, 2), MetaKernel.sumsSchema)
+    val saved = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val oracleTyped = ColumnKernelOracle.metas(sumsDf)
+      def keyed(rs: Seq[Row]) = rs.map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
+      assert(keyed(typed) === keyed(oracleTyped.collect().toSeq))
+      val oraclePrinted = ColumnKernelOracle.stringly(oracleTyped)
+      assert(printed === oraclePrinted.collect().toSeq.map(_.toSeq))
+      assert(MetasJob.chartBars(printed).toSeq === ColumnKernelOracle.chart(oraclePrinted)
+        .collect().toSeq.map(r => (r.getString(0), r.getDouble(1))))
+      assert(MetasJob.unmappedOnDriver(typed) === ColumnKernelOracle.unmapped(df)
+        .collect().toSeq.map(r => (r.getString(0), r.getSeq[String](1))))
+    } finally saved match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+    // the lazy rendering under the session's own ANSI setting
+    val lazyPrinted = MetasJob.stringlyOutput(
+      spark.createDataFrame(typed.asJava, MetaKernel.resumoSchema)).collect().toSeq.map(_.toSeq)
+    assert(lazyPrinted === printed)
   }
 }

@@ -25,6 +25,30 @@ class ReaderSpec extends SparkTestBase {
     assert(Reader.splitCsv("x,\"\",y").toSeq == Seq("x", "", "y"))
   }
 
+  test("parseDouble's junk shortcut answers as Double.parseDouble's try/catch does") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def reference(s: String): java.lang.Double =
+      if (s.isEmpty) null
+      else
+        try {
+          val d = java.lang.Double.parseDouble(s)
+          if (d.isNaN) null else java.lang.Double.valueOf(d)
+        } catch { case _: NumberFormatException => null }
+    val token: Gen[String] = for {
+      lead <- Gen.oneOf("", " ", "\t", "\u0001 ", "\u00a0")
+      sign <- Gen.oneOf("", "+", "-", "+-")
+      body <- Gen.oneOf(Gen.oneOf("NaN", "Infinity", "0x1p3", "0X1.8P1", "1e5", "1d", "2.5f",
+          ".5", "5.", "x", "", "N", "I", "Inf", "nan", "infinity", "1,5", "e5", ".", "0",
+          "12.34", "\u0661", "NaNx", "1e", "0x"),
+        Gen.listOf(Gen.oneOf('0', '9', '.', 'e', 'E', 'x', 'N', 'I', 'd', '-', ' ')).map(_.mkString))
+      trail <- Gen.oneOf("", " ", "\n", "x")
+    } yield lead + sign + body + trail
+    val tokens = (0 until 5000).map(i => token(Gen.Parameters.default, Seed(i.toLong)).get)
+    assert(tokens.count(t => reference(t) != null) > 300, "too few numeric tokens")
+    tokens.foreach(t => assert(Reader.parseDouble(t) == reference(t), s"token '$t'"))
+  }
+
   private def writeCsv(dir: java.nio.file.Path, name: String, lines: Seq[String]): Unit =
     Files.write(dir.resolve(name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
