@@ -1,5 +1,9 @@
 package graft.cnj
 
+import java.awt.{Color, Font}
+import java.awt.image.{BufferedImage, IndexColorModel}
+import javax.imageio.ImageIO
+
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
@@ -7,7 +11,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.LocalCsv
+import org.apache.spark.sql.graft.{DirectCsvFormat, LocalCsv}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -226,10 +230,16 @@ object MetasJob {
 
   /** ;-separated UTF-8 CSV sink (S4-S6; Versao_Np.py:100-102). A real
     * cluster keeps the sharded part files; coalesce(1) only mirrors the
-    * reference's single-file contract for small outputs. */
+    * reference's single-file contract for small outputs.
+    *
+    * The files are the ones `write.csv` writes, byte for byte, written
+    * by [[DirectCsvFormat]]: Spark's commit protocol and layout, with a
+    * per-task encoder that writes string and double cells straight from
+    * the row and hands any row that needs quoting to Spark's own CSV
+    * generator. */
   def writeCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
     val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").options(csvOptions).csv(path)
+    out.write.format(classOf[DirectCsvFormat].getName).mode("overwrite").options(csvOptions).save(path)
   }
 
   /** [[writeCsv]]'s single-file output for printed ResumoMetas rows,
@@ -238,16 +248,31 @@ object MetasJob {
     LocalCsv.write(spark, printedSchema.fieldNames.toSeq, printed, path, csvOptions)
 
   /** PNG bar-chart sink for meta1 (S7; Versao_Np.py:83-98) — pure JDK 2D,
-    * driver-side over the tiny per-court summary. */
-  def writeChartPng(chartData: Array[(String, Double)], path: String): Unit = {
-    import java.awt.{Color, Font}
-    import java.awt.image.BufferedImage
-    import javax.imageio.ImageIO
-    if (chartData.isEmpty) return
+    * driver-side over the tiny per-court summary. The chart draws in
+    * three colours only, so it is drawn into a 2-bit indexed image whose
+    * palette holds exactly those: the same pixels as an RGB rendering in
+    * a PNG several times smaller and faster to encode. */
+  def writeChartPng(chartData: Array[(String, Double)], path: String): Unit =
+    if (chartData.nonEmpty) {
+      val palette = Array(Color.WHITE, skyblue, Color.BLACK)
+      val colors = new IndexColorModel(2, palette.length, palette.map(_.getRed.toByte),
+        palette.map(_.getGreen.toByte), palette.map(_.getBlue.toByte))
+      ImageIO.write(drawChart(chartData, new BufferedImage(_, _, BufferedImage.TYPE_BYTE_BINARY, colors)),
+        "png", new java.io.File(path))
+    }
+
+  /** skyblue, like the reference */
+  private val skyblue = new Color(135, 206, 235)
+
+  /** The meta1 bar chart of non-empty `chartData`, drawn in white,
+    * [[skyblue]] and black into the image `canvas` makes for a width
+    * and a height. */
+  private[cnj] def drawChart(chartData: Array[(String, Double)],
+      canvas: (Int, Int) => BufferedImage): BufferedImage = {
     val barW = 24
     val w = math.max(1600, chartData.length * (barW + 8) + 100)
     val h = 1000
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val img = canvas(w, h)
     val g = img.createGraphics()
     g.setColor(Color.WHITE); g.fillRect(0, 0, w, h)
     val maxV = chartData.map(_._2).max.max(1e-9)
@@ -256,7 +281,7 @@ object MetasJob {
     chartData.zipWithIndex.foreach { case ((sigla, v), i) =>
       val x = 60 + i * (barW + 8)
       val bh = math.max(1, (v / maxV * plotH).toInt)
-      g.setColor(new Color(135, 206, 235)) // skyblue, like the reference
+      g.setColor(skyblue)
       g.fillRect(x, 60 + (plotH - bh), barW, bh)
       g.setColor(Color.BLACK)
       val old = g.getTransform
@@ -268,17 +293,20 @@ object MetasJob {
     g.setFont(new Font(Font.SANS_SERIF, Font.BOLD, 16))
     g.drawString("Comparação da META1 entre os Tribunais (Spark)", 60, 30)
     g.dispose()
-    ImageIO.write(img, "png", new java.io.File(path))
+    img
   }
 
   /** Full run: ResumoMetas.csv + Consolidado.csv + grafico_meta1.png.
     *
     * The corpus is read exactly once, by the Consolidado write, which
     * observes the per-court sums on its way ([[observeCourtSums]]). That
-    * write is the run's only Spark job. The rest is plain Scala on the
-    * driver over those few dozen rows ([[observedResumo]]): the kernel,
-    * the rendering, the sorts, the ResumoMetas file ([[writeResumo]]),
-    * the fallback warning and the chart. The raw corpus is NOT cached:
+    * write is the run's only Spark job, and it goes from bytes to bytes:
+    * the parse reads each line's UTF-8 bytes ([[CnjParseLine]]) and the
+    * sink writes each row's cells straight into the part file
+    * ([[writeCsv]]). The rest is plain Scala on the driver over those
+    * few dozen rows ([[observedResumo]]): the kernel, the rendering, the
+    * sorts, the ResumoMetas file ([[writeResumo]]), the fallback warning
+    * and the chart. The raw corpus is NOT cached:
     * building the InMemoryRelation for ~1 GB of expanded rows costs ~10x
     * the one CSV scan it would share (measured at the 930 MB corpus).
     *

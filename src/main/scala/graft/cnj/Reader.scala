@@ -28,12 +28,14 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * children mean 90 analyzed relations and codegen units, costing ~18 s
   * of core-count-invariant driver/compile time PER ACTION at the 90-file
   * corpus, and the uniVocity full-width parse itself ran at ~1 MB/s/core
-  * (22.8 s for 0.93 GB even as a single multi-file scan). The manual
-  * split parse below does the same scan+parse+aggregate in ~4 s on 32
-  * cores. `mapPartitions` is the documented last resort — this is the
-  * measured case for it: the work is genuinely per-row imperative
-  * (per-file column permutation), and the plan collapses to scan →
-  * parse → downstream, one codegen unit, one relation, at any file count.
+  * (22.8 s for 0.93 GB even as a single multi-file scan). The parse is
+  * one Catalyst expression ([[CnjParseLine]]) inside a Generate, so the
+  * plan collapses to scan → parse → downstream, one codegen unit, one
+  * relation, at any file count. It works on the line's UTF-8 bytes:
+  * separators, the header echo and simple decimals are read by byte,
+  * key cells are copied as byte slices, and only lines holding a quote
+  * or a malformed key are decoded to a String and split by
+  * [[splitCsv]].
   *
   * The listing: the driver lists the directory ONCE with the
   * Hadoop `FileSystem` and reads each `.csv` file's header; Spark then
@@ -106,10 +108,10 @@ object Reader {
       src.getLines().nextOption().getOrElse("")
     }
 
-  /** Split one CSV line. Fast path: no quote character — plain
-    * single-char split (the CNJ corpus is unquoted throughout). Rows
-    * containing '"' take a minimal RFC-4180 state machine so quoted
-    * separators/quotes survive; the branch is cold by construction.
+  /** Split one CSV line with a minimal RFC-4180 state machine, so quoted
+    * separators and doubled quotes survive. This is the String path of
+    * [[CnjParseLine]]: it sees only lines that hold a '"' or a key cell
+    * that is not well-formed UTF-8; every other line is split by byte.
     *
     * LIMITATION: the scan is line-based, so a quoted field containing an
     * embedded NEWLINE arrives as two wrong-width lines and both are
@@ -117,37 +119,41 @@ object Reader {
     * Acceptable for the CNJ corpus, which is newline-free inside fields
     * by construction; a corpus that quotes newlines needs a multiline
     * CSV reader (spark.read.option("multiLine", true)), not this one. */
-  private[cnj] def splitCsv(line: String): Array[String] =
-    if (line.indexOf('"') < 0) line.split(",", -1)
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val sb = new java.lang.StringBuilder
-      var i = 0
-      var inQ = false
-      while (i < line.length) {
-        val c = line.charAt(i)
-        if (inQ) {
-          if (c == '"') {
-            if (i + 1 < line.length && line.charAt(i + 1) == '"') { sb.append('"'); i += 1 }
-            else inQ = false
-          } else sb.append(c)
-        } else c match {
-          case '"' => inQ = true
-          case ',' => out += sb.toString; sb.setLength(0)
-          case _ => sb.append(c)
-        }
-        i += 1
+  private[cnj] def splitCsv(line: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    var inQ = false
+    while (i < line.length) {
+      val c = line.charAt(i)
+      if (inQ) {
+        if (c == '"') {
+          if (i + 1 < line.length && line.charAt(i + 1) == '"') { sb.append('"'); i += 1 }
+          else inQ = false
+        } else sb.append(c)
+      } else c match {
+        case '"' => inQ = true
+        case ',' => out += sb.toString; sb.setLength(0)
+        case _ => sb.append(c)
       }
-      out += sb.toString
-      out.toArray
+      i += 1
     }
+    out += sb.toString
+    out.toArray
+  }
 
   /** Per-file parse spec: the exact header line (dropped when seen as a
     * row), the expected token count (rows with any other count are
     * malformed and skipped — pandas on_bad_lines='skip'), and for each
     * canonical output column the source token index, -1 if the file
-    * lacks it. */
-  private[cnj] final case class FileSpec(headerLine: String, width: Int, positions: Array[Int])
+    * lacks it. The byte path compares lines with the header's UTF-8
+    * bytes; a header that decoded with a replacement character could
+    * equal a line whose bytes differ, so its file takes the String path
+    * throughout. */
+  private[cnj] final case class FileSpec(headerLine: String, width: Int, positions: Array[Int]) {
+    private[cnj] val headerBytes: Array[Byte] = headerLine.getBytes(StandardCharsets.UTF_8)
+    private[cnj] val bytePath: Boolean = headerLine.indexOf('\uFFFD') < 0
+  }
 
   private[cnj] def fileSpec(path: String): Option[FileSpec] = {
     val first = rawFirstLine(path)
@@ -205,12 +211,9 @@ object Reader {
     * resolves per row in both cases. */
   private def parsedFrom(spark: SparkSession, text: DataFrame, specs: Map[String, FileSpec]): DataFrame = {
     // the parse as a native EXPRESSION inside a Generate (see
-    // [[CnjParseLine]]): same splitCsv/parseDouble semantics, but no
-    // Serialize/DeserializeToObject fence and no per-row external Row —
-    // the scan → parse → downstream chain stays one codegen unit
-    // (measured: the parse stage alone ~11 s → ~4 s on the 0.93 GB
-    // corpus, paid twice per pipeline run). Empty key / null handling is
-    // byte-identical: the expression REUSES the two parse helpers.
+    // [[CnjParseLine]]): no Serialize/DeserializeToObject fence and no
+    // per-row external Row — the scan → parse → downstream chain stays
+    // one codegen unit
     import org.apache.spark.sql.graft.ColumnBridge
     val arr = ColumnBridge.column(CnjParseLine(
       ColumnBridge.expression(input_file_name()),

@@ -94,6 +94,19 @@ class CnjMetasSpec extends SparkTestBase {
     assert(!chart.map(_.getString(0)).contains("TJBB"))
   }
 
+  test("the chart PNG decodes to the pixels of an RGB rendering of the same bars") {
+    import java.awt.image.BufferedImage
+    val bars = Array("TJSP" -> 98.5, "São Paulo" -> 120.25, "TRT3" -> 0.5, "X" -> 60.0)
+    val png = java.io.File.createTempFile("graft-cnj-chart", ".png")
+    MetasJob.writeChartPng(bars, png.getPath)
+    val got = javax.imageio.ImageIO.read(png)
+    val want = MetasJob.drawChart(bars, new BufferedImage(_, _, BufferedImage.TYPE_INT_RGB))
+    assert((got.getWidth, got.getHeight) == (want.getWidth, want.getHeight))
+    val (w, h) = (want.getWidth, want.getHeight)
+    assert(got.getRGB(0, 0, w, h, null, 0, w).sameElements(want.getRGB(0, 0, w, h, null, 0, w)))
+    assert(want.getRGB(0, 0, w, h, null, 0, w).distinct.length == 3)
+  }
+
   private def freshOut(tag: String): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-cnj-runall-$tag"
     val p = new org.apache.hadoop.fs.Path(out)

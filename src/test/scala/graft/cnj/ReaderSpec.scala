@@ -3,26 +3,51 @@ package graft.cnj
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.SparkTestBase
 
-/** Unit coverage for the single-scan CSV parser (Reader): the fast/slow
-  * split paths, the pandas-compatible coercions, malformed-row skipping,
-  * header-line dropping, and \r\n tolerance. These pin the hand-rolled
-  * parse against the semantics the per-file uniVocity path used to
-  * provide (pd.read_csv on_bad_lines='skip' + to_numeric(errors=
-  * 'coerce'); Versao_Np.py:143,155-161).
+/** Unit coverage for the single-scan CSV parser (Reader, CnjParseLine):
+  * unquoted and quoted lines, the pandas-compatible coercions,
+  * malformed-row skipping, header-line dropping, and \r\n tolerance.
+  * These pin the hand-rolled parse against the semantics the per-file
+  * uniVocity path used to provide (pd.read_csv on_bad_lines='skip' +
+  * to_numeric(errors='coerce'); Versao_Np.py:143,155-161).
   */
 class ReaderSpec extends SparkTestBase {
 
-  test("splitCsv: unquoted fast path keeps empty fields") {
-    assert(Reader.splitCsv("a,b,,d").toSeq == Seq("a", "b", "", "d"))
-    assert(Reader.splitCsv(",").toSeq == Seq("", ""))
+  /** The cells [[CnjParseLine.parse]] makes of one line of a file with
+    * `header`, keys as strings and numbers as doubles; None = skipped. */
+  private def parseLine(header: String, line: String): Option[Seq[Any]] = {
+    val cols = header.split(",", -1).toSeq
+    val canonical = CnjSchema.keyCols ++ CnjSchema.numericCols
+    val spec = Reader.FileSpec(header, cols.length, canonical.map(cols.indexOf).toArray)
+    val parse = CnjParseLine(Literal(null, StringType), Literal(null, StringType), Map("/f.csv" -> spec))
+    val got = parse.parse(UTF8String.fromString("file:/f.csv"), UTF8String.fromString(line))
+    if (got.numElements == 0) None
+    else {
+      val row = got.getStruct(0, canonical.length)
+      Some(cols.map(canonical.indexOf).map(i =>
+        if (i < 0 || row.isNullAt(i)) null
+        else if (i < CnjSchema.keyCols.length) row.getUTF8String(i).toString
+        else row.getDouble(i)))
+    }
   }
 
-  test("splitCsv: RFC-4180 quoted path handles separators and escaped quotes") {
-    assert(Reader.splitCsv("\"a,b\",c").toSeq == Seq("a,b", "c"))
-    assert(Reader.splitCsv("\"say \"\"hi\"\"\",2").toSeq == Seq("say \"hi\"", "2"))
-    assert(Reader.splitCsv("x,\"\",y").toSeq == Seq("x", "", "y"))
+  test("parse: an unquoted line keeps its empty fields") {
+    val header = "sigla_tribunal,ramo_justica,julgados_2025,casos_novos_2025"
+    assert(parseLine(header, "a,b,,4") == Some(Seq("a", "b", null, 4.0)))
+    assert(parseLine(header, ",,,") == Some(Seq(null, null, null, null)))
+    assert(parseLine(header, "a,b,,4,") == None)
+  }
+
+  test("parse: a quoted line keeps separators and escaped quotes") {
+    val header = "sigla_tribunal,ramo_justica,julgados_2025"
+    assert(parseLine(header, "\"a,b\",c,1") == Some(Seq("a,b", "c", 1.0)))
+    assert(parseLine(header, "\"say \"\"hi\"\"\",2,\"3.5\"") == Some(Seq("say \"hi\"", "2", 3.5)))
+    assert(parseLine(header, "x,\"\",y") == Some(Seq("x", null, null)))
   }
 
   test("parseDouble's junk shortcut answers as Double.parseDouble's try/catch does") {
