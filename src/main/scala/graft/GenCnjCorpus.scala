@@ -1,13 +1,16 @@
 package graft
 
-import java.io.{BufferedWriter, File, FileWriter}
+import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.cnj.{CnjSchema, Factors}
 
 /** Dev utility: deterministic CNJ-shaped CSV corpus generator, sized to
   * mirror the reference's fixture corpus (~90 per-court files, ~0.93 GB
   * total — BASELINE.md) so the full pipeline can be timed
-  * apples-to-apples against the published numbers.
+  * apples-to-apples against the published numbers. Files are UTF-8
+  * whatever the JVM's default charset, and their sizes count UTF-8
+  * bytes.
   *
   * Usage: runMain graft.GenCnjCorpus <outDir> [totalMB]
   */
@@ -30,7 +33,7 @@ object GenCnjCorpus {
       val cols = CnjSchema.keyCols ++
         CnjSchema.numericCols.filter(_ => rnd.nextDouble() < 0.7)
       val f = new File(outDir, s"teste_$sigla.csv")
-      val w = new BufferedWriter(new FileWriter(f), 1 << 20)
+      val w = new BufferedWriter(new OutputStreamWriter(new FileOutputStream(f), UTF_8), 1 << 20)
       w.write(cols.mkString(","))
       w.newLine()
       var bytes = 0L
@@ -46,7 +49,7 @@ object GenCnjCorpus {
         }.mkString(",")
         w.write(row)
         w.newLine()
-        bytes += row.length + 1
+        bytes += row.getBytes(UTF_8).length + 1
       }
       w.close()
       written += bytes

@@ -1,106 +1,77 @@
 package graft.cnj
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, UnsafeRowWriter}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.graft.Utf8
-import org.apache.spark.sql.types.{ArrayType, DataType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The CNJ tolerant-CSV parse as a CATALYST EXPRESSION: one line + its
-  * file name → a 0-or-1-element array of the canonical struct, exploded
-  * by the caller. As an expression inside a Generate, the parse runs
-  * where it reads, UTF8String in and an UnsafeRow out, and the
-  * surrounding scan → parse → sink stage stays one codegen unit: no
-  * Serialize/DeserializeToObject fence and no external Row per line
-  * (the `mapPartitions` closure it replaced cost ~11 s against ~4 s for
-  * the parse stage at the 0.93 GB corpus).
+/** The CNJ tolerant-CSV parse of ONE court file: each line's UTF-8 bytes
+  * in, one `UnsafeRow` of the columns the scan asks for out, or null for
+  * a line to skip. The file's reader
+  * ([[org.apache.spark.sql.graft.CnjCsvFormat]]) builds one parser per
+  * file split from that file's own first line, so the header is known
+  * before the first data line and nothing is looked up per line. The
+  * parser owns the row writer: every call reuses the row the previous
+  * call returned.
   *
-  * Code generation is a true [[doGenCode]]: the children evaluate
-  * inside the fused stage's own generated code and the parse is ONE
-  * virtual call on a referenced object. The parse body itself stays a
-  * JVM method (a tolerant CSV splitter is control flow, not an
-  * expression tree; there is nothing for Janino to fuse inside it).
+  * The parse reads the line's bytes where the reader left them: a
+  * trailing `\r`, the header echo and the separators are found by byte, a
+  * key cell is copied into the output row as its byte slice, and a
+  * number cell of the shape `[+-]?digits[.digits]` with at most 15
+  * significant digits and at most 22 fraction digits is the quotient
+  * `m / 10^k` of two exactly representable doubles, which IEEE division
+  * rounds correctly (Clinger's fast path), so it equals
+  * `Double.parseDouble`'s answer. Every other number cell (blanks,
+  * exponents, `NaN`, `Infinity`, long mantissas, junk) goes to
+  * [[Reader.parseDouble]] on its decoded text. A line holding a `"` or a
+  * requested key cell that is not well-formed UTF-8, and every line of a
+  * file whose header decoded with a replacement character, takes the
+  * String path ([[CnjFileParser.parseString]]): decode the line, then
+  * split it with [[Reader.splitCsv]]. The byte path gives what the String
+  * path gives on every line; `CnjParsePropertySpec` checks it cell for
+  * cell.
   *
-  * The parse reads the line's UTF-8 bytes where they lie: a trailing
-  * `\r`, the header echo and the separators are found by byte, a key
-  * cell is copied into the output row as its byte slice, and a number
-  * cell of the shape `[+-]?digits[.digits]` with at most 15 significant
-  * digits and at most 22 fraction digits is the quotient `m / 10^k` of
-  * two exactly representable doubles, which IEEE division rounds
-  * correctly (Clinger's fast path), so it equals `Double.parseDouble`'s
-  * answer. Every other number cell (blanks, exponents, `NaN`,
-  * `Infinity`, long mantissas, junk) goes to [[Reader.parseDouble]] on
-  * its decoded text. A line holding a `"` or a key cell that is not
-  * well-formed UTF-8, and every line of a file whose header decoded
-  * with a replacement character, takes the String path
-  * ([[CnjParseLine.parseString]]): decode the line, then split it with
-  * [[Reader.splitCsv]]. The byte path gives what the String path gives
-  * on every line; `CnjParsePropertySpec` checks it cell for cell.
+  * Skip semantics: header echo → skip, wrong token count → skip (pandas
+  * on_bad_lines='skip'); empty key cell → null; empty, malformed or NaN
+  * number cell → null. A column the scan does not ask for is not parsed.
   *
-  * Skip semantics: unknown file → skip (a stream may list files that
-  * arrived after the spec snapshot), header echo → skip, wrong token
-  * count → skip (pandas on_bad_lines='skip'); empty key cell → null;
-  * empty, malformed or NaN number cell → null.
-  *
-  * The per-file spec is resolved through a per-THREAD cursor (partitions
-  * are file splits, so consecutive rows share a file; expression
-  * instances are shared across a stage's tasks, hence ThreadLocal, and
-  * the file key is cloned — the scan reuses its UTF8String buffer). The
-  * cursor also holds the thread's row writer and separator offsets. */
-private[cnj] final case class CnjParseLine(file: Expression, line: Expression,
-    specs: Map[String, Reader.FileSpec])
-    extends Expression {
-  import CnjParseLine._
+  * @param canonical for each output column, its index in
+  *   [[CnjSchema.allCols]]
+  */
+final class CnjFileParser private[cnj] (spec: Reader.FileSpec, canonical: Array[Int]) {
+  import CnjFileParser._
 
-  override def children: Seq[Expression] = Seq(file, line)
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    ArrayType(Reader.canonicalSchema, containsNull = false)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(file = newChildren(0), line = newChildren(1))
+  private val out = new UnsafeRowWriter(canonical.length)
+  /** For each output column, the token it comes from, -1 if the file lacks it. */
+  private val pos = canonical.map(spec.positions)
+  /** starts(j) is where cell j begins; cell j ends one byte before starts(j + 1). */
+  private val starts = new Array[Int](spec.width + 1)
 
-  @transient private lazy val cursors = new ThreadLocal[Cursor]
-  @transient private lazy val empty = new GenericArrayData(Array.empty[Any])
-
-  override def eval(input: InternalRow): Any =
-    parse(file.eval(input).asInstanceOf[UTF8String],
-      line.eval(input).asInstanceOf[UTF8String])
-
-  /** The whole parse, nulls in = skip out — public so the generated code
-    * can call it directly. */
-  def parse(f: UTF8String, l: UTF8String): ArrayData = {
-    if (f == null) return empty
-    var c = cursors.get()
-    if (c == null) { c = new Cursor; cursors.set(c) }
-    if (c.file == null || !c.file.equals(f)) {
-      c.file = f.clone()
-      c.spec = specs.getOrElse(Reader.decodeFileUri(f.toString), null)
-    }
-    val spec = c.spec
-    if (spec == null || l == null) return empty
-    val ok = if (spec.bytePath) parseBytes(spec, l, c) else c.put(parseString(spec, l.toString))
-    if (ok) new GenericArrayData(Array[Any](c.out.getRow.copy())) else empty
+  /** The row of the line held in `length` bytes of `bytes` from `offset`;
+    * null = skip. */
+  def parse(bytes: Array[Byte], offset: Int, length: Int): InternalRow = {
+    val ok = if (spec.bytePath) parseBytes(bytes, offset, length) else viaString(bytes, offset, length)
+    if (ok) out.getRow else null
   }
 
-  /** The byte path; false = skip. Writes the row into `c.out`. */
-  private def parseBytes(spec: Reader.FileSpec, l: UTF8String, c: Cursor): Boolean = {
-    val base = l.getBaseObject
-    val off = l.getBaseOffset
-    var n = l.numBytes
+  /** The String path; false = skip. Writes the row into `out`. */
+  private def viaString(bytes: Array[Byte], offset: Int, length: Int): Boolean =
+    put(parseString(spec, new String(bytes, offset, length, StandardCharsets.UTF_8)))
+
+  /** The byte path; false = skip. Writes the row into `out`. */
+  private def parseBytes(base: Array[Byte], offset: Int, length: Int): Boolean = {
+    val off = Platform.BYTE_ARRAY_OFFSET + offset
+    var n = length
     if (n > 0 && Platform.getByte(base, off + n - 1) == '\r') n -= 1
     val header = spec.headerBytes
     if (n == header.length &&
         ByteArrayMethods.arrayEquals(base, off, header, Platform.BYTE_ARRAY_OFFSET, n)) return false
-    // starts(j) is where cell j begins; cell j ends one byte before starts(j + 1)
     val width = spec.width
-    if (c.starts.length <= width) c.starts = new Array[Int](width + 1)
-    val starts = c.starts
     var cells = 1
     var i = 0
     while (i < n) {
@@ -108,83 +79,65 @@ private[cnj] final case class CnjParseLine(file: Expression, line: Expression,
       if (b == ',') {
         if (cells < width) starts(cells) = i + 1
         cells += 1
-      } else if (b == '"') return c.put(parseString(spec, l.toString))
+      } else if (b == '"') return viaString(base, offset, length)
       i += 1
     }
     if (cells != width) return false
     starts(0) = 0
     starts(width) = n + 1
-    val out = c.out
     out.reset()
     out.zeroOutNullBytes()
-    val pos = spec.positions
     var j = 0
-    while (j < nKeys) {
+    while (j < pos.length) {
       val p = pos(j)
-      val s = if (p < 0) 0 else starts(p)
-      val len = if (p < 0) 0 else starts(p + 1) - 1 - s
-      if (len == 0) out.setNullAt(j)
-      else if (Utf8.wellFormed(base, off + s, len)) out.write(j, UTF8String.fromAddress(base, off + s, len))
-      else return c.put(parseString(spec, l.toString))
-      j += 1
-    }
-    while (j < nOut) {
-      val p = pos(j)
-      val v = if (p < 0) Double.NaN else {
-        val s = starts(p)
-        number(base, off + s, starts(p + 1) - 1 - s)
+      if (canonical(j) < nKeys) {
+        val s = if (p < 0) 0 else starts(p)
+        val len = if (p < 0) 0 else starts(p + 1) - 1 - s
+        if (len == 0) out.setNullAt(j)
+        else if (Utf8.wellFormed(base, off + s, len)) out.write(j, UTF8String.fromAddress(base, off + s, len))
+        else return viaString(base, offset, length)
+      } else {
+        val v = if (p < 0) Double.NaN else {
+          val s = starts(p)
+          number(base, off + s, starts(p + 1) - 1 - s)
+        }
+        if (v.isNaN) out.setNullAt(j) else out.write(j, v)
       }
-      if (v.isNaN) out.setNullAt(j) else out.write(j, v)
       j += 1
     }
     true
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cnjParse", this, classOf[CnjParseLine].getName)
-    val fEv = file.genCode(ctx)
-    val lEv = line.genCode(ctx)
-    val arrCls = classOf[ArrayData].getName
-    ev.copy(
-      code = code"""
-        ${fEv.code}
-        ${lEv.code}
-        final $arrCls ${ev.value} = $ref.parse(
-          ${fEv.isNull} ? null : ${fEv.value},
-          ${lEv.isNull} ? null : ${lEv.value});
-      """,
-      isNull = FalseLiteral)
+  /** Writes the String path's cells into `out`; false = skip. */
+  private def put(cells: Array[Any]): Boolean = cells != null && {
+    out.reset()
+    out.zeroOutNullBytes()
+    var j = 0
+    while (j < canonical.length) {
+      cells(canonical(j)) match {
+        case null => out.setNullAt(j)
+        case s: UTF8String => out.write(j, s)
+        case d: java.lang.Double => out.write(j, d.doubleValue)
+      }
+      j += 1
+    }
+    true
   }
 }
 
-private[cnj] object CnjParseLine {
+object CnjFileParser {
 
   private val nKeys = CnjSchema.keyCols.length
-  private val nOut = nKeys + CnjSchema.numericCols.length
+  private val nOut = CnjSchema.allCols.length
 
-  /** One thread's parse state: the file it is in and that file's spec,
-    * its row writer, and the separator offsets of the current line. */
-  private final class Cursor {
-    var file: UTF8String = _
-    var spec: Reader.FileSpec = _
-    val out = new UnsafeRowWriter(nOut)
-    var starts = new Array[Int](64)
-
-    /** Writes the String path's cells into `out`; false = skip. */
-    def put(cells: Array[Any]): Boolean = cells != null && {
-      out.reset()
-      out.zeroOutNullBytes()
-      var j = 0
-      while (j < nOut) {
-        cells(j) match {
-          case null => out.setNullAt(j)
-          case s: UTF8String => out.write(j, s)
-          case d: java.lang.Double => out.write(j, d.doubleValue)
-        }
-        j += 1
-      }
-      true
-    }
+  /** The parser of a court file whose first line is `header`, writing
+    * the canonical columns `required` names, in its order; None for a
+    * file the reference skips ([[Reader.fileSpec]]). */
+  def apply(header: String, required: StructType): Option[CnjFileParser] = {
+    val canonical = required.fieldNames.map(CnjSchema.allCols.indexOf)
+    require(canonical.forall(_ >= 0),
+      s"not a CNJ column: ${required.fieldNames.filterNot(CnjSchema.allCols.contains).mkString(", ")}")
+    Reader.fileSpec(header).map(new CnjFileParser(_, canonical))
   }
 
   /** The String path, and the oracle the byte path is held to: the line

@@ -130,11 +130,6 @@ object MetasJob {
     principal ++ metas ++ stjs ++ rest
   }
 
-  /** Consolidado — union-all of every input with NP outer schema
-    * alignment (U1; Versao_Np.py:224-227). */
-  def consolidado(spark: SparkSession, inDir: String): DataFrame =
-    Reader.readDir(spark, inDir)
-
   /** A court whose remapped branch has no factors: it takes the Justiça
     * Estadual ones, and the reference warns. */
   private def unmapped(ramo: String, sigla: String): Boolean =
@@ -301,12 +296,15 @@ object MetasJob {
     * The corpus is read exactly once, by the Consolidado write, which
     * observes the per-court sums on its way ([[observeCourtSums]]). That
     * write is the run's only Spark job, and it goes from bytes to bytes:
-    * the parse reads each line's UTF-8 bytes ([[CnjParseLine]]) and the
-    * sink writes each row's cells straight into the part file
-    * ([[writeCsv]]). The rest is plain Scala on the driver over those
-    * few dozen rows ([[observedResumo]]): the kernel, the rendering, the
-    * sorts, the ResumoMetas file ([[writeResumo]]), the fallback warning
-    * and the chart. The raw corpus is NOT cached:
+    * the scan's reader parses each line's UTF-8 bytes straight into the
+    * canonical row ([[CnjFileParser]]; Consolidado is the canonical
+    * frame, the union-all of every court file with the NP outer schema
+    * alignment, U1; Versao_Np.py:224-227) and the sink writes each row's
+    * cells straight into the part file ([[writeCsv]]). The rest is plain
+    * Scala on the driver over those few dozen rows ([[observedResumo]]):
+    * the kernel, the rendering, the sorts, the ResumoMetas file
+    * ([[writeResumo]]), the fallback warning and the chart. The raw
+    * corpus is NOT cached:
     * building the InMemoryRelation for ~1 GB of expanded rows costs ~10x
     * the one CSV scan it would share (measured at the 930 MB corpus).
     *

@@ -161,11 +161,23 @@ object ScanPruning {
 
   /** Decode a manifest `file` entry to a plain filesystem path. Only
     * URI-shaped strings (a scheme prefix) are decoded — an
-    * already-plain path containing a literal '%' must not be mangled. */
-  private def decodePath(f: String): String =
-    if (f.startsWith("file:") || f.contains("://"))
-      graft.cnj.Reader.decodeFileUri(f)
-    else f
+    * already-plain path containing a literal '%' must not be mangled.
+    * `input_file_name()` yields a URL-ENCODED URI ("file:/a/b%20c.csv" —
+    * Spark's FileScanRDD publishes `PartitionedFile.urlEncodedPath`); a
+    * bare scheme-strip would keep "%20" and every escaped non-ASCII
+    * byte, so the entry would name no file on disk. */
+  private[sources] def decodeFileUri(f: String): String =
+    if (!f.startsWith("file:") && !f.contains("://")) f
+    else
+      try new java.net.URI(f).getPath
+      catch {
+        case _: java.net.URISyntaxException =>
+          // not URI-parseable (unencoded specials): best-effort scheme strip
+          val noScheme = if (f.startsWith("file:")) f.substring(5) else f
+          var i = 0
+          while (i + 1 < noScheme.length && noScheme.charAt(i) == '/' && noScheme.charAt(i + 1) == '/') i += 1
+          noScheme.substring(i)
+      }
 
   /** [[buildManifest]] with decoded driver-side rows — the persisted
     * form. O(files of dataDir) rows pass the driver, nothing else.
@@ -191,7 +203,7 @@ object ScanPruning {
     }
     val m = buildManifest(spark, dataDir, cols, bloomCols, bloomBits, bloomHashes)
     val rows = m.collect().toIndexedSeq
-      .map(r => Row.fromSeq(decodePath(r.getString(0)) +: r.toSeq.tail))
+      .map(r => Row.fromSeq(decodeFileUri(r.getString(0)) +: r.toSeq.tail))
     (rows, m.schema)
   }
 
@@ -525,7 +537,7 @@ object ScanPruning {
   def prunedScan(spark: SparkSession, dataDir: String,
       manifest: DataFrame, keep: Column): DataFrame = {
     val files = manifest.filter(keep)
-      .select(col("file")).collect().map(r => decodePath(r.getString(0)))
+      .select(col("file")).collect().map(r => decodeFileUri(r.getString(0)))
     if (files.isEmpty) ParquetMeta.read(spark, Seq(dataDir)).filter(lit(false))
     else ParquetMeta.firstFileSparkSchema(spark, Seq(dataDir)) match {
       // schema from ONE footer of the dir (all files share one write's

@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * for an empty input). Spark's own CSV format prepares the write
   * (schema check, compression codec, file extension); only the
   * per-task [[DirectCsvWriter]] differs. Lives under org.apache.spark.sql
-  * for the same reason as [[ListedTextScan]]: the file-format and
+  * for the same reason as [[ListedFileScan]]: the file-format and
   * writer interfaces are private[sql].
   */
 class DirectCsvFormat extends FileFormat {

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `part-00000-<uuid>-c000.csv`, an empty `_SUCCESS`, and the checksum
   * siblings the file system adds. The part file holds the header alone
   * when there are no rows, as Spark's does. Lives under
-  * org.apache.spark.sql for the same reason as [[ListedTextScan]].
+  * org.apache.spark.sql for the same reason as [[ListedFileScan]].
   */
 object LocalCsv {
 

@@ -39,7 +39,7 @@ class CnjMetasSpec extends SparkTestBase {
   }
 
   test("consolidado aligns drifting schemas with nulls") {
-    val data = MetasJob.consolidado(spark, resourcePath("cnj/dados"))
+    val data = Reader.readDir(spark, resourcePath("cnj/dados"))
     assert(data.columns.toSeq == CnjSchema.allCols)
     // TRT3 never had meta6 columns -> all null for that court
     val trt = data.filter(data("sigla_tribunal") === "TRT3")

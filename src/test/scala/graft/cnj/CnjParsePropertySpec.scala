@@ -2,15 +2,14 @@ package graft.cnj
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.graft.CnjCsvFormat
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The byte path of [[CnjParseLine.parse]] against the String path
-  * ([[CnjParseLine.parseString]] on the decoded line), cell for cell,
+/** The byte path of [[CnjFileParser.parse]] against the String path
+  * ([[CnjFileParser.parseString]] on the decoded line), cell for cell,
   * over generated lines: quoted cells, CRLF, a BOM, ragged and
   * over-long lines, non-ASCII and invalid UTF-8 bytes, blank-padded,
   * signed, exponent, special and junk numbers, long mantissas and
@@ -22,13 +21,8 @@ class CnjParsePropertySpec extends AnyFunSuite {
   private def bytes(s: String): Array[Byte] = s.getBytes(UTF_8)
   private def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
 
-  /** A file spec as [[Reader.fileSpec]] builds it from a header line. */
-  private def spec(header: String): Reader.FileSpec = {
-    val cols = header.split(",", -1).map(_.trim).toSeq
-    val idx = cols.zipWithIndex.reverse.toMap
-    Reader.FileSpec(header, cols.length,
-      (CnjSchema.keyCols ++ CnjSchema.numericCols).map(c => idx.getOrElse(c, -1)).toArray)
-  }
+  /** The parser of a file with `header`, for every canonical column. */
+  private def parser(header: String): CnjFileParser = CnjFileParser(header, CnjCsvFormat.schema).get
 
   private val headers = Seq(
     "sigla_tribunal,ramo_justica,julgados_2025,casos_novos_2025,suspensos_2025,dessobrestados_2025",
@@ -83,33 +77,29 @@ class CnjParsePropertySpec extends AnyFunSuite {
   }
 
   test("the byte path parses every generated line as the String path does") {
-    val path = "/courts/teste_X.csv"
     val params = Gen.Parameters.default
     var lines, kept, viaBytes = 0
     headers.zipWithIndex.foreach { case (header, h) =>
-      val s = spec(header)
-      val expr = CnjParseLine(Literal(null, StringType), Literal(null, StringType), Map(path -> s))
-      val file = UTF8String.fromString("file:" + path)
+      val s = Reader.fileSpec(header).get
+      val p = parser(header)
       val gen = lineGen(header, s.width)
       (0 until 6000).foreach { i =>
         val line = gen(params, Seed(h * 100000L + i)).get
         // the line inside a larger buffer, so offsets other than 0 are read
         val padded = b('x', ',') ++ line ++ b('\r', '9')
-        val l = UTF8String.fromBytes(padded, 2, line.length)
-        val want = CnjParseLine.parseString(s, l.toString)
-        val got = expr.parse(file, l)
+        val want = CnjFileParser.parseString(s, UTF8String.fromBytes(line).toString)
+        val got = p.parse(padded, 2, line.length)
         val shown = s"header $h line ${new String(line, UTF_8)} (${line.map(x => f"$x%02x").mkString(" ")})"
         lines += 1
-        if (want == null) assert(got.numElements == 0, shown)
+        if (want == null) assert(got == null, shown)
         else {
           kept += 1
           if (s.bytePath && !line.contains('"'.toByte)) viaBytes += 1
-          assert(got.numElements == 1, shown)
-          val row = got.getStruct(0, want.length)
+          assert(got != null, shown)
           want.indices.foreach { j =>
-            if (want(j) == null) assert(row.isNullAt(j), s"$shown cell $j")
-            else if (j < nKeys) assert(row.getUTF8String(j) == want(j), s"$shown cell $j")
-            else assert(java.lang.Double.doubleToRawLongBits(row.getDouble(j)) ==
+            if (want(j) == null) assert(got.isNullAt(j), s"$shown cell $j")
+            else if (j < nKeys) assert(got.getUTF8String(j) == want(j), s"$shown cell $j")
+            else assert(java.lang.Double.doubleToRawLongBits(got.getDouble(j)) ==
               java.lang.Double.doubleToRawLongBits(want(j).asInstanceOf[java.lang.Double]), s"$shown cell $j")
           }
         }
@@ -120,9 +110,7 @@ class CnjParsePropertySpec extends AnyFunSuite {
   }
 
   test("a simple decimal of up to 15 significant digits parses to Double.parseDouble's bits") {
-    val s = spec("sigla_tribunal,ramo_justica,julgados_2025")
-    val expr = CnjParseLine(Literal(null, StringType), Literal(null, StringType), Map("/a.csv" -> s))
-    val file = UTF8String.fromString("file:/a.csv")
+    val p = parser("sigla_tribunal,ramo_justica,julgados_2025")
     val decimal = for {
       sign <- Gen.oneOf("", "-", "+")
       digits <- Gen.choose(1, 15).flatMap(n => Gen.listOfN(n, Gen.numChar).map(_.mkString))
@@ -135,8 +123,8 @@ class CnjParsePropertySpec extends AnyFunSuite {
     }
     (0 until 50000).foreach { i =>
       val cell = decimal(Gen.Parameters.default, Seed(i.toLong)).get
-      val got = expr.parse(file, UTF8String.fromString(s"AA,JE,$cell"))
-        .getStruct(0, nKeys + CnjSchema.numericCols.length)
+      val line = s"AA,JE,$cell".getBytes(UTF_8)
+      val got = p.parse(line, 0, line.length)
       val want = java.lang.Double.parseDouble(cell)
       val at = nKeys + CnjSchema.numericCols.indexOf("julgados_2025")
       assert(java.lang.Double.doubleToRawLongBits(got.getDouble(at)) ==

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** SURVEY §2.9 north star: the CNJ ingest as a Structured Streaming file
-  * source. The stream shares the batch parse stage, so a per-court
+  * source. The stream reads with the batch reader, so a per-court
   * aggregation over the stream (complete mode) must equal the same
   * aggregation over the batch read of the same directory.
   */
@@ -32,6 +32,29 @@ class CnjStreamSpec extends SparkTestBase {
     val expected = agg(Reader.readDir(spark, dir)).collect().map(key).toSet
     assert(got === expected)
     assert(got.size == 11) // same 11 courts as the batch reader spec
+  }
+
+  test("a court file with a new header that lands after start() reaches the aggregate") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("cnj_stream_late")
+    Files.list(Paths.get(resourcePath("cnj/dados"))).forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
+    val q = Reader.readDirStream(spark, dir.toString)
+      .groupBy(col("sigla_tribunal"))
+      .agg(count(lit(1)).as("n"), sum(col("julgm2_a")).as("s_j2a"))
+      .writeStream.format("memory").queryName("cnj_stream_late")
+      .outputMode("complete").start()
+    try {
+      q.processAllAvailable()
+      // a column order no fixture file has; written aside, then moved in
+      val staged = dir.resolve("teste_NW.tmp")
+      Files.write(staged, Seq("julgm2_a,ramo_justica,casos_novos_2025,sigla_tribunal",
+        "4,Justiça Estadual,1,NW", "2.5,Justiça Estadual,,NW").mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.move(staged, dir.resolve("teste_NW.csv"), StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+    } finally q.stop()
+    val nw = spark.table("cnj_stream_late").filter(col("sigla_tribunal") === "NW").collect()
+    assert(nw.map(r => (r.getLong(1), r.getDouble(2))).toSeq == Seq((2L, 6.5)))
   }
 
   test("a stream killed mid-corpus recovers from its checkpoint and " +

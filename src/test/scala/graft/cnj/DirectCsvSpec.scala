@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.CnjCsvFormat
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -14,7 +15,7 @@ import graft.SparkTestBase
 /** Differential: [[MetasJob.writeCsv]] (the direct encoder) against
   * Spark's own `csv` writer with the same options, part file for part
   * file and byte for byte, over generated canonical rows
-  * ([[Reader.canonicalSchema]]) and printed ResumoMetas rows (all
+  * ([[CnjCsvFormat.schema]]) and printed ResumoMetas rows (all
   * strings). The generators aim at the cells that decide between the
   * direct encoding and Spark's generator: separators, quotes, escapes,
   * blanks at either end, empty and null cells, non-ASCII, CR and LF,
@@ -89,7 +90,7 @@ class DirectCsvSpec extends SparkTestBase {
       // every 50th row all null
       if (i % 50 == 7) Seq.fill(2 + nums.length)(null) else keys ++ nums
     }
-    assertSameFiles(frame(Reader.canonicalSchema, rows), "canonical")
+    assertSameFiles(frame(CnjCsvFormat.schema, rows), "canonical")
   }
 
   test("printed ResumoMetas rows: the direct encoder writes Spark's csv bytes") {
@@ -104,6 +105,6 @@ class DirectCsvSpec extends SparkTestBase {
   }
 
   test("an empty frame writes Spark's header-only part") {
-    assertSameFiles(frame(Reader.canonicalSchema, Seq.empty), "empty")
+    assertSameFiles(frame(CnjCsvFormat.schema, Seq.empty), "empty")
   }
 }

@@ -3,13 +3,12 @@ package graft.cnj
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.types.StringType
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.CnjCsvFormat
 
 import graft.SparkTestBase
 
-/** Unit coverage for the single-scan CSV parser (Reader, CnjParseLine):
+/** Unit coverage for the single-scan CSV parser (Reader, CnjFileParser):
   * unquoted and quoted lines, the pandas-compatible coercions,
   * malformed-row skipping, header-line dropping, and \r\n tolerance.
   * These pin the hand-rolled parse against the semantics the per-file
@@ -18,17 +17,15 @@ import graft.SparkTestBase
   */
 class ReaderSpec extends SparkTestBase {
 
-  /** The cells [[CnjParseLine.parse]] makes of one line of a file with
+  /** The cells [[CnjFileParser.parse]] makes of one line of a file with
     * `header`, keys as strings and numbers as doubles; None = skipped. */
   private def parseLine(header: String, line: String): Option[Seq[Any]] = {
     val cols = header.split(",", -1).toSeq
-    val canonical = CnjSchema.keyCols ++ CnjSchema.numericCols
-    val spec = Reader.FileSpec(header, cols.length, canonical.map(cols.indexOf).toArray)
-    val parse = CnjParseLine(Literal(null, StringType), Literal(null, StringType), Map("/f.csv" -> spec))
-    val got = parse.parse(UTF8String.fromString("file:/f.csv"), UTF8String.fromString(line))
-    if (got.numElements == 0) None
+    val canonical = CnjSchema.allCols
+    val bytes = line.getBytes(StandardCharsets.UTF_8)
+    val row = CnjFileParser(header, CnjCsvFormat.schema).get.parse(bytes, 0, bytes.length)
+    if (row == null) None
     else {
-      val row = got.getStruct(0, canonical.length)
       Some(cols.map(canonical.indexOf).map(i =>
         if (i < 0 || row.isNullAt(i)) null
         else if (i < CnjSchema.keyCols.length) row.getUTF8String(i).toString
@@ -88,7 +85,7 @@ class ReaderSpec extends SparkTestBase {
       "short,row",                            // wrong width -> skipped
       ",Justiça Estadual,4,4",                // empty key -> null (pandas NaN)
       "AA,Justiça Estadual,2.5,1\r"))         // trailing \r tolerated
-    val df = Reader.readFile(spark, dir.resolve("teste_AA.csv").toString).get
+    val df = Reader.readDir(spark, dir.toString)
     val rows = df.select("sigla_tribunal", "julgados_2025", "casos_novos_2025").collect()
     assert(rows.length == 5)
     val bySig = rows.groupBy(r => Option(r.getString(0)))
@@ -105,16 +102,15 @@ class ReaderSpec extends SparkTestBase {
       "BB,Justiça Estadual,1",
       "sigla_tribunal,ramo_justica,julgados_2025", // mid-file header dup
       "BB,Justiça Estadual,2"))
-    val df = Reader.readFile(spark, dir.resolve("teste_BB.csv").toString).get
+    val df = Reader.readDir(spark, dir.toString)
     assert(df.count() == 2)
   }
 
   test("files with spaces and non-ASCII in the path are not silently dropped") {
-    // input_file_name() publishes the URL-ENCODED path ("%20", "%C3%A3");
-    // a raw-path map lookup would miss and flatMap every row to None —
-    // silent data loss. decodeFileUri must round-trip the encoding.
-    // (Non-ASCII covered by the direct unit test below — this JVM's
-    // filesystem locale cannot create such paths.)
+    // the driver lists plain paths and the scan hands each reader a
+    // URL-encoded one ("%20", "%C3%A3"); the file must be found and read
+    // either way. (Non-ASCII is covered by the 40-file test where this
+    // JVM's file-name encoding can spell it.)
     val dir = Files.createTempDirectory("readerspec enc")
     writeCsv(dir, "teste_TRE SP.csv", Seq(
       "sigla_tribunal,ramo_justica,julgados_2025",
@@ -126,15 +122,6 @@ class ReaderSpec extends SparkTestBase {
     assert(rows(0).getDouble(1) == 7.0)
   }
 
-  test("decodeFileUri round-trips encoded specials and tolerates raw paths") {
-    assert(Reader.decodeFileUri("file:/a/teste%20TRE%20S%C3%A3o.csv") ==
-      "/a/teste TRE São.csv")
-    assert(Reader.decodeFileUri("file:///a/b%25c.csv") == "/a/b%c.csv")
-    // unencoded specials (not URI-parseable): best-effort scheme strip
-    assert(Reader.decodeFileUri("file:/a/plain path.csv") == "/a/plain path.csv")
-    assert(Reader.decodeFileUri("/no/scheme.csv") == "/no/scheme.csv")
-  }
-
   test("duplicated header column names resolve to the FIRST occurrence") {
     // pandas mangles repeats (col, col.1), so the reference's name lookup
     // hits the first; a last-wins index map would silently read token 3
@@ -143,7 +130,7 @@ class ReaderSpec extends SparkTestBase {
     writeCsv(dir, "teste_EE.csv", Seq(
       "sigla_tribunal,ramo_justica,julgados_2025,julgados_2025",
       "EE,Justiça Estadual,5,99"))
-    val df = Reader.readFile(spark, dir.resolve("teste_EE.csv").toString).get
+    val df = Reader.readDir(spark, dir.toString)
     val r = df.select("julgados_2025").collect()(0)
     assert(r.getDouble(0) == 5.0)
   }
@@ -158,9 +145,54 @@ class ReaderSpec extends SparkTestBase {
     val r = df.collect()(0)
     assert(r.getAs[Double]("julgm2_a") == 5.0)
     assert(r.isNullAt(df.columns.indexOf("julgados_2025")))
+    // a pruned read parses only the two columns it asks for, in its order
+    assert(df.select("julgados_2025", "sigla_tribunal").collect().toSeq ==
+      Seq(Row(null, "CC")))
   }
 
-  test("readDir over more than 32 files lists once on the driver: no Spark job, same rows as readFile") {
+  private def sortedRows(d: DataFrame): Seq[String] =
+    d.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("a court file read in many splits gives the rows of a one-split read") {
+    // quoted, CRLF, ragged, junk and header-echo lines; a byte order mark
+    // before the header, which every split's header read must drop
+    val dir = Files.createTempDirectory("readerspec-splits")
+    val header = "ramo_justica,sigla_tribunal,julgados_2025,casos_novos_2025"
+    writeCsv(dir, "teste_SP.csv", ("\uFEFF" + header) +: (1 to 3000).map { i =>
+      i % 7 match {
+        case 0 => s"\"T$i,x\",Justiça Estadual,$i.5,\"$i\""
+        case 1 => s"T$i,Justiça Federal,$i,${i * 3}\r"
+        case 2 => s"T$i,Justiça Estadual,$i" // wrong width
+        case 3 => header
+        case 4 => s"T$i,,junk,1e3"
+        case _ => s"T$i,Justiça do Trabalho,${i % 100}.25,"
+      }
+    })
+    val whole = Reader.readDir(spark, dir.toString)
+    assert(whole.rdd.getNumPartitions == 1)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    val (parts, rows, pruned) =
+      try {
+        val split = Reader.readDir(spark, dir.toString)
+        (split.rdd.getNumPartitions, sortedRows(split),
+          sortedRows(split.select("casos_novos_2025", "sigla_tribunal")))
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert(parts > 20, s"only $parts splits")
+    assert(rows == sortedRows(whole))
+    assert(pruned == sortedRows(whole.select("casos_novos_2025", "sigla_tribunal")))
+    assert(rows.length == (1 to 3000).count(i => i % 7 != 2 && i % 7 != 3))
+  }
+
+  test("readDir plans one CnjCsv file scan: no Generate, no input_file_name") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    val plan = Reader.readDir(spark, resourcePath("cnj/dados")).queryExecution.executedPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s.relation.fileFormat }
+    assert(scans.size == 1 && scans.head.isInstanceOf[CnjCsvFormat], plan.toString)
+    assert(plan.collect { case g: GenerateExec => g }.isEmpty, plan.toString)
+    assert(!plan.toString.contains("input_file_name"), plan.toString)
+  }
+
+  test("readDir over 40 files: no Spark job, same rows as one-file directories") {
     // above spark.sql.sources.parallelPartitionDiscovery.threshold (32)
     // paths a path-list read would stat the files in a listing job
     val dir = Files.createTempDirectory("readerspec-listing")
@@ -171,13 +203,18 @@ class ReaderSpec extends SparkTestBase {
     }
     // hidden-named files carry valid headers: the driver listing keeps
     // them, and Spark's file index then skips their rows, as it does
-    // for a readFile of one of them
+    // for a directory holding only one of them
     writeCsv(dir, "_under.csv", Seq(header, "UU,Justiça do Trabalho,3,4"))
     writeCsv(dir, ".dot.csv", Seq(header, "DT,Justiça Federal,5,6"))
     writeCsv(dir, "teste_nokeys.csv", Seq("julgados_2025,casos_novos_2025", "1,2"))
+    // a UTF-8 byte order mark does not hide the identity column behind it
+    writeCsv(dir, "teste_BOM.csv", Seq("\uFEFF" + header, "BO,Justiça Estadual,7,8"))
+    // a header byte that is not UTF-8 puts the file on the String path
+    Files.write(dir.resolve("teste_BD.csv"), (header + ",x").getBytes(StandardCharsets.UTF_8) ++
+      Array(0xff.toByte) ++ "\nBD,Justiça Estadual,7,8,9".getBytes(StandardCharsets.UTF_8))
     writeCsv(dir, "teste_headeronly.csv", Seq("sigla_tribunal,ramo_justica,julgm2_a"))
     // non-ASCII only where this JVM's file-name encoding can spell it;
-    // a literal '%' exercises the same URL-decoding of input_file_name()
+    // else a literal '%', which the scan's URL-encoded path must keep
     val special =
       if (java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
           .newEncoder().canEncode("ã")) "teste TRE São.csv"
@@ -191,17 +228,22 @@ class ReaderSpec extends SparkTestBase {
 
     val (df, jobs, _) = countJobsAndTasks(Reader.readDir(spark, dir.toString))
     assert(jobs == 0, s"readDir scheduled $jobs Spark job(s)")
-    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
-      d.collect().map(_.toSeq.mkString("|")).toSeq.sorted
-    val csvs = new java.io.File(dir.toString).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".csv")).map(_.getPath).sorted
-    val perFile = csvs.flatMap(Reader.readFile(spark, _)).toSeq
-    assert(perFile.size == 44) // every .csv file but the one without identity columns
-    val got = rows(df)
-    assert(got == rows(perFile.reduce(_ union _)))
+    // each .csv file alone in a directory of its own
+    val alone = new java.io.File(dir.toString).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".csv")).sortBy(_.getName).map { f =>
+        val own = Files.createTempDirectory("readerspec-alone")
+        Files.copy(f.toPath, own.resolve(f.getName))
+        own.toString
+      }
+    val perFile = alone.toSeq.flatMap(d =>
+      try Some(Reader.readDir(spark, d))
+      catch { case _: IllegalArgumentException => None })
+    assert(perFile.size == 46) // every .csv file but the one without identity columns
+    val got = sortedRows(df)
+    assert(got == sortedRows(perFile.reduce(_ union _)))
     val courts = df.select("sigla_tribunal").distinct().collect().map(_.getString(0)).toSet
     assert((1 to 40).map(i => s"T$i").toSet.subsetOf(courts))
-    assert(courts.contains("SP"))
+    assert(Set("SP", "BO", "BD").subsetOf(courts))
     assert(!courts.contains("XX") && !courts.contains("SB"))
     // neither a court file nor a missing directory lists as a directory
     intercept[IllegalArgumentException](Reader.readDir(spark, dir.resolve("teste_T01.csv").toString))

@@ -264,6 +264,15 @@ class ScanPruningSpec extends SparkTestBase {
     assert(ScanPruning.manifestBloomCols(spark, mPath) === Seq("l_orderkey"))
   }
 
+  test("decodeFileUri round-trips encoded specials and tolerates raw paths") {
+    assert(ScanPruning.decodeFileUri("file:/a/teste%20TRE%20S%C3%A3o.csv") ==
+      "/a/teste TRE São.csv")
+    assert(ScanPruning.decodeFileUri("file:///a/b%25c.csv") == "/a/b%c.csv")
+    // unencoded specials (not URI-parseable): best-effort scheme strip
+    assert(ScanPruning.decodeFileUri("file:/a/plain path.csv") == "/a/plain path.csv")
+    assert(ScanPruning.decodeFileUri("/no/scheme.csv") == "/no/scheme.csv")
+  }
+
   test("empty intersection returns an empty frame with the data schema") {
     written
     val manifest = ScanPruning.buildManifest(spark, zDir, Seq("l_orderkey"))
